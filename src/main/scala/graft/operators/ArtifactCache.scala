@@ -14,7 +14,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *  - concurrent JVMs race benignly: each builder writes a pid-private
   *    staging dir, then ONE atomic rename publishes it; losers fall
   *    back to the published copy (or their own staging dir while the
-  *    winner's move is mid-flight),
+  *    winner's move is mid-flight); inside one JVM an artifact is built
+  *    once, and concurrent callers wait for that build,
   *  - across driver phases (Verify, then Bench, then serving) the
   *    mining/layout/index builds are paid ONCE per fixture snapshot —
   *    exactly the 100 TB operating model, where the layout job is a
@@ -98,23 +99,39 @@ object ArtifactCache {
   def path(cacheName: String, sources: Seq[String])
       (write: String => Unit): String = {
     val root = Paths.get(s"/tmp/graft_cache/$cacheName/${fingerprint(sources)}")
-    if (!Files.exists(root.resolve("_SUCCESS"))) {
-      val staging = Paths.get(
-        root.toString + s".p${ProcessHandle.current().pid()}")
-      write(staging.toString)
-      try {
-        Files.createDirectories(root.getParent)
-        Files.move(staging, root, StandardCopyOption.ATOMIC_MOVE)
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException
-             | _: java.nio.file.AccessDeniedException
-             | _: java.nio.file.DirectoryNotEmptyException =>
-          // another JVM published first; prefer its copy if complete,
-          // else keep reading our own staging build
-          if (!Files.exists(root.resolve("_SUCCESS")))
-            return staging.toString
-      }
+    if (Files.exists(root.resolve("_SUCCESS"))) root.toString
+    // the staging dir is per JVM, so the threads of one JVM must not
+    // build into it together: one builds, the others wait on the root's
+    // lock and then find the published copy
+    else builds.computeIfAbsent(root, _ => new Object).synchronized {
+      if (Files.exists(root.resolve("_SUCCESS"))) root.toString
+      else publish(root, write)
+    }
+  }
+
+  /** Build into this JVM's staging dir, then publish it with one atomic
+    * rename; returns the directory to read.
+    */
+  private def publish(root: Path, write: String => Unit): String = {
+    val staging = Paths.get(
+      root.toString + s".p${ProcessHandle.current().pid()}")
+    write(staging.toString)
+    try {
+      Files.createDirectories(root.getParent)
+      Files.move(staging, root, StandardCopyOption.ATOMIC_MOVE)
+    } catch {
+      case _: java.nio.file.FileAlreadyExistsException
+           | _: java.nio.file.AccessDeniedException
+           | _: java.nio.file.DirectoryNotEmptyException =>
+        // another JVM published first; prefer its copy if complete,
+        // else keep reading our own staging build
+        if (!Files.exists(root.resolve("_SUCCESS")))
+          return staging.toString
     }
     root.toString
   }
+
+  /** One lock per artifact root, taken while it is built. */
+  private val builds =
+    new java.util.concurrent.ConcurrentHashMap[Path, Object]()
 }

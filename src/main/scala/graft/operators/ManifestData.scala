@@ -144,6 +144,10 @@ trait ManifestData { self: ManifestLog with ManifestMutations
     // (r13 ADVICE: a silent mismatch would drop that file's rows from
     // the commit instead of failing)
     val unmatched = byFile.keySet.diff(staged.toSet)
+    // nothing of the batch is committed yet: delete what stage() wrote,
+    // so a refused commit leaves no orphaned files in data/
+    if (unmatched.nonEmpty)
+      staged.foreach(rel => Files.deleteIfExists(data.resolve(rel)))
     require(unmatched.isEmpty,
       s"stats rows reference non-staged files (name decode mismatch): " +
         unmatched.mkString(", "))

@@ -1,6 +1,8 @@
 package graft.serving
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
+import java.util.concurrent.{LinkedBlockingQueue, ThreadPoolExecutor, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -22,8 +24,38 @@ import graft.{Json, SparkEntry, Tables}
   * JDK built-in `com.sun.net.httpserver` (public JRE API since Java 6):
   * the zero-egress build cannot resolve a web framework and does not
   * need one to prove the serving shape. Port 0 = ephemeral (tests).
+  *
+  * Concurrency: the server's dispatcher thread only accepts connections;
+  * handlers run on a pool of `defaultParallelism` threads of the session
+  * it is handed, so at most that many requests plan, run and serialize
+  * their Spark jobs at once on the one shared session. Further requests
+  * queue inside the server until a handler thread is free.
   */
 object Api {
+
+  /** How long an idle handler thread lives. Every handler thread times
+    * out, so a stopped server leaves no thread behind once this passes.
+    */
+  val HandlerIdleMs = 2000L
+
+  /** Name prefix of the handler threads. */
+  val HandlerThreadPrefix = "graft-api-handler-"
+
+  /** Fixed pool of `n` daemon handler threads (daemon, so a JVM that
+    * never stops its server still exits) over an unbounded FIFO queue.
+    */
+  private def handlerPool(n: Int): ThreadPoolExecutor = {
+    val ids = new AtomicInteger()
+    val pool = new ThreadPoolExecutor(n, n, HandlerIdleMs,
+      TimeUnit.MILLISECONDS, new LinkedBlockingQueue[Runnable](),
+      (r: Runnable) => {
+        val t = new Thread(r, HandlerThreadPrefix + ids.incrementAndGet())
+        t.setDaemon(true)
+        t
+      })
+    pool.allowCoreThreadTimeOut(true)
+    pool
+  }
 
   /** Parameterized per-vehicle trace — the library form of the fixed
     * `events_trace` harness query: one vehicle, half-open time window.
@@ -72,6 +104,7 @@ object Api {
   def start(spark: SparkSession, dir: String, port: Int = 0): HttpServer = {
     val server = HttpServer.create(
       new java.net.InetSocketAddress("127.0.0.1", port), 0)
+    server.setExecutor(handlerPool(spark.sparkContext.defaultParallelism))
 
     def respond(x: HttpExchange, code: Int, body: String): Unit = {
       val bytes = body.getBytes(java.nio.charset.StandardCharsets.UTF_8)

@@ -1,6 +1,8 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.{Callable, CountDownLatch, Executors, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.sql.functions._
 
 /** ArtifactCache: fingerprint keying, build-once semantics, and
@@ -61,5 +63,33 @@ class ArtifactCacheSpec extends SparkSpec {
       if (Files.isDirectory(p) && !p.getFileName.toString.contains(".p"))
         assert(Files.exists(p.resolve("_SUCCESS")), s"$p lacks _SUCCESS")
     } finally s2.close()
+  }
+
+  test("concurrent first calls in one JVM build once and share the published root") {
+    val src = Files.createTempFile("graft_acspec_race", ".txt").toString
+    val calls = new AtomicInteger()
+    val go = new CountDownLatch(1)
+    val pool = Executors.newFixedThreadPool(4)
+    try {
+      val roots = Seq.fill(4)(pool.submit(new Callable[String] {
+        def call(): String = {
+          go.await()
+          operators.ArtifactCache.path("acspec_race", Seq(src)) { staging =>
+            calls.incrementAndGet()
+            val d = Files.createDirectories(Paths.get(staging))
+            Thread.sleep(500) // slow build: the other callers arrive meanwhile
+            Files.write(d.resolve("part-0"), "x".getBytes("UTF-8"))
+            Files.createFile(d.resolve("_SUCCESS"))
+          }
+        }
+      }))
+      go.countDown()
+      val got = roots.map(_.get(60, TimeUnit.SECONDS)).distinct
+      assert(calls.get == 1, s"write callback ran ${calls.get} times")
+      assert(got.size == 1, s"callers got different roots: $got")
+      val root = Paths.get(got.head)
+      assert(Files.exists(root.resolve("_SUCCESS")) &&
+        Files.exists(root.resolve("part-0")), s"$root is not the complete build")
+    } finally pool.shutdownNow()
   }
 }

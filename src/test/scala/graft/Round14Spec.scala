@@ -35,4 +35,21 @@ class Round14Spec extends SparkSpec {
       entries.map(e => root.resolve("data").resolve(e.path).toString): _*)
     assert(back.count() == 100L, "committed rows != staged rows")
   }
+
+  test("a refused stageWithTypedStats commit leaves no staged files in data/") {
+    val root = Files.createTempDirectory("graft_r14_orphan")
+    // a '/' in the batch name stages into data/sub/, while the stats job
+    // names each file by its basename: no stats row matches a staged name
+    Files.createDirectories(root.resolve("data").resolve("sub"))
+    val orders = Tables.table(spark, sfDir, "orders").limit(100)
+    val e = intercept[IllegalArgumentException] {
+      ManifestTable.stageWithStats(
+        orders.repartition(3), root, "sub/b", "o_orderkey")
+    }
+    assert(e.getMessage.contains("name decode mismatch"), e.getMessage)
+    val st = Files.walk(root.resolve("data"))
+    val left = try st.filter(Files.isRegularFile(_)).toArray.toSeq
+      finally st.close()
+    assert(left.isEmpty, s"refused batch left files behind: $left")
+  }
 }

@@ -2,6 +2,8 @@ package graft
 
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
+import java.util.concurrent.{Callable, Executors, ThreadPoolExecutor, TimeUnit}
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
 
 /** The serving tier (graft.serving.Api) over the fixture corpus: every
@@ -25,9 +27,22 @@ class ServingSpec extends SparkSpec {
     (r.statusCode(), r.body())
   }
 
+  private def handlerThreads: Set[Thread] =
+    Thread.getAllStackTraces.keySet.asScala.toSet
+      .filter(_.getName.startsWith(serving.Api.HandlerThreadPrefix))
+
+  /** The handler pool must not outlive the server by more than its idle
+    * timeout: every suite shares this test JVM.
+    */
   override def afterAll(): Unit = {
     server.stop(0)
-    super.afterAll()
+    try {
+      val deadline = System.currentTimeMillis() + serving.Api.HandlerIdleMs + 5000
+      while (handlerThreads.nonEmpty && System.currentTimeMillis() < deadline)
+        Thread.sleep(100)
+      assert(handlerThreads.isEmpty,
+        s"handler threads alive after stop: ${handlerThreads.map(_.getName)}")
+    } finally super.afterAll()
   }
 
   test("/vehicles enumerates every distinct vehicle exactly once") {
@@ -201,5 +216,32 @@ class ServingSpec extends SparkSpec {
     assert(code == 404 && body.contains("\"error\""))
     assert(get("/vehicles/abc/trace")._1 == 404,
       "non-numeric vehicle id is not a route")
+  }
+
+  test("concurrent requests get the serial replies from a bounded pool of daemon handlers") {
+    val pool = server.getExecutor
+    assert(pool != null, "handlers must run off the dispatcher thread")
+    assert(pool.asInstanceOf[ThreadPoolExecutor].getMaximumPoolSize ==
+      spark.sparkContext.defaultParallelism)
+    val paths = Seq("/vehicles", "/vehicles/1/trace", "/vehicles/2/summary",
+      "/vehicles/3/trips", "/vehicles/4/trace", "/vehicles/5/summary",
+      "/vehicles/6/trips", "/table/orders?from_key=1&to_key=3000",
+      "/table/orders?from_key=2000&to_key=9000")
+    val serial = paths.map(p => p -> get(p)).toMap
+    serial.foreach { case (p, (c, b)) => assert(c == 200, s"$p: $b") }
+    val clients = Executors.newFixedThreadPool(4)
+    try {
+      val replies = Seq.fill(4)(paths).flatten.map { p =>
+        p -> clients.submit(new Callable[(Int, String)] {
+          def call(): (Int, String) = get(p)
+        })
+      }
+      replies.foreach { case (p, f) =>
+        assert(f.get(120, TimeUnit.SECONDS) == serial(p),
+          s"$p: concurrent reply differs from the serial one")
+      }
+    } finally clients.shutdown()
+    assert(handlerThreads.nonEmpty && handlerThreads.forall(_.isDaemon),
+      s"handler threads: ${handlerThreads.map(t => t.getName -> t.isDaemon)}")
   }
 }
