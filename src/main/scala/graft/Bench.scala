@@ -24,17 +24,8 @@ object Bench {
       // un-verified bucketing is worse than useless
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      // r14 adjudication of the r13 64k coalescing floor (VERDICT item
-      // 1): three 32-core composite-min(3) A/B pairs + one 8-core pair
-      // (plans/r14/bench*_full_*.json) — the 1m Spark default won the
-      // 32-core suite total in 2 of 3 pairs and was a per-query geomean
-      // wash; the global 64k floor helped exactly six queries
-      // consistently while taxing the shuffle-heavy top. Default is
-      // therefore back to 1m; the six measured winners opt into 64k via
-      // a child session (QueryGroup.cpuDenseSession) so the fix is
-      // scoped to where it is measured. Env override kept for A/B.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_PARTITION_SIZE", "1m"))
+      // AQE coalescing floor: Spark's 1MB default (the r14 adjudication
+      // behind it is at QueryGroup.cpuDenseSession)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // absorb session/codegen bootstrap outside the per-query timers: a

@@ -29,13 +29,19 @@ object QueryGroup {
     * only those six build on this session. At production scale the
     * advisory partition size governs long before either floor binds,
     * so this is small-regime parallelism recovery, not a size tune.
-    * `SPARK_GRAFT_MIN_PARTITION_SIZE` still overrides globally (same
-    * env the mains honor) so the whole engine stays A/B-able.
+    *
+    * Why the global floor is Spark's 1MB default (the mains set no
+    * floor): the r13 global 64k floor was adjudicated in r14 with
+    * three 32-core composite-min(3) A/B pairs + one 8-core pair — 1m
+    * won the 32-core suite total in 2 of 3 pairs and was a per-query
+    * geomean wash; 64k helped exactly the six queries above while
+    * taxing the shuffle-heavy top. To A/B either floor again, change
+    * the constant here or set the conf on the session a main builds.
     */
   def cpuDenseSession(spark: SparkSession): SparkSession = {
     val s = spark.newSession()
     s.conf.set("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-      sys.env.getOrElse("SPARK_GRAFT_MIN_PARTITION_SIZE", "64k"))
+      "64k")
     s
   }
 }

@@ -22,9 +22,10 @@ import org.apache.spark.sql.types.StructType
   *    construction) — and commits a zero-op delta whose header
   *    accumulates the sidecar name under `bloom=` (inherited by later
   *    commits exactly like the schema/colmap state).
-  *  - [[ManifestBloom.readPrunedBloomEq]] admits a file for `c = v`
-  *    only when the file's bitset holds ALL k positions of v — or when
-  *    the file has NO bitset, because blooms are SAFE BY CONSTRUCTION
+  *  - read admission ([[graft.sources.FileAdmission]]) admits a file
+  *    for `c = v` only when the file's bitset holds ALL k positions of
+  *    v (for `c IN (…)`, of some candidate) — or when the file has NO
+  *    bitset, because blooms are SAFE BY CONSTRUCTION
   *    here: bitsets key on immutable FILE NAMES, a rewritten file gets
   *    a new name with no bitset and is admitted unconditionally, and
   *    entries for dead files are inert. False positives cost a file
@@ -191,31 +192,6 @@ trait ManifestBloom { self: ManifestLog with ManifestData
 
   private def bloomMayContain(bits: Array[Byte], v: Any): Boolean =
     bloomPositions(v).forall(p => (bits(p >> 3) & (1 << (p & 7))) != 0)
-
-  /** Point read through the bloom index: `col0 = v` admits a file only
-    * when its bitset holds every position of v (no bitset = admitted —
-    * only-skip-provably-absent). Composes with the ordinary stats
-    * prune first; the exact predicate re-applies on the admitted rows,
-    * so results equal a full scan + filter.
-    */
-  def readPrunedBloomEq(spark: SparkSession, root: Path, version: Int,
-      schema: StructType, col0: String, v: Long): DataFrame = {
-    // same DV guard as every pruned reader (review fix): a raw file
-    // scan on a vector-carrying snapshot would resurrect deleted rows
-    requirePrunableSnapshot(root, version, "readPrunedBloomEq")
-    val blooms = loadBlooms(root, version)
-    val (statHit, _, _) = prunedEntries(root, version,
-      Seq((col0, v, v)) ++ hiddenBands(root, version, Seq((col0, v, v))),
-      Nil)
-    val hit = statHit.filter(e => blooms.get((e.path, col0))
-      .forall(bloomMayContain(_, v)))
-    if (hit.isEmpty)
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    spark.read.schema(schema).parquet(
-        hit.map(e => root.resolve("data").resolve(e.path).toString): _*)
-      .filter(col(col0) === v)
-  }
 
   /** The bloom-admitted file names for `col0 = v` — the spec hook
     * proving the skip physically happened.

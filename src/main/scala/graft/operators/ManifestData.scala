@@ -3,6 +3,7 @@ package graft.operators
 import java.nio.file.{Files, Path, StandardCopyOption}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.sources.{Filter, GreaterThanOrEqual, LessThanOrEqual}
 import org.apache.spark.sql.types.StructType
 
 /** DATA-PATH half of [[ManifestTable]] (round-10 split; zero behavior
@@ -462,27 +463,6 @@ trait ManifestData { self: ManifestLog with ManifestMutations
     }
   }
 
-  /** [[readPrunedMulti]] with hidden-partition derivation: predicates
-    * prune through BOTH their own recorded stats (if any) and the
-    * transform layout. The exact predicate re-applies on the admitted
-    * rows, so results equal a full scan + filter.
-    */
-  def readPrunedHidden(spark: SparkSession, root: Path, version: Int,
-      schema: StructType, preds: Seq[(String, Long, Long)]): DataFrame = {
-    require(preds.nonEmpty, "readPrunedHidden needs at least one predicate")
-    requirePrunableSnapshot(root, version, "readPrunedHidden")
-    val (hit, _, _) = prunedEntries(root, version,
-      preds ++ hiddenBands(root, version, preds), Nil)
-    if (hit.isEmpty)
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    spark.read.schema(schema).parquet(
-        hit.map(e => root.resolve("data").resolve(e.path).toString): _*)
-      .filter(preds.map { case (c, lo, hi) => col(c) >= lo && col(c) <= hi }
-        .reduce(_ && _))
-  }
-
-
   /** Scan one snapshot: exactly its listed files, explicit schema. */
   def read(spark: SparkSession, root: Path, version: Int,
       schema: StructType): DataFrame = {
@@ -491,18 +471,54 @@ trait ManifestData { self: ManifestLog with ManifestMutations
     spark.read.schema(schema).parquet(files: _*)
   }
 
-  /** Stats-pruned read: intersect `[lo, hi]` with each live file's
-    * recorded key bounds and scan ONLY the admitted files — planning
+  /** Stats-pruned read: intersect the filters' bands with each live
+    * file's recorded stats and scan ONLY the admitted files — planning
     * happens against the manifest's per-file stats, with no listing
-    * and no footer I/O for skipped files. The exact predicate is
-    * re-applied on the admitted rows (stats admit at file granularity),
-    * so the result equals a full scan + filter; the file skips are the
-    * point ("a point read on 100 TB touches the handful of files whose
-    * band contains the key").
+    * and no footer I/O for skipped files ("a point read on 100 TB
+    * touches the handful of files whose band contains the key").
+    * Admission is the one rule every manifest reader shares
+    * ([[graft.sources.FileAdmission]]: long/string/double/decimal/
+    * binary bands, IN sets, hidden-partition bands, bloom probes), so
+    * `inputFiles` is exactly the admitted set. Every filter re-applies
+    * row-exactly (stats admit at file granularity; statless files are
+    * admitted), so the result equals a full scan + filter; a filter
+    * shape that cannot re-apply is refused rather than dropped. Reads
+    * under the caller's schema: no column-mapping aliasing.
     */
   def readPruned(spark: SparkSession, root: Path, version: Int,
+      schema: StructType, filters: Seq[Filter]): DataFrame = {
+    // a pruned FILE scan never subtracts deletion vectors: on a
+    // DV-carrying version it would silently resurrect deleted rows
+    require(dvsFor(root, version).isEmpty &&
+        scopedDvsFor(root, version).isEmpty &&
+        rowDvsFor(root, version).isEmpty,
+      s"readPruned on v$version: outstanding deletion vectors — a " +
+      "pruned file scan would resurrect deleted rows; use readMOR/" +
+      "readMORScoped/readMORPositional or compact first")
+    val exact = filters.map(f =>
+      graft.sources.ManifestV2.filterToColumn(f, identity).getOrElse(
+        throw new IllegalArgumentException(
+          s"readPruned cannot re-apply filter $f row-exactly")))
+    val df = scanFiles(spark, root, schema, graft.sources.FileAdmission
+      .admit(root, version, filters.toArray, identity).map(_.path))
+    exact.reduceOption(_ && _).fold(df)(df.filter)
+  }
+
+  /** [[readPruned]] on the key band `lo <= keyCol <= hi`. */
+  def readPruned(spark: SparkSession, root: Path, version: Int,
       schema: StructType, keyCol: String, lo: Long, hi: Long): DataFrame =
-    readPrunedMulti(spark, root, version, schema, Seq((keyCol, lo, hi)))
+    readPruned(spark, root, version, schema,
+      Seq(GreaterThanOrEqual(keyCol, lo), LessThanOrEqual(keyCol, hi)))
+
+  /** Scan exactly `files` (data-relative names) under `schema`; no
+    * files reads as an empty frame of that schema.
+    */
+  private[graft] def scanFiles(spark: SparkSession, root: Path,
+      schema: StructType, files: Seq[String]): DataFrame =
+    if (files.isEmpty) spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+    else spark.read.schema(schema).parquet(
+      files.map(f => root.resolve("data").resolve(f).toString): _*)
 
   /** Plan-time pruned resolution (wave 134 — the two-level payoff): the
     * admitted entry set of `version` under conjunctive long + string
@@ -567,132 +583,6 @@ trait ManifestData { self: ManifestLog with ManifestMutations
     }
   }
 
-  /** Multi-predicate stats prune: a file is scanned only when EVERY
-    * `(col, lo, hi)` band intersects its recorded bounds for that
-    * column — predicates on different columns compose conjunctively,
-    * exactly how real formats' per-column stats planning works. A file
-    * with no recorded stats for some predicate column cannot be proven
-    * disjoint and is admitted (the row-level filter still applies, so
-    * results stay exact either way).
-    */
-  /** Fail-loud guard shared by the pruned readers: they scan snapshot
-    * FILES and never subtract deletion vectors, so running one on a
-    * DV-carrying version would silently resurrect deleted rows — the
-    * same hazard the V1 source guards by checking vectors before
-    * pruning (wave-139 review fix). Use [[readMOR]] /
-    * [[readMORScoped]] (or compact first) on such snapshots.
-    */
-  private[operators] def requirePrunableSnapshot(root: Path, version: Int,
-      op: String): Unit =
-    require(dvsFor(root, version).isEmpty &&
-        scopedDvsFor(root, version).isEmpty &&
-        rowDvsFor(root, version).isEmpty,
-      s"$op on v$version: outstanding deletion vectors — a pruned " +
-      "file scan would resurrect deleted rows; use readMOR/" +
-      "readMORScoped/readMORPositional or compact first")
-
-  def readPrunedMulti(spark: SparkSession, root: Path, version: Int,
-      schema: StructType, preds: Seq[(String, Long, Long)]): DataFrame = {
-    require(preds.nonEmpty, "readPrunedMulti needs at least one predicate")
-    requirePrunableSnapshot(root, version, "readPrunedMulti")
-    val (hit, _, _) = prunedEntries(root, version, preds, Nil)
-    if (hit.isEmpty)
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    spark.read.schema(schema).parquet(
-        hit.map(e => root.resolve("data").resolve(e.path).toString): _*)
-      .filter(preds.map { case (c, lo, hi) => col(c) >= lo && col(c) <= hi }
-        .reduce(_ && _))
-  }
-
-  /** String-band stats prune (wave 132): admit only the files whose
-    * recorded STRING bounds for `keyCol` intersect [lo, hi] — the
-    * mechanism behind "a brand/tenant/category predicate on 100 TB
-    * touches the handful of files whose dictionary band contains it".
-    * Same exactness contract as [[readPrunedMulti]]: stats admit at
-    * file granularity, the row filter re-applies, statless files are
-    * admitted (never skipped).
-    */
-  def readPrunedStr(spark: SparkSession, root: Path, version: Int,
-      schema: StructType, keyCol: String, lo: String, hi: String)
-      : DataFrame = {
-    requirePrunableSnapshot(root, version, "readPrunedStr")
-    val (hit, _, _) = prunedEntries(root, version, Nil,
-      Seq((keyCol, Some(lo), Some(hi))))
-    if (hit.isEmpty)
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    spark.read.schema(schema).parquet(
-        hit.map(e => root.resolve("data").resolve(e.path).toString): _*)
-      .filter(col(keyCol) >= lo && col(keyCol) <= hi)
-  }
-
-  /** DOUBLE-band stats prune (round 11): admit only the files whose
-    * recorded double bounds for `keyCol` intersect [lo, hi] — closing
-    * the "predicates on o_totalprice / events.value admit every file"
-    * gap. Same exactness contract as [[readPrunedMulti]]: stats admit
-    * at file granularity, the row filter re-applies, statless files
-    * are admitted (never skipped).
-    */
-  def readPrunedDbl(spark: SparkSession, root: Path, version: Int,
-      schema: StructType, keyCol: String, lo: Double, hi: Double)
-      : DataFrame = {
-    requirePrunableSnapshot(root, version, "readPrunedDbl")
-    val (hit, _, _) = prunedEntries(root, version, Nil, Nil,
-      Seq((keyCol, lo, hi)))
-    if (hit.isEmpty)
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    spark.read.schema(schema).parquet(
-        hit.map(e => root.resolve("data").resolve(e.path).toString): _*)
-      .filter(col(keyCol) >= lo && col(keyCol) <= hi)
-  }
-
-  /** DECIMAL-band stats prune (round 11, wave 161): same exactness
-    * contract as [[readPrunedMulti]] — stats admit at file
-    * granularity, the row filter re-applies, statless files are
-    * admitted.
-    */
-  def readPrunedDec(spark: SparkSession, root: Path, version: Int,
-      schema: StructType, keyCol: String, lo: BigDecimal, hi: BigDecimal)
-      : DataFrame = {
-    requirePrunableSnapshot(root, version, "readPrunedDec")
-    val (hit, _, _) = prunedEntries(root, version, Nil, Nil, Nil,
-      Seq((keyCol, Some(lo), Some(hi))))
-    if (hit.isEmpty)
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    spark.read.schema(schema).parquet(
-        hit.map(e => root.resolve("data").resolve(e.path).toString): _*)
-      .filter(col(keyCol) >= lo && col(keyCol) <= hi)
-  }
-
-  /** BINARY-band stats prune (round 12 — the last boundless leaf
-    * type): admit only the files whose recorded truncated-prefix
-    * bounds for `keyCol` intersect the byte range — "a digest/blob
-    * range predicate on 100 TB touches the handful of files whose
-    * prefix band contains it". Same exactness contract as
-    * [[readPrunedMulti]]: stats admit at file granularity, the row
-    * filter re-applies, statless files are admitted.
-    */
-  def readPrunedBin(spark: SparkSession, root: Path, version: Int,
-      schema: StructType, keyCol: String, lo: Option[Array[Byte]],
-      hi: Option[Array[Byte]]): DataFrame = {
-    require(lo.isDefined || hi.isDefined,
-      "readPrunedBin needs at least one bound")
-    requirePrunableSnapshot(root, version, "readPrunedBin")
-    val (hit, _, _) = prunedEntries(root, version, Nil, Nil, Nil, Nil,
-      Seq((keyCol, lo.map(_.toSeq), hi.map(_.toSeq))))
-    if (hit.isEmpty)
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    val cond = (lo.map(b => col(keyCol) >= lit(b)) ++
-      hi.map(b => col(keyCol) <= lit(b))).reduce(_ && _)
-    spark.read.schema(schema).parquet(
-        hit.map(e => root.resolve("data").resolve(e.path).toString): _*)
-      .filter(cond)
-  }
-
   /** Incremental consumption: the rows added between two snapshots =
     * the files `to` references that `from` does not — the primitive
     * behind "stream a lakehouse table from version K" (a consumer
@@ -714,12 +604,7 @@ trait ManifestData { self: ManifestLog with ManifestMutations
     require(before.subsetOf(after.toSet),
       s"v$from→v$to is not append-only (a rewrite or compaction " +
       "intervened) — file-level incremental read is undefined there")
-    val added = after.filterNot(before)
-    if (added.isEmpty)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    else spark.read.schema(schema).parquet(
-      added.map(f => root.resolve("data").resolve(f).toString): _*)
+    scanFiles(spark, root, schema, after.filterNot(before))
   }
 
   /** Row-level CHANGE DATA FEED between two snapshots — the
@@ -758,10 +643,7 @@ trait ManifestData { self: ManifestLog with ManifestMutations
       if (from == 0) Set.empty[String] else filesFor(root, from).toSet
     val toFiles = filesFor(root, to).toSet
     def readSet(fs: Set[String]): DataFrame =
-      if (fs.isEmpty) spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-      else spark.read.schema(schema).parquet(fs.toSeq.sorted.map(f =>
-        root.resolve("data").resolve(f).toString): _*)
+      scanFiles(spark, root, schema, fs.toSeq.sorted)
     def dvKeys(v: Int): Option[DataFrame] = {
       val dvs = if (v == 0) Nil else dvsFor(root, v)
       if (dvs.isEmpty) None

@@ -726,7 +726,7 @@ trait ManifestMutations { self: ManifestLog with ManifestData
     * set ordered by the 2-D Morton interleave of `cols`, so every
     * rewritten file covers a small HYPER-RECTANGLE of the (c1, c2)
     * value space instead of a slab of one column. The point is what it
-    * does to [[readPrunedMulti]]: under a single-column range layout a
+    * does to [[readPruned]]: under a single-column range layout a
     * predicate on the OTHER column admits every file (each file spans
     * that column's full range); under the z-layout both columns' per-
     * file bands are narrow, so a 2-predicate prune admits roughly the

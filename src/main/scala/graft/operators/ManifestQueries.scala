@@ -4,6 +4,7 @@ import java.nio.file.{Files, Path, Paths}
 import graft.{QueryGroup, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.sources.{GreaterThanOrEqual, LessThanOrEqual}
 import org.apache.spark.sql.types.StructType
 
 
@@ -797,9 +798,12 @@ object ManifestOps extends QueryGroup {
       val root = cowRoot(spark, dir)
       val mx = orders.agg(max("o_orderkey")).head().getLong(0)
       val mxC = orders.agg(max("o_custkey")).head().getLong(0)
-      ManifestTable.readPrunedMulti(spark, root,
-          ManifestTable.latestVersion(root), orders.schema,
-          Seq(("o_orderkey", mx / 10, mx / 5), ("o_custkey", 0L, mxC / 2)))
+      ManifestTable.readPruned(spark, root,
+          ManifestTable.latestVersion(root), orders.schema, Seq(
+            GreaterThanOrEqual("o_orderkey", mx / 10),
+            LessThanOrEqual("o_orderkey", mx / 5),
+            GreaterThanOrEqual("o_custkey", 0L),
+            LessThanOrEqual("o_custkey", mxC / 2)))
         .orderBy("o_orderkey")
     },
 
@@ -873,9 +877,12 @@ object ManifestOps extends QueryGroup {
       val root = zorderRoot(spark, dir)
       val mx = orders.agg(max("o_orderkey")).head().getLong(0)
       val mxC = orders.agg(max("o_custkey")).head().getLong(0)
-      ManifestTable.readPrunedMulti(spark, root,
-          ManifestTable.latestVersion(root), orders.schema,
-          Seq(("o_orderkey", mx / 8, mx / 4), ("o_custkey", 0L, mxC / 4)))
+      ManifestTable.readPruned(spark, root,
+          ManifestTable.latestVersion(root), orders.schema, Seq(
+            GreaterThanOrEqual("o_orderkey", mx / 8),
+            LessThanOrEqual("o_orderkey", mx / 4),
+            GreaterThanOrEqual("o_custkey", 0L),
+            LessThanOrEqual("o_custkey", mxC / 4)))
         .orderBy("o_orderkey")
     },
 
@@ -889,9 +896,10 @@ object ManifestOps extends QueryGroup {
       // source table (pure-ASCII values: binary order everywhere).
       val part = Tables.table(spark, dir, "part")
       val root = strRoot(spark, dir)
-      ManifestTable.readPrunedStr(spark, root,
-          ManifestTable.latestVersion(root), part.schema,
-          "p_brand", "Brand#12", "Brand#19")
+      ManifestTable.readPruned(spark, root,
+          ManifestTable.latestVersion(root), part.schema, Seq(
+            GreaterThanOrEqual("p_brand", "Brand#12"),
+            LessThanOrEqual("p_brand", "Brand#19")))
         .orderBy("p_partkey")
     },
 

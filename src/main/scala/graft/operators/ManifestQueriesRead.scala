@@ -113,7 +113,7 @@ private[graft] object ManifestReadOps {
       // time-travel loadTable hook, and the pushed key band reaches
       // the per-file stats as file skipping through the V2
       // ScanBuilder → V1Scan bridge (Wave142Spec asserts the admitted
-      // set equals readPrunedMulti's). Pinned v1 = the source table
+      // set equals readPruned's). Pinned v1 = the source table
       // verbatim, so the oracle is the plain band filter.
       val orders = Tables.table(spark, dir, "orders")
       val root = cowRoot(spark, dir)
@@ -226,8 +226,8 @@ private[graft] object ManifestReadOps {
       val (lo, hi) = (b.getLong(0), b.getLong(1))
       val probes = (0L until 5L).map(i => lo + (i * (hi - lo)) / 5).distinct
       probes.map(ck =>
-          ManifestTable.readPrunedBloomEq(spark, root, 2, orders.schema,
-            "o_custkey", ck))
+          ManifestTable.readPruned(spark, root, 2, orders.schema,
+            Seq(org.apache.spark.sql.sources.EqualTo("o_custkey", ck))))
         .reduce(_ unionByName _)
         .orderBy("o_custkey", "o_orderkey")
     },

@@ -150,7 +150,7 @@ object Streaming extends QueryGroup {
     // cluster instead (the setting is pinned per-query at first start).
     val key = "spark.sql.shuffle.partitions"
     val prev = spark.conf.get(key)
-    spark.conf.set(key, sys.env.getOrElse("GRAFT_STREAM_PARTS", "4"))
+    spark.conf.set(key, "4")
     try {
       val q = df.writeStream.format("memory").queryName(name)
         .outputMode(mode).trigger(Trigger.AvailableNow()).start()

@@ -101,17 +101,9 @@ private[plans] object ManifestDml {
     * mapped logical→physical like every stats consumer.
     */
   def bands(conjuncts: Seq[Expression], phys: String => String)
-      : (Seq[(String, Long, Long)],
-         Seq[(String, Option[String], Option[String])],
-         Seq[(String, Double, Double)],
-         Seq[(String, Option[BigDecimal], Option[BigDecimal])]) = {
-    val fs = conjuncts.map(foldLiterals)
-      .flatMap(bridge.translateFilter(_)).toArray
-    (FilterBands.long(fs).map { case (c, lo, hi) => (phys(c), lo, hi) },
-     FilterBands.str(fs).map { case (c, lo, hi) => (phys(c), lo, hi) },
-     FilterBands.dbl(fs).map { case (c, lo, hi) => (phys(c), lo, hi) },
-     FilterBands.dec(fs).map { case (c, lo, hi) => (phys(c), lo, hi) })
-  }
+      : FilterBands.Bands =
+    FilterBands.of(conjuncts.map(foldLiterals)
+      .flatMap(bridge.translateFilter(_)).toArray, phys)
 
   /** Rebind a resolved expression onto a fresh scan by NAME (the
     * command re-reads the touched files as a new DataFrame, so the
@@ -153,10 +145,10 @@ case class UpdateManifestCommand(table: ManifestV2Table,
     }.toMap
     val cond = condition.map(ManifestDml.rebind(_, phys))
       .getOrElse(lit(true))
-    val (lb, sb, db, cb) = ManifestDml.bands(
+    val b = ManifestDml.bands(
       condition.toSeq.flatMap(splitConjunctivePredicates), phys)
     ManifestTable.updateWhereCoW(spark, root, physSchema, cond, set,
-      lb, sb, db, cb)
+      b.long, b.str, b.dbl, b.dec)
     Seq.empty
   }
 }

@@ -57,6 +57,12 @@ object Api {
     pool
   }
 
+  /** A request parameter that is present but malformed: answered 400,
+    * never read past as if it were absent.
+    */
+  private final class BadParam(msg: String)
+      extends IllegalArgumentException(msg)
+
   /** Parameterized per-vehicle trace — the library form of the fixed
     * `events_trace` harness query: one vehicle, half-open time window.
     */
@@ -121,7 +127,8 @@ object Api {
           case kv if kv.startsWith(name + "=") =>
             kv.substring(name.length + 1)
         }
-        .flatMap(v => scala.util.Try(v.toLong).toOption)
+        .map(v => v.toLongOption.getOrElse(
+          throw new BadParam(s"$name=$v is not an integer")))
 
     server.createContext("/", (x: HttpExchange) => {
       try {
@@ -235,23 +242,25 @@ object Api {
             // (TIMESTAMP AS OF); a time before the first commit — or a
             // root whose manifests predate timestamp recording — maps
             // to the version=0 "no such version" reply below
-            val v = param(x, "asof").map(_.toLong) match {
+            val v: Long = param(x, "asof") match {
               case Some(t) =>
                 try graft.operators.ManifestTable.versionAt(root, t)
                 catch { case _: IllegalArgumentException => 0 }
-              case None =>
-                param(x, "version").map(_.toInt).getOrElse(latest)
+              case None => param(x, "version").getOrElse(latest.toLong)
             }
+            val keys = (param(x, "from_key"), param(x, "to_key"))
+            if (keys._1.isDefined != keys._2.isDefined)
+              throw new BadParam("from_key and to_key go together")
             if (v < 1 || v > latest)
               respond(x, 404,
                 s"""{"error":"no such version","latest":$latest}""")
             else {
-              val df = (param(x, "from_key"), param(x, "to_key")) match {
+              val df = keys match {
                 case (Some(lo), Some(hi)) =>
-                  graft.operators.ManifestTable.readPruned(spark, root, v,
-                    orders.schema, "o_orderkey", lo, hi)
+                  graft.operators.ManifestTable.readPruned(spark, root,
+                    v.toInt, orders.schema, "o_orderkey", lo, hi)
                 case _ =>
-                  graft.operators.ManifestTable.read(spark, root, v,
+                  graft.operators.ManifestTable.read(spark, root, v.toInt,
                     orders.schema)
               }
               respond(x, 200,
@@ -274,6 +283,8 @@ object Api {
             respond(x, 404, s"""{"error":"not found","path":${Json.str(path)}}""")
         }
       } catch {
+        case b: BadParam =>
+          respond(x, 400, s"""{"error":${Json.str(b.getMessage)}}""")
         case t: Throwable =>
           respond(x, 500, s"""{"error":${Json.str(String.valueOf(t))}}""")
       }

@@ -29,14 +29,14 @@ import org.apache.spark.sql.types.StructType
   *
   * The V1 source contract is deliberate: `PrunedFilteredScan` gives
   * this reader column pruning AND filter-driven FILE SKIPPING through
-  * the manifest's per-file column stats — an equality/range/prefix
-  * predicate on a stats-carrying column (long OR string, wave 135)
-  * admits only the files whose recorded bounds intersect, before any
-  * scan, exactly like [[ManifestTable.readPrunedMulti]]; planning
-  * resolves through the manifest LIST, reading only the intersecting
-  * checkpoint segments. Every filter is reported
-  * unhandled so Spark re-applies them row-exactly on the admitted
-  * files (the stats prune is a superset admit, never an answer).
+  * the manifest's per-file column stats — an equality/range/prefix/IN
+  * predicate on a stats-carrying column admits only the files whose
+  * recorded bounds (and bloom bitsets) allow it, before any scan, by
+  * the one admission rule every manifest reader shares
+  * ([[FileAdmission]]); planning resolves through the manifest LIST,
+  * reading only the intersecting checkpoint segments. Every filter is
+  * reported unhandled so Spark re-applies them row-exactly on the
+  * admitted files (the stats prune is a superset admit, never an answer).
   * Schema resolution order: caller-supplied > `schema=` header meta
   * (ADD COLUMN evolution) > first data file's parquet footer.
   */
@@ -317,13 +317,6 @@ private[graft] class ManifestRelation(ctx: SQLContext, root: Path,
   override def unhandledFilters(filters: Array[Filter]): Array[Filter] =
     filters
 
-  private def bands(filters: Array[Filter]): Seq[(String, Long, Long)] =
-    FilterBands.long(filters)
-
-  private def strBands(filters: Array[Filter])
-      : Seq[(String, Option[String], Option[String])] =
-    FilterBands.str(filters)
-
   /** Sidecar-derived key column: a vector sidecar carries exactly the
     * key column (plus `src` for the scoped form).
     */
@@ -337,32 +330,8 @@ private[graft] class ManifestRelation(ctx: SQLContext, root: Path,
     * at package level so the file-skipping claim is unit-assertable.
     */
   private[graft] def admittedEntries(filters: Array[Filter])
-      : Seq[ManifestTable.FileEntry] = {
-    // two-level planning (wave 134/135): long AND string bands resolve
-    // through the manifest list, reading only the checkpoint segments
-    // whose aggregate bounds intersect — plan IO rides the relevant
-    // fraction of the file list. Band names translate to PHYSICAL
-    // (stats keys are stage-time names).
-    val lb = bands(filters).map { case (c, lo, hi) => (phys(c), lo, hi) }
-    // hidden partitioning (round 10): derive virtual transform bands
-    // from the pushed predicates, so a plain `c = 42` filter skips
-    // files by the table's bucket/truncate/days layout with zero user
-    // knowledge of it
-    val banded = ManifestTable.prunedEntries(root, version,
-      lb ++ ManifestTable.hiddenBands(root, version, lb),
-      strBands(filters).map { case (c, lo, hi) => (phys(c), lo, hi) },
-      FilterBands.dbl(filters).map { case (c, lo, hi) => (phys(c), lo, hi) },
-      FilterBands.dec(filters).map { case (c, lo, hi) => (phys(c), lo, hi) },
-      FilterBands.bin(filters).map { case (c, lo, hi) => (phys(c), lo, hi) })._1
-    // bloom refinement (round 12 — r11-VERDICT task 1): point/IN
-    // predicates on an indexed column drop the files whose bitset
-    // proves every candidate absent — the skip min/max bands cannot
-    // make on scattered high-cardinality columns; bitset-less files
-    // are admitted unconditionally (superset admit preserved)
-    ManifestTable.bloomAdmitEntries(root, version,
-      FilterBands.bloomProbes(filters).map { case (c, vs) =>
-        (phys(c), vs) }, banded)
-  }
+      : Seq[ManifestTable.FileEntry] =
+    FileAdmission.admit(root, version, filters, phys)
 
   /** The stats-pruned, DV-subtracted, mapping-aliased snapshot scan as
     * a DataFrame under the FULL logical schema — the shared core of
@@ -383,14 +352,9 @@ private[graft] class ManifestRelation(ctx: SQLContext, root: Path,
       else if (dvs.nonEmpty) // key vectors: subtract, no file skip
         ManifestTable.readMOR(spark, root, version, physSchema,
           sidecarKey(dvs))
-      else { // clean snapshot: stats-pruned file set, explicit schema
-        val admitted = admittedEntries(filters)
-        if (admitted.isEmpty)
-          spark.createDataFrame(
-            spark.sparkContext.emptyRDD[Row], physSchema)
-        else spark.read.schema(physSchema).parquet(admitted.map(e =>
-          root.resolve("data").resolve(e.path).toString): _*)
-      })
+      else // clean snapshot: stats-pruned file set, explicit schema
+        ManifestTable.scanFiles(spark, root, physSchema,
+          admittedEntries(filters).map(_.path)))
   }
 
   override def buildScan(requiredColumns: Array[String],
@@ -401,15 +365,41 @@ private[graft] class ManifestRelation(ctx: SQLContext, root: Path,
   }
 }
 
-/** Pushed-filter to per-column band translation, shared by the V1
-  * relation ([[ManifestRelation]]) and the V2 scan ([[ManifestV2]]):
-  * only comparisons against long/int (resp. string) literals
-  * contribute — anything else admits all files; conjunctions intersect
-  * per column inside the entry-level admission. The stats prune is a
-  * superset admit, never an answer: Spark re-applies every predicate
-  * row-exactly on the admitted files.
+/** Pushed-filter to per-column band translation, the one entry point
+  * being [[FilterBands.of]]: read admission ([[FileAdmission]]) and
+  * the write paths' candidate-file prunes (DELETE / UPDATE / REPLACE
+  * WHERE) all take their bands from it. Only comparisons against
+  * literals of a stats-carrying type contribute — anything else
+  * admits all files; conjunctions intersect per column inside the
+  * entry-level admission. The stats prune is a superset admit, never
+  * an answer: the exact predicate re-applies row-exactly on the
+  * admitted files.
   */
 private[graft] object FilterBands {
+
+  /** Every band a conjunction of filters implies, column names mapped
+    * logical→physical (stats keys are stage-time names). `in` holds
+    * long IN sets sorted for per-file binary search; `probes` the
+    * long point/IN values for bloom admission.
+    */
+  final case class Bands(
+      long: Seq[(String, Long, Long)],
+      str: Seq[(String, Option[String], Option[String])],
+      dbl: Seq[(String, Double, Double)],
+      dec: Seq[(String, Option[BigDecimal], Option[BigDecimal])],
+      bin: Seq[(String, Option[Seq[Byte]], Option[Seq[Byte]])],
+      in: Seq[(String, Array[Long])],
+      probes: Seq[(String, Array[Long])])
+
+  def of(filters: Array[Filter], phys: String => String): Bands = {
+    def m[A, B](bs: Seq[(String, A, B)]) =
+      bs.map { case (c, lo, hi) => (phys(c), lo, hi) }
+    def mv(vs: Seq[(String, Array[Long])]) =
+      vs.map { case (c, v) => (phys(c), v) }
+    Bands(m(long(filters)), m(str(filters)), m(dbl(filters)),
+      m(dec(filters)), m(bin(filters)), mv(inSets(filters)),
+      mv(bloomProbes(filters)))
+  }
 
   /** Temporal literal → epoch micros (the µs-timestamp stats
     * convention, round 11): pushed timestamp predicates prune through
@@ -422,7 +412,7 @@ private[graft] object FilterBands {
       case _ => None // plain longs are handled by the long cases
     }
 
-  def long(filters: Array[Filter]): Seq[(String, Long, Long)] =
+  private def long(filters: Array[Filter]): Seq[(String, Long, Long)] =
     filters.toSeq.flatMap {
       case EqualTo(a, v: Long) => Seq((a, v, v))
       case EqualTo(a, v: Int) => Seq((a, v.toLong, v.toLong))
@@ -453,11 +443,6 @@ private[graft] object FilterBands {
       case _ => Nil
     }
 
-  /** DOUBLE comparison bands (round 11). Strict comparisons keep the
-    * inclusive endpoint (doubles have no cheap predecessor/successor;
-    * a superset admit is always safe); the row-level filter re-applies
-    * exactly.
-    */
   /** DECIMAL comparison bands (round 11, wave 161): pushed values
     * arrive as java.math.BigDecimal. Strict comparisons keep the
     * inclusive endpoint — the superset admit is always safe. Bounds
@@ -466,7 +451,7 @@ private[graft] object FilterBands {
     * precision cap, but a wider recorded bound would falsely prove
     * disjointness — a false prune, not a superset admit).
     */
-  def dec(filters: Array[Filter])
+  private def dec(filters: Array[Filter])
       : Seq[(String, Option[BigDecimal], Option[BigDecimal])] = {
     def of(v: Any): Option[BigDecimal] = v match {
       case d: java.math.BigDecimal => Some(BigDecimal(d))
@@ -489,7 +474,12 @@ private[graft] object FilterBands {
     }
   }
 
-  def dbl(filters: Array[Filter]): Seq[(String, Double, Double)] =
+  /** DOUBLE comparison bands (round 11). Strict comparisons keep the
+    * inclusive endpoint (doubles have no cheap predecessor/successor;
+    * a superset admit is always safe); the row-level filter re-applies
+    * exactly.
+    */
+  private def dbl(filters: Array[Filter]): Seq[(String, Double, Double)] =
     filters.toSeq.flatMap {
       case EqualTo(a, v: Double) => Seq((a, v, v))
       case EqualTo(a, v: Float) => Seq((a, v.toDouble, v.toDouble))
@@ -510,7 +500,7 @@ private[graft] object FilterBands {
     * inclusive endpoint — a superset admit is always safe; prefix
     * predicates use the increment-last-code-point upper bound.
     */
-  def str(filters: Array[Filter])
+  private def str(filters: Array[Filter])
       : Seq[(String, Option[String], Option[String])] =
     filters.toSeq.flatMap {
       case EqualTo(a, v: String) => Seq((a, Some(v), Some(v)))
@@ -528,7 +518,7 @@ private[graft] object FilterBands {
     * element at unbounded length); strict comparisons keep the
     * inclusive endpoint — the superset admit is always safe.
     */
-  def bin(filters: Array[Filter])
+  private def bin(filters: Array[Filter])
       : Seq[(String, Option[Seq[Byte]], Option[Seq[Byte]])] =
     filters.toSeq.flatMap {
       case EqualTo(a, v: Array[Byte]) =>
@@ -543,13 +533,26 @@ private[graft] object FilterBands {
       case _ => Nil
     }
 
+  /** Long IN sets — the shape DPP subqueries arrive in — as sorted
+    * arrays for per-file binary-search admission.
+    */
+  private def inSets(filters: Array[Filter]): Seq[(String, Array[Long])] =
+    filters.toSeq.collect {
+      case In(a, vs) if vs.nonEmpty && vs.forall(v =>
+          v.isInstanceOf[java.lang.Long] || v.isInstanceOf[java.lang.Integer]) =>
+        a -> vs.map {
+          case l: java.lang.Long => l.longValue
+          case i: java.lang.Integer => i.longValue
+        }.sorted
+    }
+
   /** Point/IN probe values for BLOOM admission (round 12): only LONG
     * candidates — the index covers BIGINT columns and the build
     * hashed long values, so probing any other type would mis-hash
     * (such columns never carry a bitset anyway; admission there is
     * unconditional by the no-bitset rule).
     */
-  def bloomProbes(filters: Array[Filter]): Seq[(String, Array[Long])] =
+  private def bloomProbes(filters: Array[Filter]): Seq[(String, Array[Long])] =
     filters.toSeq.flatMap {
       case EqualTo(a, v: Long) => Seq((a, Array(v)))
       case In(a, vs) if vs.nonEmpty &&
@@ -585,5 +588,51 @@ private[graft] object FilterBands {
       sb.appendCodePoint(next)
       Some(sb.toString)
     }
+  }
+}
+
+/** The one file-admission rule of a manifest read: every reader — the
+  * V1 relation, the native V2 scan (pushed ++ runtime DPP filters) and
+  * [[ManifestTable.readPruned]] — admits exactly the entries this
+  * returns. A superset admit, never an answer: the caller re-applies
+  * the filters row-exactly.
+  *
+  *  - long, string, double, decimal and binary bands, plus the
+  *    min..max of each long IN set, drive the two-level manifest-list
+  *    prune ([[ManifestTable.prunedEntries]]);
+  *  - hidden partitioning: the same coarse bands derive virtual
+  *    transform bands through the version's current AND historical
+  *    transforms (evolved tables' old files prune via their old
+  *    bands), and IN sets map value-wise through each transform;
+  *  - IN sets then refine per value: a file survives only when some
+  *    candidate falls inside its recorded band;
+  *  - bloom refinement: equalities and IN sets drop files whose
+  *    bitset proves every candidate absent (bitset-less files admit).
+  */
+private[graft] object FileAdmission {
+
+  private def anyInBand(vs: Array[Long], lo: Long, hi: Long): Boolean = {
+    var i = java.util.Arrays.binarySearch(vs, lo)
+    if (i < 0) i = -i - 1
+    i < vs.length && vs(i) <= hi
+  }
+
+  def admit(root: Path, version: Int, filters: Array[Filter],
+      phys: String => String): Seq[ManifestTable.FileEntry] = {
+    val b = FilterBands.of(filters, phys)
+    val coarse = b.long ++ b.in.map { case (c, vs) => (c, vs.head, vs.last) }
+    val hiddenIn = b.in.flatMap { case (c, vs) =>
+      ManifestTable.allPartTransforms(root, version).filter(_.srcCol == c)
+        .map(t => (t.statName, vs.map(t.ofLiteral).distinct.sorted))
+    }
+    val (hit, _, _) = ManifestTable.prunedEntries(root, version,
+      coarse ++ ManifestTable.hiddenBands(root, version, coarse),
+      b.str, b.dbl, b.dec, b.bin)
+    val banded = hit.filter { e =>
+      (b.in ++ hiddenIn).forall { case (c, vs) =>
+        e.band(c).forall { case (lo, hi) => anyInBand(vs, lo, hi) }
+      }
+    }
+    ManifestTable.bloomAdmitEntries(root, version, b.probes, banded)
   }
 }

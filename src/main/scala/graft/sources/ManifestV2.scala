@@ -35,10 +35,10 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * predicates for per-file stats admission and returns them ALL as
   * residual (the stats prune is a superset admit, never an answer),
   * `pruneColumns` narrows the projection — and the bridged V1 scan
-  * plans through the manifest list exactly like
-  * [[ManifestTable.readPrunedMulti]], vectorized parquet read
-  * included. A bespoke `PartitionReaderFactory` would duplicate
-  * Spark's parquet reader without its vectorization; the bridge keeps
+  * plans through the manifest list by the shared admission rule
+  * ([[FileAdmission]]), vectorized parquet read included. A bespoke
+  * `PartitionReaderFactory` would duplicate Spark's parquet reader
+  * without its vectorization; the bridge keeps
   * the scan on the fast path while the table still negotiates V2
   * pushdown, time travel, and SQL DML.
   */
@@ -237,12 +237,9 @@ class ManifestV2Table(val root: Path, val snapshot: Int,
     val logical = ManifestV2.resolveSchema(s, root, latest)
     val physSchema = StructType(logical.fields.map(f =>
       f.copy(name = p(f.name))))
+    val b = FilterBands.of(filters, p)
     ManifestTable.deleteWhereCoW(s, root, physSchema, cond,
-      FilterBands.long(filters).map { case (c, lo, hi) => (p(c), lo, hi) },
-      FilterBands.str(filters).map { case (c, lo, hi) => (p(c), lo, hi) },
-      FilterBands.dbl(filters).map { case (c, lo, hi) => (p(c), lo, hi) },
-      FilterBands.dec(filters).map { case (c, lo, hi) => (p(c), lo, hi) })
-    : Unit
+      b.long, b.str, b.dbl, b.dec): Unit
   }
 }
 
@@ -556,62 +553,8 @@ class ManifestRuntimeScan(spark: SparkSession, root: Path, version: Int,
     delegateCache = null
   }
 
-  /** Long IN sets from the (pushed ++ runtime) filters — the shape
-    * DPP subqueries arrive in — as sorted arrays for per-file
-    * binary-search admission. Names come back PHYSICAL.
-    */
-  private def inSets(fs: Array[Filter]): Seq[(String, Array[Long])] =
-    fs.toSeq.collect {
-      case In(a, vs) if vs.nonEmpty && vs.forall(v =>
-          v.isInstanceOf[java.lang.Long] || v.isInstanceOf[java.lang.Integer]) =>
-        phys(a) -> vs.map {
-          case l: java.lang.Long => l.longValue
-          case i: java.lang.Integer => i.longValue
-        }.sorted
-    }
-
-  private def anyInBand(vs: Array[Long], lo: Long, hi: Long): Boolean = {
-    var i = java.util.Arrays.binarySearch(vs, lo)
-    if (i < 0) i = -i - 1
-    i < vs.length && vs(i) <= hi
-  }
-
-  private[graft] def admittedEntries: Seq[ManifestTable.FileEntry] = {
-    val all = pushed ++ runtime
-    val lb = FilterBands.long(all).map { case (c, lo, hi) =>
-      (phys(c), lo, hi) }
-    val ins = inSets(all)
-    // coarse range bands (IN sets contribute their min..max) drive the
-    // two-level manifest-list prune; per-value refinement runs on the
-    // surviving entries below
-    val coarse = lb ++ ins.map { case (c, vs) => (c, vs.head, vs.last) }
-    // historical transforms included: evolved tables' old files prune
-    // via their old virtual bands (round 13)
-    val transforms = ManifestTable.allPartTransforms(root, version)
-    val hiddenIn = ins.flatMap { case (c, vs) =>
-      transforms.filter(_.srcCol == c).map(t =>
-        (t.statName, vs.map(t.ofLiteral).distinct.sorted))
-    }
-    val (hit, _, _) = ManifestTable.prunedEntries(root, version,
-      coarse ++ ManifestTable.hiddenBands(root, version, coarse),
-      FilterBands.str(all).map { case (c, lo, hi) => (phys(c), lo, hi) },
-      FilterBands.dbl(all).map { case (c, lo, hi) => (phys(c), lo, hi) },
-      FilterBands.dec(all).map { case (c, lo, hi) => (phys(c), lo, hi) },
-      FilterBands.bin(all).map { case (c, lo, hi) => (phys(c), lo, hi) })
-    val banded = hit.filter { e =>
-      (ins ++ hiddenIn).forall { case (c, vs) =>
-        e.band(c).forall { case (lo, hi) => anyInBand(vs, lo, hi) }
-      }
-    }
-    // bloom refinement (round 12 — r11-VERDICT task 1): a bloom is
-    // exactly an IN-probe structure, so static equalities AND the
-    // runtime DPP IN sets drop files whose bitset proves every
-    // candidate key absent — the star-join point prune bands cannot
-    // make when the fact's dim-key scatters across every file.
-    ManifestTable.bloomAdmitEntries(root, version,
-      FilterBands.bloomProbes(all).map { case (c, vs) => (phys(c), vs) },
-      banded)
-  }
+  private[graft] def admittedEntries: Seq[ManifestTable.FileEntry] =
+    FileAdmission.admit(root, version, pushed ++ runtime, phys)
 
   private def delegate: Scan = {
     val cached = delegateCache
@@ -758,7 +701,7 @@ class ManifestV2Scan(ctx: SQLContext, root: Path, version: Int,
 
   /** The stats-admitted file entries under the pushed filters — the
     * spec hook proving the V2 path physically skips files (must equal
-    * [[ManifestTable.readPrunedMulti]]'s admitted set).
+    * [[ManifestTable.readPruned]]'s admitted set).
     */
   private[graft] def admittedEntries: Seq[ManifestTable.FileEntry] =
     new ManifestRelation(ctx, root, version, fullSchema)
@@ -877,18 +820,12 @@ class ManifestWriteBuilder(root: Path, props: Map[String, String],
             f.copy(name = p(f.name))))
           def colsOf(k: String) = props.get(k).map(_.split(',').toSeq
             .map(_.trim).filter(_.nonEmpty).map(p)).getOrElse(Nil)
+          val b = FilterBands.of(replaceWhere, p)
           ManifestTable.replaceWhereCoW(s, root, physSchema, cond,
             data.toDF(physSchema.fieldNames.toSeq: _*),
             colsOf("statsColumns"), colsOf("statsStringColumns"),
             colsOf("statsDoubleColumns"), colsOf("statsDecimalColumns"),
-            FilterBands.long(replaceWhere).map {
-              case (c, lo, hi) => (p(c), lo, hi) },
-            FilterBands.str(replaceWhere).map {
-              case (c, lo, hi) => (p(c), lo, hi) },
-            FilterBands.dbl(replaceWhere).map {
-              case (c, lo, hi) => (p(c), lo, hi) },
-            FilterBands.dec(replaceWhere).map {
-              case (c, lo, hi) => (p(c), lo, hi) }): Unit
+            b.long, b.str, b.dbl, b.dec): Unit
         }
       }
   }
@@ -960,14 +897,14 @@ class ManifestWriteBuilder(root: Path, props: Map[String, String],
       if (dynamic && transforms.nonEmpty)
         Some(ManifestBatchWrite.DynamicOverwrite(logical))
       else if (replaceWhere.isEmpty) None
-      else Some(ManifestBatchWrite.ReplaceWhere(logical,
-        replaceWhere.toSeq
-          .flatMap(ManifestV2.filterToColumn(_, identity))
-          .reduceOption(_ && _).getOrElse(lit(true)),
-        FilterBands.long(replaceWhere),
-        FilterBands.str(replaceWhere),
-        FilterBands.dbl(replaceWhere),
-        FilterBands.dec(replaceWhere)))
+      else {
+        val b = FilterBands.of(replaceWhere, identity)
+        Some(ManifestBatchWrite.ReplaceWhere(logical,
+          replaceWhere.toSeq
+            .flatMap(ManifestV2.filterToColumn(_, identity))
+            .reduceOption(_ && _).getOrElse(lit(true)),
+          b.long, b.str, b.dbl, b.dec))
+      }
     val batch = new ManifestBatchWrite(root.toString, replace,
       logical, writeSchema, transforms, statsCols,
       colsOf("statsStringColumns"), colsOf("statsDoubleColumns"),

@@ -195,6 +195,14 @@ class ServingSpec extends SparkSpec {
     // past-the-end version 404s with the latest pointer
     val (c4, b4) = get(s"/table/orders?version=${latest + 5}")
     assert(c4 == 404 && b4.contains(s""""latest":$latest"""))
+    // a malformed number or a half-given key range is a 400, never a
+    // silent unpruned or latest-version read
+    Seq("/table/orders?from_key=abc&to_key=10", "/table/orders?from_key=1",
+      "/table/orders?version=1&to_key=10", "/table/orders?version=abc")
+      .foreach { u =>
+        val (c, b) = get(u)
+        assert(c == 400 && b.contains("\"error\""), s"$u → $c ${b.take(120)}")
+      }
     // TIMESTAMP AS OF: the v1 commit's own wall time resolves to v1
     // (cached roots built before ts= recording resolve nothing — both
     // shapes are legitimate replies here, 200@v1 or 404)

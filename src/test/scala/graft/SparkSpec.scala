@@ -18,6 +18,16 @@ abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   def q(name: String, dir: String = sfDir): DataFrame =
     SparkEntry.queries(name)(spark, dir)
 
+  /** `lo <= c <= hi` per band, as [[operators.ManifestTable.readPruned]]
+    * filters.
+    */
+  def between(bands: (String, Any, Any)*)
+      : Seq[org.apache.spark.sql.sources.Filter] =
+    bands.flatMap { case (c, lo, hi) =>
+      Seq(org.apache.spark.sql.sources.GreaterThanOrEqual(c, lo),
+        org.apache.spark.sql.sources.LessThanOrEqual(c, hi))
+    }
+
   /** The formatted physical plan, for pushdown/broadcast assertions. */
   def plan(df: DataFrame): String = df.queryExecution.explainString(
     org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))

@@ -151,14 +151,14 @@ class Wave108Spec extends SparkSpec {
     assert(kOnly.nonEmpty && jOnly.nonEmpty && kOnly.intersect(jOnly).isEmpty,
       s"correlated bands should admit disjoint file sets: $kOnly / $jOnly")
     // conjunction of the two disjoint-admitting bands → NO file scans
-    val none = ManifestTable.readPrunedMulti(spark, root, v1, df.schema,
-      Seq(("k", 0L, 200L), ("j", 9000L, 9100L)))
+    val none = ManifestTable.readPruned(spark, root, v1, df.schema,
+      between(("k", 0L, 200L), ("j", 9000L, 9100L)))
     assert(none.inputFiles.isEmpty && none.count() == 0)
     // a satisfiable conjunction: physical inputFiles == the admitted
     // intersection, rows == the exact filter
     val preds = Seq(("k", 100L, 300L), ("j", 9750L, 9960L)) // k∈[40,250]
-    val both = ManifestTable.readPrunedMulti(spark, root, v1, df.schema,
-      preds)
+    val both = ManifestTable.readPruned(spark, root, v1, df.schema,
+      between(preds: _*))
     val admit = admitted(preds)
     assert(both.inputFiles.map(_.split('/').last).toSet == admit,
       s"scan read ${both.inputFiles.toSeq}, stats admit $admit")
@@ -179,9 +179,9 @@ class Wave108Spec extends SparkSpec {
       "cow entries must carry stats for both declared columns")
     val mx = orders.agg(max("o_orderkey")).head().getLong(0)
     val mxC = orders.agg(max("o_custkey")).head().getLong(0)
-    val pruned = ManifestTable.readPrunedMulti(spark, root, v,
+    val pruned = ManifestTable.readPruned(spark, root, v,
       orders.schema,
-      Seq(("o_orderkey", mx / 10, mx / 5), ("o_custkey", 0L, mxC / 2)))
+      between(("o_orderkey", mx / 10, mx / 5), ("o_custkey", 0L, mxC / 2)))
     assert(pruned.inputFiles.length < entries.size,
       "two-predicate prune scanned every file")
     // exactness vs the full-scan filter (band below the merge band)

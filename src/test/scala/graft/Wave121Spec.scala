@@ -44,7 +44,7 @@ class Wave121Spec extends SparkSpec {
     val v2 = ManifestTable.optimizeZorder(spark, root, 1, df.schema,
       Seq("k", "c"), 16)
     def admitted(v: Int, preds: Seq[(String, Long, Long)]) =
-      ManifestTable.readPrunedMulti(spark, root, v, df.schema, preds)
+      ManifestTable.readPruned(spark, root, v, df.schema, between(preds: _*))
         .inputFiles.length
     // c-band bottom quarter: the range layout cannot prune at all
     // (every k-slab file spans c's full range); the z-layout's 16
@@ -64,8 +64,9 @@ class Wave121Spec extends SparkSpec {
       s"layout (${admitted(1, rect)} files)")
     assert(zRect <= 3, s"2-D prune admitted $zRect of 16 z-files")
     // the prunes re-filter rows exactly, layout notwithstanding
-    assert(ManifestTable.readPrunedMulti(spark, root, v2, df.schema, rect)
-      .count() == df.filter(col("k") <= 1023 && col("c") <= 1023).count())
+    assert(ManifestTable.readPruned(spark, root, v2, df.schema,
+      between(rect: _*)).count() ==
+      df.filter(col("k") <= 1023 && col("c") <= 1023).count())
   }
 
   test("degenerate second column (constant) does not break the " +
@@ -102,7 +103,7 @@ class Wave121Spec extends SparkSpec {
     assert(got.count() == 4096)
     assert(got.exceptAll(df).isEmpty && df.exceptAll(got).isEmpty)
     def admitted(v: Int, preds: Seq[(String, Long, Long)]) =
-      ManifestTable.readPrunedMulti(spark, root, v, df.schema, preds)
+      ManifestTable.readPruned(spark, root, v, df.schema, between(preds: _*))
         .inputFiles.length
     // the unclustered dims cannot prune the range layout at all
     assert(admitted(1, Seq(("b", 0L, 3L))) == 16)

@@ -54,8 +54,8 @@ class Wave132Spec extends SparkSpec {
     val entries = ManifestTable.entriesFor(root, v2)
     assert(entries.size == 9)
     assert(entries.count(_.bandStr("tag").isEmpty) == 1)
-    val pruned = ManifestTable.readPrunedStr(spark, root, v2, df.schema,
-      "tag", "cc", "ff")
+    val pruned = ManifestTable.readPruned(spark, root, v2, df.schema,
+      between(("tag", "cc", "ff")))
     val admitted = entries.filter(_.mayContainStr("tag", "cc", "ff"))
       .map(_.path).toSet
     assert(pruned.inputFiles.map(_.split('/').last).toSet == admitted,
@@ -71,8 +71,8 @@ class Wave132Spec extends SparkSpec {
     assert(pruned.count() == want.count() && want.count() > 0)
     // a band above every recorded tag admits ONLY the statless file
     // (it cannot be proven disjoint) and the row filter returns empty
-    val none = ManifestTable.readPrunedStr(spark, root, v2, df.schema,
-      "tag", "zza", "zzz")
+    val none = ManifestTable.readPruned(spark, root, v2, df.schema,
+      between(("tag", "zza", "zzz")))
     assert(none.inputFiles.map(_.split('/').last).toSet == Set(statless))
     assert(none.count() == 0)
   }
@@ -113,8 +113,8 @@ class Wave132Spec extends SparkSpec {
     assert(entries.size == 9, s"expected 6+3 brand-laid files: $entries")
     assert(entries.forall(e =>
       e.bandStr("p_brand").isDefined && e.band("p_partkey").isDefined))
-    val pruned = ManifestTable.readPrunedStr(spark, root, v, part.schema,
-      "p_brand", "Brand#12", "Brand#19")
+    val pruned = ManifestTable.readPruned(spark, root, v, part.schema,
+      between(("p_brand", "Brand#12", "Brand#19")))
     assert(pruned.inputFiles.nonEmpty &&
       pruned.inputFiles.length < entries.size,
       s"brand band admitted ${pruned.inputFiles.length}/${entries.size} " +

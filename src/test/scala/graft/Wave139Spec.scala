@@ -82,8 +82,8 @@ class Wave139Spec extends SparkSpec {
       .toDF("k", "tag")
     ManifestTable.commit(root, ManifestTable.stageWithTypedStats(
       df.coalesce(1), root, "base", Seq("k"), Seq("tag")))
-    val hit = ManifestTable.readPrunedStr(spark, root, 1, df.schema,
-      "tag", "￿", "￿")
+    val hit = ManifestTable.readPruned(spark, root, 1, df.schema,
+      between(("tag", "￿", "￿")))
     assert(hit.count() == 1,
       "UTF-16 bound compare skipped the file holding U+FFFF")
     // and the segment-level (manifest list) bounds admit it too
@@ -126,8 +126,8 @@ class Wave139Spec extends SparkSpec {
     intercept[IllegalArgumentException] {
       ManifestTable.readPruned(spark, root, v2, df.schema, "k", 0, 50) }
     intercept[IllegalArgumentException] {
-      ManifestTable.readPrunedStr(spark, root, v2, df.schema,
-        "tag", "a", "m") }
+      ManifestTable.readPruned(spark, root, v2, df.schema,
+        between(("tag", "a", "m"))) }
     // the pre-delete snapshot still prunes fine
     assert(ManifestTable.readPruned(spark, root, 1, df.schema,
       "k", 0, 50).count() == 51)

@@ -2,9 +2,9 @@ package graft
 
 import java.nio.file.Files
 import graft.operators.ManifestTable
-import graft.sources.{ManifestScanBuilder, ManifestV2Scan}
+import graft.sources.{ManifestRelation, ManifestRuntimeScan, ManifestScanBuilder}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.sources.{EqualTo, GreaterThanOrEqual, LessThanOrEqual}
+import org.apache.spark.sql.sources.{CollatedEqualTo, EqualTo, Filter, GreaterThanOrEqual, In, LessThanOrEqual}
 
 /** Round-10 wave 142: the DataSourceV2 + catalog surface (r9-VERDICT
   * task 1). Claims proven here:
@@ -13,8 +13,10 @@ import org.apache.spark.sql.sources.{EqualTo, GreaterThanOrEqual, LessThanOrEqua
   *    NAMESPACE / CREATE TABLE … USING `graft-manifest` / INSERT INTO /
   *    SELECT / INSERT OVERWRITE / ALTER TABLE column DDL / DROP TABLE
   *  - `VERSION AS OF` and `TIMESTAMP AS OF` resolve through the log
-  *  - the V2 scan's stats admission equals `readPrunedMulti`'s
-  *    admitted set (the file-skipping claim, unit-assertable)
+  *  - one admission rule: the V1 relation, the V2 runtime scan and
+  *    `readPruned` admit the same file set under long, string,
+  *    double, IN and bloom-equality filters (the file-skipping claim,
+  *    unit-assertable)
   *  - SQL `DELETE FROM … WHERE` (SupportsDelete → deleteWhereCoW)
   *    rewrites ONLY the band-admitted files
   *  - `spark.read.format("graft-manifest-v2")` resolves by short name
@@ -72,8 +74,73 @@ class Wave142Spec extends SparkSpec {
     assert(spark.sql(s"SHOW TABLES IN $cat.sales").count() == 0)
   }
 
-  test("the V2 scan's admitted file set equals readPrunedMulti's, and " +
-    "the SQL result is row-exact") {
+  test("one admission rule: the V1 relation, the V2 runtime scan and " +
+    "readPruned admit the same files under long, string, double, IN " +
+    "and bloom-equality filters") {
+    val root = Files.createTempDirectory("graft_w142_admit")
+    // 8 k-range-laid files; u scatters across all of them (its band
+    // spans the domain everywhere, so only the bloom can skip on it)
+    val df = spark.range(4000).select(col("id").as("k"),
+      format_string("s%04d", col("id")).as("s"),
+      (col("id") * 0.5).as("d"),
+      ((col("id") * 2654435761L) % 1000L).as("u"))
+    ManifestTable.commit(root, ManifestTable.stageWithTypedStats(
+      df.repartitionByRange(8, col("k")), root, "base",
+      Seq("k", "u"), Seq("s"), Seq("d")))
+    ManifestTable.buildBloomIndex(spark, root, df.schema, "u")
+    val v = ManifestTable.latestVersion(root)
+    val all = ManifestTable.filesFor(root, v).toSet
+    assert(all.size == 8, s"fixture live set: $all")
+    def name(f: String) = f.substring(f.lastIndexOf('/') + 1)
+    val cases: Seq[(String, Array[Filter], org.apache.spark.sql.Column)] =
+      Seq(
+        ("long", Array(GreaterThanOrEqual("k", 1000L),
+          LessThanOrEqual("k", 1500L)), col("k").between(1000L, 1500L)),
+        ("string", Array(GreaterThanOrEqual("s", "s2000"),
+          LessThanOrEqual("s", "s2400")), col("s").between("s2000", "s2400")),
+        ("double", Array(GreaterThanOrEqual("d", 100.0),
+          LessThanOrEqual("d", 300.0)), col("d").between(100.0, 300.0)),
+        // the V1 relation admitted every file for an IN set until it
+        // shared the V2 scan's admission
+        ("IN", Array(In("k", Array(10L, 3900L))), col("k").isin(10L, 3900L)),
+        ("bloom", Array(EqualTo("u", 7L)), col("u") === 7L))
+    cases.foreach { case (kind, fs, exact) =>
+      val v1 = new ManifestRelation(spark.sqlContext, root, v, df.schema)
+        .admittedEntries(fs).map(_.path).toSet
+      val b = new ManifestScanBuilder(spark.sqlContext, root, v, df.schema)
+      assert(b.pushFilters(fs).toSeq == fs.toSeq,
+        "every filter must come back residual (superset admit)")
+      val v2 = b.build().asInstanceOf[ManifestRuntimeScan]
+        .admittedEntries.map(_.path).toSet
+      val pruned = ManifestTable.readPruned(spark, root, v, df.schema, fs)
+      val lib = pruned.inputFiles.map(name).toSet
+      assert(v1 == v2 && v2 == lib,
+        s"$kind: V1 admitted $v1, V2 $v2, readPruned $lib")
+      assert(v2.nonEmpty && v2.size < all.size,
+        s"$kind: admitted ${v2.size} of ${all.size} files")
+      val want = df.filter(exact).count()
+      assert(want > 0 && pruned.count() == want,
+        s"$kind: readPruned is not row-exact")
+    }
+  }
+
+  test("readPruned refuses a filter it cannot re-apply row-exactly") {
+    val root = Files.createTempDirectory("graft_w142_refuse")
+    val df = spark.range(10).select(col("id").as("k"),
+      format_string("s%d", col("id")).as("s"))
+    ManifestTable.commit(root, ManifestTable.stageWithStats(df, root,
+      "base", "k"))
+    // a collated comparison has no Column form here: dropping it would
+    // return every admitted row
+    val collated = CollatedEqualTo("s", "S1",
+      org.apache.spark.sql.types.StringType("UTF8_LCASE"))
+    val e = intercept[IllegalArgumentException] {
+      ManifestTable.readPruned(spark, root, 1, df.schema, Seq(collated))
+    }
+    assert(e.getMessage.contains("row-exactly"), e.getMessage)
+  }
+
+  test("the V2 scan's SQL result is row-exact and column-pruned") {
     val cat = freshCatalog("prune")
     spark.sql(s"CREATE TABLE $cat.t (k BIGINT, v BIGINT) " +
       "USING `graft-manifest` TBLPROPERTIES ('statsColumns' = 'k')")
@@ -82,28 +149,6 @@ class Wave142Spec extends SparkSpec {
       .repartitionByRange(4, col("k"))
       .createOrReplaceTempView("w142_src")
     spark.sql(s"INSERT INTO $cat.t SELECT * FROM w142_src")
-    val wh = spark.conf.get(s"spark.sql.catalog.$cat.warehouse")
-    val root = java.nio.file.Paths.get(wh, "t")
-    val v = ManifestTable.latestVersion(root)
-    val schema = spark.table(s"$cat.t").schema
-    // build the V2 scan exactly as Spark's pushdown would
-    val b = new ManifestScanBuilder(spark.sqlContext, root, v, schema)
-    val fs: Array[org.apache.spark.sql.sources.Filter] =
-      Array(GreaterThanOrEqual("k", 100L), LessThanOrEqual("k", 150L))
-    assert(b.pushFilters(fs).toSeq == fs.toSeq,
-      "every filter must come back residual (superset admit)")
-    // clean snapshots build the runtime-filterable NATIVE scan since
-    // round 11 (wave 156); the V1 bridge remains for DV/colmap states
-    val scan = b.build().asInstanceOf[graft.sources.ManifestRuntimeScan]
-    val admitted = scan.admittedEntries.map(_.path).toSet
-    val viaApi = ManifestTable.readPrunedMulti(spark, root, v, schema,
-      Seq(("k", 100L, 150L))).inputFiles
-      .map(f => f.substring(f.lastIndexOf('/') + 1)).toSet
-    assert(admitted == viaApi,
-      s"V2 admitted $admitted != readPrunedMulti $viaApi")
-    val all = ManifestTable.filesFor(root, v).size
-    assert(admitted.size < all,
-      s"band admitted all $all files — skipped nothing")
     // row exactness through the executed SQL path
     val got = spark.sql(
       s"SELECT k, v FROM $cat.t WHERE k BETWEEN 100 AND 150 ORDER BY k")

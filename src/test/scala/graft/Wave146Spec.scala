@@ -116,8 +116,8 @@ class Wave146Spec extends SparkSpec {
     assert(e.getMessage.contains("row-position"),
       s"rewrite must name the row-DV guard: ${e.getMessage}")
     intercept[IllegalArgumentException] {
-      ManifestTable.readPrunedMulti(spark, root, v, df.schema,
-        Seq(("k", 0L, 50L)))
+      ManifestTable.readPruned(spark, root, v, df.schema,
+        between(("k", 0L, 50L)))
     }
     val v2 = ManifestTable.compactMORPositional(spark, root, v,
       df.schema, "k", 2)

@@ -65,15 +65,15 @@ class Wave147Spec extends SparkSpec {
       Seq(("c", target, target)) ++ hb, Nil)
     assert(hit.size <= total / 4,
       s"bucket equality admitted ${hit.size}/$total files")
-    val got = ManifestTable.readPrunedHidden(spark, root, v, df.schema,
-      Seq(("c", target, target))).collect()
+    val got = ManifestTable.readPruned(spark, root, v, df.schema,
+      between(("c", target, target))).collect()
     assert(got.map(_.getLong(0)).toSeq == Seq(777L),
       s"pruned read wrong: ${got.mkString(",")}")
     // a RANGE over the bucket column derives nothing
     assert(ManifestTable.hiddenBands(root, v,
       Seq(("c", 0L, 100L))).isEmpty)
-    val rangeGot = ManifestTable.readPrunedHidden(spark, root, v,
-      df.schema, Seq(("c", 0L, 700L))).orderBy("k").collect()
+    val rangeGot = ManifestTable.readPruned(spark, root, v,
+      df.schema, between(("c", 0L, 700L))).orderBy("k").collect()
     assert(rangeGot.map(_.getLong(0)).toSeq == (0L to 100L),
       "range over a bucket column must stay exact (admit-all)")
   }
@@ -98,8 +98,8 @@ class Wave147Spec extends SparkSpec {
       preds ++ hb, Nil)
     assert(hit.size <= math.max(1, total / 5),
       s"day band admitted ${hit.size}/$total files")
-    val got = ManifestTable.readPrunedHidden(spark, root, v, df.schema,
-      preds).orderBy("k").collect()
+    val got = ManifestTable.readPruned(spark, root, v, df.schema,
+      between(preds: _*)).orderBy("k").collect()
     assert(got.map(_.getLong(0)).toSeq == (400L to 403L),
       s"day-band read wrong: ${got.map(_.getLong(0)).mkString(",")}")
   }

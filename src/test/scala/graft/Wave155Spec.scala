@@ -95,8 +95,8 @@ class Wave155Spec extends SparkSpec {
       s"disjoint band must skip the segment read: read=$segsRead")
     // exactness: pruned scan == plain filter
     val orders = Tables.table(spark, sfDir, "orders")
-    val got = ManifestTable.readPrunedDbl(spark, root, 1, orders.schema,
-      "o_totalprice", 50000.0, 80000.0).count()
+    val got = ManifestTable.readPruned(spark, root, 1, orders.schema,
+      between(("o_totalprice", 50000.0, 80000.0))).count()
     val want = orders.filter(col("o_totalprice").between(50000.0, 80000.0))
       .count()
     assert(got == want, s"pruned=$got plain=$want")
@@ -125,9 +125,11 @@ class Wave155Spec extends SparkSpec {
       java.time.ZoneOffset.UTC)
     val us = 1700000000000123L
     Seq[Any](inst, stamp, ldt).foreach { v =>
-      val b = graft.sources.FilterBands.long(Array(EqualTo("ts", v)))
+      val b = graft.sources.FilterBands
+        .of(Array(EqualTo("ts", v)), identity).long
       assert(b == Seq(("ts", us, us)), s"$v → $b")
-      val g = graft.sources.FilterBands.long(Array(GreaterThan("ts", v)))
+      val g = graft.sources.FilterBands
+        .of(Array(GreaterThan("ts", v)), identity).long
       assert(g == Seq(("ts", us + 1, Long.MaxValue)), s"$v → $g")
     }
     // end to end: a pushed timestamp band through the registered source

@@ -4,6 +4,7 @@ import java.nio.file.Files
 
 import graft.operators.ManifestTable
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.sources.EqualTo
 
 /** Round-11 wave 160: bloom-filter file skipping — the equality prune
   * min/max stats cannot express on scattered high-cardinality
@@ -48,8 +49,8 @@ class Wave160Spec extends SparkSpec {
     // exactness: present keys AND absent keys
     val absent = orders.agg(max("o_custkey")).head().getLong(0) + 999999
     (keys.take(5) :+ absent).foreach { k =>
-      val got = ManifestTable.readPrunedBloomEq(spark, root, 2,
-        orders.schema, "o_custkey", k).count()
+      val got = ManifestTable.readPruned(spark, root, 2,
+        orders.schema, Seq(EqualTo("o_custkey", k))).count()
       val want = orders.filter(col("o_custkey") === k).count()
       assert(got == want, s"key $k: bloom=$got plain=$want")
     }
@@ -84,8 +85,8 @@ class Wave160Spec extends SparkSpec {
       s"bitset-less files must always be admitted: $newFiles vs $adm")
     // exactness survives a compaction (new names, no bitsets)
     val v4 = ManifestTable.compact(spark, root, v3, df.schema, 2)
-    val got = ManifestTable.readPrunedBloomEq(spark, root, v4,
-      df.schema, "u", probe).count()
+    val got = ManifestTable.readPruned(spark, root, v4,
+      df.schema, Seq(EqualTo("u", probe))).count()
     val want = ManifestTable.read(spark, root, v4, df.schema)
       .filter(col("u") === probe).count()
     assert(got == want && want > 0, s"post-compact: bloom=$got plain=$want")

@@ -55,8 +55,9 @@ class Wave161Spec extends SparkSpec {
       s"disjoint decimal band must skip the segment read: $segsRead")
     // pushed decimal filters reach the V1 admission (plan level)
     import org.apache.spark.sql.sources.GreaterThanOrEqual
-    val viaFilter = graft.sources.FilterBands.dec(Array(
-      GreaterThanOrEqual("o_price_dec", new java.math.BigDecimal("50000.00"))))
+    val viaFilter = graft.sources.FilterBands.of(Array(
+      GreaterThanOrEqual("o_price_dec", new java.math.BigDecimal("50000.00"))),
+      identity).dec
     assert(viaFilter.nonEmpty &&
       viaFilter.head._2 == Some(BigDecimal("50000.00")) &&
       viaFilter.head._3.isEmpty,
@@ -64,8 +65,9 @@ class Wave161Spec extends SparkSpec {
     // exactness: pruned reader == plain filter
     val schema = org.apache.spark.sql.types.StructType.fromDDL(
       "o_orderkey BIGINT, o_custkey BIGINT, o_price_dec DECIMAL(12,2)")
-    val got = ManifestTable.readPrunedDec(spark, root, 1, schema,
-      "o_price_dec", BigDecimal("50000.00"), BigDecimal("80000.00")).count()
+    val got = ManifestTable.readPruned(spark, root, 1, schema,
+      between(("o_price_dec", BigDecimal("50000.00"),
+        BigDecimal("80000.00")))).count()
     val want = Tables.table(spark, sfDir, "orders")
       .filter(col("o_totalprice").cast("decimal(12,2)")
         .between(new java.math.BigDecimal("50000.00"),

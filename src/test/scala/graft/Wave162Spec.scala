@@ -9,7 +9,7 @@ import org.apache.spark.sql.graft.bridge
 
 /** Round-11 wave 162 — the closing adversarial-review fixes:
   *
-  *  - readPrunedBloomEq carries the DV guard every pruned reader has
+  *  - readPruned on a bloom equality carries the DV guard
   *  - double admission normalizes ±0.0 (Spark records bounds under
   *    SQL ordering where -0.0 == 0.0; raw Double.compare would
   *    falsely prove disjointness and skip matching rows)
@@ -38,8 +38,9 @@ class Wave162Spec extends SparkSpec {
     ManifestTable.buildBloomIndex(spark, root, df.schema, "k")
     ManifestTable.deleteMOR(root, spark.range(0, 5).selectExpr("id AS k"))
     val e2 = intercept[IllegalArgumentException] {
-      ManifestTable.readPrunedBloomEq(spark, root,
-        ManifestTable.latestVersion(root), df.schema, "k", 3L)
+      ManifestTable.readPruned(spark, root,
+        ManifestTable.latestVersion(root), df.schema,
+        Seq(org.apache.spark.sql.sources.EqualTo("k", 3L)))
     }
     assert(e2.getMessage.contains("deletion vectors"), e2.getMessage)
   }

@@ -17,7 +17,7 @@ import org.apache.spark.sql.types.StructType
   *  - appendCommitF recomputes meta per publish attempt
   *  - mergeRewrite's extraMetaOf folds the evolved schema against the
   *    winning parent (a concurrent widening survives a merge)
-  *  - FilterBands.dec uses open intervals — a recorded decimal bound
+  *  - decimal filter bands use open intervals — a recorded decimal bound
   *    wider than the old "9"*40 sentinel is ADMITTED, not pruned
   *  - commitCheckpointBatch re-checks the batch ledger inside the
   *    publish retry (Complete-mode sink replay)
@@ -118,13 +118,13 @@ class Wave163Spec extends SparkSpec {
     // admission must stay a superset admit for any of it
     val wide = FileEntry("f.parquet", Nil, Nil, Nil,
       Seq("p" -> (BigDecimal("1e41"), BigDecimal("2e41"))))
-    val gt = graft.sources.FilterBands.dec(
-      Array(GreaterThan("p", new java.math.BigDecimal("5"))))
+    val gt = graft.sources.FilterBands.of(
+      Array(GreaterThan("p", new java.math.BigDecimal("5"))), identity).dec
     assert(gt == Seq(("p", Some(BigDecimal(5)), None)))
     assert(wide.mayContainDecOpt("p", gt.head._2, gt.head._3),
       "p > 5 must admit a file whose band sits above the old sentinel")
-    val lt = graft.sources.FilterBands.dec(
-      Array(LessThan("p", new java.math.BigDecimal("5"))))
+    val lt = graft.sources.FilterBands.of(
+      Array(LessThan("p", new java.math.BigDecimal("5"))), identity).dec
     assert(!wide.mayContainDecOpt("p", lt.head._2, lt.head._3),
       "p < 5 is genuinely disjoint from [1e41, 2e41] — still prunes")
   }

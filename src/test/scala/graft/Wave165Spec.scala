@@ -63,8 +63,8 @@ class Wave165Spec extends SparkSpec {
     val probes = Seq(0L, (7L * 2654435761L) % 5000L, 2100L * 7 % 5000,
       4999999L)
     probes.foreach { p =>
-      val got = ManifestTable.readPrunedBloomEq(spark, root, v4,
-        df.schema, "u", p).count()
+      val got = ManifestTable.readPruned(spark, root, v4,
+        df.schema, Seq(org.apache.spark.sql.sources.EqualTo("u", p))).count()
       val want = ManifestTable.read(spark, root, v4, df.schema)
         .filter(col("u") === p).count()
       assert(got == want, s"probe $p: bloom=$got plain=$want")
