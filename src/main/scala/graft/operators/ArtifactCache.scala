@@ -57,8 +57,11 @@ object Scratch {
 
 object ArtifactCache {
 
-  /** Fingerprint of the inputs an artifact derives from. */
-  private def fingerprint(sources: Seq[String]): String = {
+  /** Fingerprint of the inputs an artifact derives from: the name of
+    * each source, and the length and mtime of each regular file, listing
+    * one directory level (a directory source feeds its children).
+    */
+  private[graft] def fingerprint(sources: Seq[String]): String = {
     val md = java.security.MessageDigest.getInstance("SHA-256")
     sources.sorted.foreach { s =>
       val p = Paths.get(s)
@@ -85,10 +88,14 @@ object ArtifactCache {
   /** Generalization for custom layouts (e.g. a partitionBy index
     * write): the callback writes the artifact to the given staging
     * path; publication/fallback semantics are identical to [[apply]].
+    * A published root never changes, so its schema (partition columns
+    * included) is resolved once, by [[graft.Tables.schemaOf]].
     */
   def withWriter(spark: SparkSession, cacheName: String,
-      sources: Seq[String])(write: String => Unit): DataFrame =
-    spark.read.parquet(path(cacheName, sources)(write))
+      sources: Seq[String])(write: String => Unit): DataFrame = {
+    val root = path(cacheName, sources)(write)
+    spark.read.schema(graft.Tables.schemaOf(spark, root)).parquet(root)
+  }
 
   /** Format-agnostic variant: publishes the artifact and returns the
     * directory to read (text/csv/json roundtrip sources read it with

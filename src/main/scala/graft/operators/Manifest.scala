@@ -469,17 +469,36 @@ trait ManifestLog { self: ManifestData with ManifestMutations
   /** Header fields + body lines of ONE manifest file, unresolved. */
   private[operators] def manifestOf(root: Path, version: Int)
       : (Int, Map[String, String], Seq[String]) = {
+    val lines = scala.jdk.CollectionConverters.ListHasAsScala(
+      Files.readAllLines(manifestFile(root, version))).asScala
+    val kv = parseHeader(root, version, lines.headOption)
+    (kv.getOrElse("parent", "0").toInt, kv,
+      lines.drop(1).filter(_.nonEmpty).toSeq)
+  }
+
+  /** Header fields of ONE manifest file, reading only its first line:
+    * the header is O(1) while a text checkpoint's body is O(live files).
+    */
+  private[operators] def headerOf(root: Path, version: Int)
+      : Map[String, String] = {
+    val r = Files.newBufferedReader(manifestFile(root, version))
+    val head = try Option(r.readLine()) finally r.close()
+    parseHeader(root, version, head)
+  }
+
+  private def manifestFile(root: Path, version: Int): Path = {
     val f = manifestDir(root).resolve(name(version))
     if (!Files.exists(f))
       throw new IllegalStateException(s"manifest v$version is absent — " +
         "expired by log retention (expireManifests) or never committed")
-    val lines = scala.jdk.CollectionConverters.ListHasAsScala(
-      Files.readAllLines(f)).asScala
-    require(lines.nonEmpty && lines.head.startsWith(
-      s"# graft-manifest version=$version "),
+    f
+  }
+
+  private def parseHeader(root: Path, version: Int, head: Option[String])
+      : Map[String, String] = {
+    require(head.exists(_.startsWith(s"# graft-manifest version=$version ")),
       s"corrupt manifest for v$version")
-    val toks = lines.head.split(' ').drop(2)
-    val kv = toks.flatMap(_.split("=", 2) match {
+    val kv = head.get.split(' ').drop(2).flatMap(_.split("=", 2) match {
       case Array(k, v) => Some(k -> v)
       case _ => None
     }).toMap
@@ -487,8 +506,7 @@ trait ManifestLog { self: ManifestData with ManifestMutations
     // committed marker is absent is a crash residue — the reader
     // completes it (roll-forward) before the resolution proceeds
     kv.get("txn").foreach(id => ensureTxnVisible(root, id, kv.get("txnlog")))
-    (kv.getOrElse("parent", "0").toInt, kv,
-      lines.drop(1).filter(_.nonEmpty).toSeq)
+    kv
   }
 
   /** The RESOLVED full entry-line list of a version: a checkpoint
@@ -835,7 +853,7 @@ trait ManifestLog { self: ManifestData with ManifestMutations
     * `# graft-manifest version=K parent=P [k=v ...]`.
     */
   def headerMeta(root: Path, version: Int): Map[String, String] =
-    (manifestOf(root, version)._2 -- Seq("version", "parent"))
+    (headerOf(root, version) -- Seq("version", "parent"))
       // an explicit EMPTY colmap= token means "mapping cleared" (it
       // blocks inheritance at commit time, round 10) — API consumers
       // see it as no mapping at all
@@ -1317,7 +1335,7 @@ trait ManifestLog { self: ManifestData with ManifestMutations
       // LATEST header). renameColumn/dropColumn write colmap=
       // explicitly — even when empty — to CLEAR an inherited mapping.
       val inheritedEvo = {
-        lazy val pm = manifestOf(root, parent)._2
+        lazy val pm = headerOf(root, parent)
         Seq("schema", "colmap", "ptrans", "ptransprev", "bloom").flatMap { k =>
           if (parent == 0 || meta0.split(' ').exists(_.startsWith(k + "=")))
             None
@@ -1328,7 +1346,7 @@ trait ManifestLog { self: ManifestData with ManifestMutations
         .filter(_.nonEmpty).mkString(" ")
       val parentDepth =
         if (parent == 0) -1
-        else manifestOf(root, parent)._2.get("depth").map(_.toInt).getOrElse(0)
+        else headerOf(root, parent).get("depth").map(_.toInt).getOrElse(0)
       val full = checkpoint || parent == 0 ||
         parentDepth + 1 >= CheckpointEvery
       val (kindMeta, bodyLines) =

@@ -1321,10 +1321,10 @@ trait ManifestMutations { self: ManifestLog with ManifestData
     // parent-linked, so walk until a non-delta manifest; one read per
     // hop)
     var base = keepFrom
-    var m = manifestOf(root, base)
-    while (m._2.contains("kind")) {
-      base = m._1
-      m = manifestOf(root, base)
+    var m = headerOf(root, base)
+    while (m.contains("kind")) {
+      base = m.getOrElse("parent", "0").toInt
+      m = headerOf(root, base)
     }
     val d = manifestDir(root)
     // listing, not the firstVersion..base range: a crashed previous

@@ -4,6 +4,7 @@ import java.nio.file.{Files, Paths}
 import java.util.concurrent.{Callable, CountDownLatch, Executors, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.IntegerType
 
 /** ArtifactCache: fingerprint keying, build-once semantics, and
   * staleness behavior when a source fixture changes.
@@ -91,5 +92,25 @@ class ArtifactCacheSpec extends SparkSpec {
       assert(Files.exists(root.resolve("_SUCCESS")) &&
         Files.exists(root.resolve("part-0")), s"$root is not the complete build")
     } finally pool.shutdownNow()
+  }
+
+  test("a partitioned withWriter layout keeps its inferred partition types and resolves its schema once") {
+    val dir = freshSource(40)
+    def readIt() = operators.ArtifactCache.withWriter(spark, "acspec_parts",
+      Seq(s"$dir/src.parquet")) { out =>
+      spark.read.parquet(s"$dir/src.parquet")
+        .withColumn("bucket", (col("id") % 4).cast("int"))
+        .write.partitionBy("bucket").mode("overwrite").parquet(out)
+    }
+    val first = readIt()
+    val root = operators.ArtifactCache.path("acspec_parts",
+      Seq(s"$dir/src.parquet"))(_ => sys.error("published root rebuilt"))
+    assert(first.schema == spark.read.parquet(root).schema)
+    assert(first.schema("bucket").dataType == IntegerType)
+    assert(jobs(readIt()) == 0)
+    val one = readIt().filter(col("bucket") === 1)
+    assert(one.count() == 10)
+    assert("PartitionFilters: \\[[^\\]]*bucket".r.findFirstIn(plan(one)).isDefined,
+      "the bucket filter is no longer a partition filter")
   }
 }

@@ -28,6 +28,10 @@ abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
         org.apache.spark.sql.sources.LessThanOrEqual(c, hi))
     }
 
+  /** Spark jobs started by `body` (see [[org.apache.spark.graft.Jobs]]). */
+  def jobs(body: => Unit): Int =
+    org.apache.spark.graft.Jobs.count(spark.sparkContext)(body)
+
   /** The formatted physical plan, for pushdown/broadcast assertions. */
   def plan(df: DataFrame): String = df.queryExecution.explainString(
     org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
