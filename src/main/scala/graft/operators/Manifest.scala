@@ -354,11 +354,9 @@ trait ManifestLog { self: ManifestData with ManifestMutations
   private[operators] def manifestDir(root: Path) = root.resolve("_manifests")
   private[operators] def name(v: Int) = f"v$v%05d.txt"
 
-  /** Writer nonce for staged-file batch prefixes: pid + thread alone
-    * is NOT unique across two writes from one thread — the second
-    * write's stage() would silently REPLACE the first's committed
-    * data files (same target names) before its own commit even runs.
-    * The counter makes every stage batch name JVM-unique.
+  /** JVM-unique writer nonce for manifest-side file names (segments,
+    * bloom sidecars, hint temp files): pid + thread alone is NOT
+    * unique across two writes from one thread; the counter is.
     */
   private val writeNonce = new java.util.concurrent.atomic.AtomicLong(0)
   private[operators] def nonce(): String =
@@ -951,21 +949,14 @@ trait ManifestLog { self: ManifestData with ManifestMutations
       dblCols: Seq[String] = Nil, decCols: Seq[String] = Nil): Int = {
     if (committedBatchesCached(root).contains(batchId))
       return latestVersion(root)
-    // batch prefix carries a writer nonce: two RACING replays of the
-    // same batch (the top check can't see an in-flight twin) must not
-    // stage into one path and clobber each other mid-write — each gets
-    // private file names, the ledger picks one commit, and the loser's
-    // orphans stay invisible (vacuum fodder), the uuid-named-files
-    // discipline of the real formats. Stats columns make the sink
+    // two RACING replays of the same batch (the top check can't see an
+    // in-flight twin) stage under private names ([[stage]]'s per-call
+    // nonce): the ledger picks one commit, and the loser's orphans
+    // stay invisible (vacuum fodder). Stats columns make the sink
     // write stats-carrying lines, so a streamed table composes with
     // the stats consumers (readPruned / mergeCoW / optimizeSmall).
-    val batch = s"b$batchId${nonce()}"
-    val added =
-      if (longCols.isEmpty && strCols.isEmpty && dblCols.isEmpty &&
-          decCols.isEmpty)
-        stage(df, root, batch)
-      else stageWithTypedStats(df, root, batch, longCols, strCols,
-        dblCols, decCols)
+    val added = stage(df, root, s"b$batchId", longCols, strCols, dblCols,
+      decCols)
     commitOpsF(root, _ => s"batch=$batchId") { parent =>
       if (committedBatchesCached(root).contains(batchId)) None
       else Some((added, Nil)) // O(|batch|) delta commit

@@ -1,6 +1,6 @@
 package graft.operators
 
-import java.nio.file.{Files, Path, StandardCopyOption}
+import java.nio.file.{Files, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.sources.{Filter, GreaterThanOrEqual, LessThanOrEqual}
@@ -15,190 +15,98 @@ import org.apache.spark.sql.types.StructType
 trait ManifestData { self: ManifestLog with ManifestMutations
     with ManifestTxn with ManifestBloom =>
 
-  /** Stage a DataFrame as immutable data files under data/ with a
-    * caller-chosen batch prefix; returns the relative paths (NOT yet
-    * visible to readers — only a commit references them).
+  /** Stage a DataFrame as immutable data files under data/ and return
+    * their manifest entry lines (NOT yet visible to readers — only a
+    * commit references them). One task per input partition writes one
+    * file; a partition with no rows writes none, so an empty frame
+    * stages nothing. The names start with `batch` plus a fresh per-call
+    * nonce, so no call can overwrite another's files.
+    *
+    * The task folds EXACT min/max for the named stats columns while
+    * the rows stream through, and the entry line records them
+    * (`path\tc:min:max,...`); with no stats columns it is the bare
+    * path. A column whose values are all null records no bounds.
+    *  - `longCols`: BIGINT, TIMESTAMP or TIMESTAMP_NTZ — timestamps
+    *    record as epoch-micros longs ([[FileEntry.microsOf]] translates
+    *    pushed literals the same way at plan time);
+    *  - `strCols`: strings, UTF-8 byte order;
+    *  - `dblCols`: doubles, Double.compare order (NaN greatest);
+    *  - `decCols`: decimals, scale-exact;
+    *  - `binCols`: binaries as 16-byte truncated prefixes
+    *    ([[FileEntry.binLower]]/[[FileEntry.binUpper]]).
+    * The caller range-lays the frame first (repartitionByRange on the
+    * key) so each file covers a narrow band and the stats prune. A
+    * stats column of the wrong type is refused before any task runs;
+    * a failed job deletes every file the call wrote, then rethrows.
     */
-  def stage(df: DataFrame, root: Path, batch: String): Seq[String] = {
-    val tmp = root.resolve(s".stage_$batch")
-    df.write.mode("overwrite").parquet(tmp.toString)
-    val data = root.resolve("data")
-    Files.createDirectories(data)
-    val s = Files.list(tmp)
-    val parts =
-      try s.map[Path](p => p).toArray.toSeq.collect {
-        case p: Path if p.getFileName.toString.endsWith(".parquet") => p
-      }.sortBy(_.getFileName.toString)
-      finally s.close()
-    val rel = parts.zipWithIndex.map { case (p, i) =>
-      val n = s"$batch-$i.parquet"
-      Files.move(p, data.resolve(n), StandardCopyOption.REPLACE_EXISTING)
-      n
-    }
-    // remove the staging leftovers (_SUCCESS etc.)
-    val rest = Files.list(tmp)
-    try rest.forEach(p => Files.delete(p)) finally rest.close()
-    Files.delete(tmp)
-    rel
-  }
+  def stage(df: DataFrame, root: Path, batch: String,
+      longCols: Seq[String] = Nil, strCols: Seq[String] = Nil,
+      dblCols: Seq[String] = Nil, decCols: Seq[String] = Nil,
+      binCols: Seq[String] = Nil): Seq[String] =
+    stageFiles(df, root, batch, roll = false, longCols, strCols, dblCols,
+      decCols, binCols)
 
-  /** [[stage]] plus EXACT per-file min/max stats on `keyCol`, encoded
-    * into the manifest lines (`path\tmin\tmax`). The caller range-lays
-    * the frame first (repartitionByRange on the key) so each file
-    * covers a narrow key band and the stats actually prune; measured
-    * post-write, the bounds are exact, not estimates.
+  /** [[stage]], optionally ROLLING to a new file whenever the `__pt*`
+    * tuple changes: only for a frame sorted by that tuple within each
+    * partition (the layout-aware [[optimizeSmall]]) — on an unsorted
+    * frame rolling would split each partition into one file per run.
     */
-  def stageWithStats(df: DataFrame, root: Path, batch: String,
-      keyCol: String): Seq[String] =
-    stageWithStats(df, root, batch, Seq(keyCol))
-
-  /** Multi-column form: record exact min/max for EVERY column in
-    * `statCols` (all long-typed), one stats pass per staged file —
-    * the per-column stats map real formats carry, so [[readPruned]] /
-    * [[mergeCoW]] can prune on any recorded column, not one hard-wired
-    * key (r8 VERDICT item 2).
-    */
-  def stageWithStats(df: DataFrame, root: Path, batch: String,
-      statCols: Seq[String]): Seq[String] =
-    stageWithTypedStats(df, root, batch, statCols, Nil)
-
-  /** Typed form: exact per-file min/max for `longCols` (long-typed)
-    * AND `strCols` (string-typed) in one stats pass per staged file —
-    * string bounds being the wave-132 closure of the format's
-    * long-only-stats gap, so prunes compose across numeric and string
-    * predicates the way real formats' per-column stats do.
-    */
-  def stageWithTypedStats(df: DataFrame, root: Path, batch: String,
-      longCols: Seq[String], strCols: Seq[String]): Seq[String] =
-    stageWithTypedStats(df, root, batch, longCols, strCols, Nil)
-
-  /** Full typed form (round 11 — r10-VERDICT task 4 adds DOUBLE
-    * bounds): `longCols` may also name TIMESTAMP/TIMESTAMP_NTZ
-    * columns, whose bounds record as epoch-micros LONGs (the
-    * µs-timestamp convention [[FileEntry.microsOf]] — pushed
-    * timestamp literals translate through the same function at plan
-    * time, so the prune is bit-consistent); `dblCols` record
-    * double bounds under Double.compare total order.
-    */
-  def stageWithTypedStats(df: DataFrame, root: Path, batch: String,
-      longCols: Seq[String], strCols: Seq[String], dblCols: Seq[String])
-      : Seq[String] =
-    stageWithTypedStats(df, root, batch, longCols, strCols, dblCols, Nil)
-
-  /** Four-type form (round 11, wave 161 adds DECIMAL bounds — money
-    * columns in real schemas are decimal, not double; bounds record
-    * scale-exact via toPlainString and compare numerically).
-    */
-  def stageWithTypedStats(df: DataFrame, root: Path, batch: String,
-      longCols: Seq[String], strCols: Seq[String], dblCols: Seq[String],
-      decCols: Seq[String]): Seq[String] =
-    stageWithTypedStats(df, root, batch, longCols, strCols, dblCols,
-      decCols, Nil)
-
-  /** Five-type form (round 12 adds BINARY bounds — the last boundless
-    * leaf type; media-blob/digest columns record TRUNCATED 16-byte
-    * prefixes in the Iceberg truncate(16) shape, so a 10 MB blob
-    * costs ~32 B of manifest regardless of size —
-    * [[FileEntry.binLower]]/[[FileEntry.binUpper]]).
-    */
-  def stageWithTypedStats(df: DataFrame, root: Path, batch: String,
-      longCols: Seq[String], strCols: Seq[String], dblCols: Seq[String],
-      decCols: Seq[String], binCols: Seq[String]): Seq[String] = {
-    require(longCols.nonEmpty || strCols.nonEmpty || dblCols.nonEmpty ||
-      decCols.nonEmpty || binCols.nonEmpty,
-      "stageWithTypedStats needs at least one stats column")
-    val spark = df.sparkSession
-    val staged = stage(df, root, batch)
-    if (staged.isEmpty) return Nil
-    // ONE stats job for the whole commit (r13 opt; the ManifestBloom
-    // one-job-build discipline): the old shape ran one driver-sequential
-    // Spark job PER staged file — O(files) jobs per commit, which at a
-    // 10k-file production commit is 10k scheduler round-trips for work
-    // that is a single grouped aggregate. Group rows by their source
-    // file instead: one scan of the staged set, one agg, O(files) rows
-    // back. Emptiness is still decided by ROWS — an empty file yields
-    // no group at all and is deleted below, and per-column null bounds
-    // are still simply not recorded (the only-skip-provably-empty rule).
-    val aggs = count(lit(1)) +:
-      (longCols ++ strCols ++ dblCols ++ decCols ++ binCols)
-        .flatMap(c => Seq(min(c), max(c)))
-    val data = root.resolve("data")
-    val byFile = spark.read.schema(df.schema)
-      .parquet(staged.map(r => data.resolve(r).toString): _*)
-      .groupBy(input_file_name().as("__graft_file"))
-      .agg(aggs.head, aggs.tail: _*)
-      .collect()
-      .map { full =>
-        // input_file_name() is a URI string: decode %-escapes via URI
-        // (URLDecoder is for query strings — it would also turn a
-        // literal '+' in a caller-chosen batch name into a space, and
-        // throws on a bare '%'), then take the basename
-        val p = new java.net.URI(full.getString(0)).getPath
-        val name = p.substring(p.lastIndexOf('/') + 1)
-        // drop the grouping column so every downstream index matches
-        // the historical single-file agg row layout exactly
-        name -> org.apache.spark.sql.Row.fromSeq(full.toSeq.drop(1))
-      }.toMap
-    // a lookup MISS below means "empty file" and deletes the staged
-    // file — that is only sound if every grouped name matched a staged
-    // rel, so refuse to proceed when decoding produced an unknown name
-    // (r13 ADVICE: a silent mismatch would drop that file's rows from
-    // the commit instead of failing)
-    val unmatched = byFile.keySet.diff(staged.toSet)
-    // nothing of the batch is committed yet: delete what stage() wrote,
-    // so a refused commit leaves no orphaned files in data/
-    if (unmatched.nonEmpty)
-      staged.foreach(rel => Files.deleteIfExists(data.resolve(rel)))
-    require(unmatched.isEmpty,
-      s"stats rows reference non-staged files (name decode mismatch): " +
-        unmatched.mkString(", "))
-    staged.flatMap { rel =>
-      val mmOpt = byFile.get(rel)
-      if (mmOpt.isEmpty) { // empty partition's file: no rows → not live
-        Files.delete(root.resolve("data").resolve(rel)); None
-      } else {
-        val mm = mmOpt.get
-        def longAt(i: Int): Long = FileEntry.microsOf(mm.get(i)).getOrElse(
-          throw new IllegalArgumentException(
-            s"stats column is neither BIGINT nor a timestamp: ${mm.get(i)}"))
-        val off = 1 + 2 * longCols.size
-        val doff = off + 2 * strCols.size
-        Some(FileEntry(rel,
-          longCols.zipWithIndex.flatMap { case (c, i) =>
-            if (mm.isNullAt(1 + 2 * i)) None
-            else Some(c -> (longAt(1 + 2 * i), longAt(2 + 2 * i))) },
-          strCols.zipWithIndex.flatMap { case (c, i) =>
-            if (mm.isNullAt(off + 2 * i)) None
-            else Some(c ->
-              (mm.getString(off + 2 * i), mm.getString(off + 2 * i + 1)))
-          },
-          dblCols.zipWithIndex.flatMap { case (c, i) =>
-            if (mm.isNullAt(doff + 2 * i)) None
-            else Some(c ->
-              (mm.getDouble(doff + 2 * i), mm.getDouble(doff + 2 * i + 1)))
-          },
-          {
-            val coff = doff + 2 * dblCols.size
-            decCols.zipWithIndex.flatMap { case (c, i) =>
-              if (mm.isNullAt(coff + 2 * i)) None
-              else Some(c ->
-                (BigDecimal(mm.getDecimal(coff + 2 * i)),
-                 BigDecimal(mm.getDecimal(coff + 2 * i + 1))))
-            }
-          },
-          {
-            val boff = doff + 2 * dblCols.size + 2 * decCols.size
-            binCols.zipWithIndex.flatMap { case (c, i) =>
-              if (mm.isNullAt(boff + 2 * i)) None
-              else Some(c ->
-                ((FileEntry.binLower(mm.getAs[Array[Byte]](boff + 2 * i)),
-                  FileEntry.binUpper(mm.getAs[Array[Byte]](boff + 2 * i + 1)))))
-            }
-          }).line)
+  private[operators] def stageFiles(df: DataFrame, root: Path,
+      batch: String, roll: Boolean, longCols: Seq[String],
+      strCols: Seq[String], dblCols: Seq[String], decCols: Seq[String],
+      binCols: Seq[String]): Seq[String] = {
+    graft.sources.ManifestDataWriter.checkStatsTypes(df.schema, longCols,
+      strCols, dblCols, decCols, binCols)
+    val name = s"$batch-" +
+      java.util.UUID.randomUUID().toString.replace("-", "").take(16)
+    val base = root.resolve("data").resolve(name)
+    Files.createDirectories(base.getParent)
+    val factory = graft.sources.ManifestWriterFactory(root.toString,
+      org.apache.spark.sql.graft.bridge.parquetWriteKit(df.sparkSession,
+        df.schema), df.schema, Nil, longCols, strCols, dblCols, decCols,
+      binCols, name, roll)
+    val sc = df.sparkSession.sparkContext
+    org.apache.spark.sql.graft.bridge.executeRows(df, "stage") { rows =>
+      val lines = new Array[Seq[String]](rows.getNumPartitions)
+      val job = sc.submitJob(
+        rows.mapPartitionsWithIndex(factory.writePartition),
+        (it: Iterator[String]) => it.toVector, rows.partitions.indices,
+        (i: Int, ls: Vector[String]) => lines(i) = ls, ())
+      try {
+        scala.concurrent.Await.result(job,
+          scala.concurrent.duration.Duration.Inf)
+        lines.toSeq.flatten
+      } catch {
+        case e: Throwable =>
+          // tasks still running when the job failed may yet finish a
+          // file: wait for them, then delete every file of this call
+          job.cancel()
+          awaitTasksEnded(sc, job.jobIds)
+          val prefix = base.getFileName.toString + "-"
+          try {
+            val s = Files.list(base.getParent)
+            try s.filter(_.getFileName.toString.startsWith(prefix))
+              .forEach(p => Files.deleteIfExists(p): Unit)
+            finally s.close()
+          } catch { case c: java.io.IOException => e.addSuppressed(c) }
+          throw e
       }
     }
   }
 
+  /** Block until no task of `jobIds` is still running (at most 60 s).
+    * The status tracker applies events in order, so once it reports a
+    * job ended it has seen every task start of that job.
+    */
+  private def awaitTasksEnded(sc: org.apache.spark.SparkContext,
+      jobIds: Seq[Int]): Unit = {
+    val st = sc.statusTracker
+    def running = jobIds.flatMap(st.getJobInfo).exists(j =>
+      j.status == org.apache.spark.JobExecutionStatus.RUNNING ||
+        j.stageIds.flatMap(st.getStageInfo(_)).exists(_.numActiveTasks > 0))
+    val deadline = System.nanoTime() + 60L * 1000000000L
+    while (running && System.nanoTime() < deadline) Thread.sleep(10)
+  }
 
   /** HIDDEN PARTITIONING (round 10 — r9-VERDICT task 6, Iceberg's
     * headline feature restated): a table records VALUE TRANSFORMS in
@@ -420,7 +328,7 @@ trait ManifestData { self: ManifestLog with ManifestMutations
       d.withColumn(t.statName, t.exprCol))
     val laid = withT.repartitionByRange(math.max(1, files),
       transforms.map(t => col(t.statName)): _*)
-    stageWithTypedStats(laid, root, batch,
+    stage(laid, root, batch,
       (statsCols ++ transforms.map(_.statName)).distinct, strCols)
   }
 

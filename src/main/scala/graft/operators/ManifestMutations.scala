@@ -43,10 +43,10 @@ trait ManifestMutations { self: ManifestLog with ManifestData
     val dblCols = hit.flatMap(_.dblStats.map(_._1)).distinct
     val decCols = hit.flatMap(_.decStats.map(_._1)).distinct
     val binCols = hit.flatMap(_.binStats.map(_._1)).distinct
-    val rewritten = stageWithTypedStats(
+    val rewritten = stage(
       restoreTransformCols(root, from, transform(affected))
         .repartitionByRange(math.max(1, hit.size), col(keyCol)),
-      root, s"merge$from${nonce()}", statCols, strCols, dblCols, decCols,
+      root, s"merge$from", statCols, strCols, dblCols, decCols,
       binCols)
     // SERIALIZABLE-WRITER commit: recompute the conflict checks against
     // whatever parent WINS the publish race, aborting on BOTH conflict
@@ -202,10 +202,10 @@ trait ManifestMutations { self: ManifestLog with ManifestData
     val dblColsU = hit.flatMap(_.dblStats.map(_._1)).distinct
     val decColsU = hit.flatMap(_.decStats.map(_._1)).distinct
     val binColsU = hit.flatMap(_.binStats.map(_._1)).distinct
-    val rewritten = stageWithTypedStats(
+    val rewritten = stage(
       restoreTransformCols(root, from, replacement)
         .repartitionByRange(math.max(1, hit.size + 1), col(keyCol)),
-      root, s"upsert$from${nonce()}", statCols, strColsU, dblColsU,
+      root, s"upsert$from", statCols, strColsU, dblColsU,
       decColsU, binColsU)
     val fromPaths = fromEntries.map(_.path).toSet
     commitOpsF(root, _ => s"upsert=v$from") { parent =>
@@ -282,10 +282,10 @@ trait ManifestMutations { self: ManifestLog with ManifestData
     val dblCols = hit.flatMap(_.dblStats.map(_._1)).distinct
     val decCols = hit.flatMap(_.decStats.map(_._1)).distinct
     val binCols = hit.flatMap(_.binStats.map(_._1)).distinct
-    val rewritten = stageWithTypedStats(
+    val rewritten = stage(
       restoreTransformCols(root, from, replacement)
         .repartitionByRange(math.max(1, hit.size + 1), col(keyCol)),
-      root, s"mrg$from${nonce()}", statCols, strCols, dblCols, decCols,
+      root, s"mrg$from", statCols, strCols, dblCols, decCols,
       binCols)
     val fromPaths = fromEntries.map(_.path).toSet
     // extraMetaOf rides THE merge commit itself — schema evolution on
@@ -344,13 +344,8 @@ trait ManifestMutations { self: ManifestLog with ManifestData
     }
     // a stats-less table (no statsColumns property) still rewrites —
     // there is just no coverage to preserve
-    val rewritten =
-      if (statCols.isEmpty && strCols.isEmpty && dblCols.isEmpty &&
-          decCols.isEmpty && binCols.isEmpty)
-        stage(laid, root, s"$batchTag$from${nonce()}")
-      else stageWithTypedStats(laid,
-        root, s"$batchTag$from${nonce()}", statCols, strCols, dblCols,
-        decCols, binCols)
+    val rewritten = stage(laid, root, s"$batchTag$from",
+      statCols, strCols, dblCols, decCols, binCols)
     commitOpsF(root, _ => opMeta) { parent =>
       val curPaths = entriesFor(root, parent).map(_.path).toSet
       if (!hit.forall(e => curPaths.contains(e.path)))
@@ -425,12 +420,8 @@ trait ManifestMutations { self: ManifestLog with ManifestData
     val aligned = newData.select(schema.fieldNames.map(col).toSeq: _*)
     // the inserted half: its own stats (table properties) + layout
     val insLaid = restoreTransformCols(root, from, aligned)
-    val insNames: Seq[String] =
-      if (statsCols.isEmpty && strStatsCols.isEmpty &&
-          dblStatsCols.isEmpty && decStatsCols.isEmpty)
-        stage(insLaid, root, s"rwi$from${nonce()}")
-      else stageWithTypedStats(insLaid, root, s"rwi$from${nonce()}",
-        statsCols, strStatsCols, dblStatsCols, decStatsCols, Nil)
+    val insNames = stage(insLaid, root, s"rwi$from",
+      statsCols, strStatsCols, dblStatsCols, decStatsCols)
     spliceReplaceWhere(spark, root, schema, cond, insNames,
       longBands, strBands, dblBands, decBands)
   }
@@ -488,10 +479,7 @@ trait ManifestMutations { self: ManifestLog with ManifestData
           math.max(1, hit.size), col(k))
         case None => kept
       }
-      if (sc.isEmpty && sSc.isEmpty && dSc.isEmpty && decSc.isEmpty &&
-          binSc.isEmpty) stage(laid, root, s"rws$from${nonce()}")
-      else stageWithTypedStats(laid, root, s"rws$from${nonce()}",
-        sc, sSc, dSc, decSc, binSc)
+      stage(laid, root, s"rws$from", sc, sSc, dSc, decSc, binSc)
     }
     commitOpsF(root, _ => s"replacewhere=v$from") { parent =>
       val curPaths = entriesFor(root, parent).map(_.path).toSet
@@ -574,10 +562,7 @@ trait ManifestMutations { self: ManifestLog with ManifestData
           math.max(1, rewriteSet.size), col(k))
         case None => kept
       }
-      if (sc.isEmpty && sSc.isEmpty && dSc.isEmpty && decSc.isEmpty &&
-          binSc.isEmpty) stage(laid, root, s"dyo$from${nonce()}")
-      else stageWithTypedStats(laid, root, s"dyo$from${nonce()}",
-        sc, sSc, dSc, decSc, binSc)
+      stage(laid, root, s"dyo$from", sc, sSc, dSc, decSc, binSc)
     }
     commitOpsF(root, _ => s"dynoverwrite=v$from") { parent =>
       val curPaths = entriesFor(root, parent).map(_.path).toSet
@@ -638,8 +623,7 @@ trait ManifestMutations { self: ManifestLog with ManifestData
     *
     * LAYOUT-AWARE since round 13 (wave 190): on a transform-laid
     * table the packed set is clustered by (transform tuple, key) and
-    * staged through the ROLLING writer
-    * ([[graft.sources.ManifestRollingStage]]) — every packed file
+    * staged ROLLING on that tuple ([[stageFiles]]) — every packed file
     * stays value-exact, so a storage-partitioned layout SURVIVES its
     * own maintenance (the old key-only range layout straddled
     * transform values and silently degraded SPJ to exchanges).
@@ -665,18 +649,14 @@ trait ManifestMutations { self: ManifestLog with ManifestData
       (small.map(e => Files.size(data.resolve(e.path))).sum
         / smallBytes).toInt)
     val ts = partTransforms(root, from)
-    val packed =
+    val laid =
       if (ts.nonEmpty) {
         val sortCols = (ts.map(_.statName) :+ keyCol).map(col)
-        graft.sources.ManifestRollingStage.stage(
-          restored.repartitionByRange(target, sortCols: _*)
-            .sortWithinPartitions(sortCols: _*),
-          root.toString, s"opt$from${nonce()}",
-          statCols, strCols, dblCols, decCols, binCols)
-      } else stageWithTypedStats(
-        restored.repartitionByRange(target, col(keyCol)),
-        root, s"opt$from${nonce()}", statCols, strCols, dblCols,
-        decCols, binCols)
+        restored.repartitionByRange(target, sortCols: _*)
+          .sortWithinPartitions(sortCols: _*)
+      } else restored.repartitionByRange(target, col(keyCol))
+    val packed = stageFiles(laid, root, s"opt$from",
+      roll = ts.nonEmpty, statCols, strCols, dblCols, decCols, binCols)
     commitOpsF(root, _ => s"optimize=v$from") { parent =>
       val curPaths = entriesFor(root, parent).map(_.path).toSet
       if (!small.forall(e => curPaths.contains(e.path)))
@@ -767,11 +747,11 @@ trait ManifestMutations { self: ManifestLog with ManifestData
     val dblCols = live.flatMap(_.dblStats.map(_._1)).distinct
     val decCols = live.flatMap(_.decStats.map(_._1)).distinct
     val binCols = live.flatMap(_.binStats.map(_._1)).distinct
-    val rewritten = stageWithTypedStats(
+    val rewritten = stage(
       restoreTransformCols(root, from, df.withColumn("__z", z)
         .repartitionByRange(math.max(1, targetFiles), col("__z"))
         .sortWithinPartitions("__z").drop("__z")),
-      root, s"zorder$from${nonce()}", statCols, strCols, dblCols,
+      root, s"zorder$from", statCols, strCols, dblCols,
       decCols, binCols)
     commitOpsF(root, _ => s"zorder=v$from") { parent =>
       val curPaths = entriesFor(root, parent).map(_.path).toSet
@@ -796,7 +776,7 @@ trait ManifestMutations { self: ManifestLog with ManifestData
     * publish retry.
     */
   def deleteMOR(root: Path, deletedKeys: DataFrame): Int = {
-    val rel = stage(deletedKeys.coalesce(1), root, s"dv${nonce()}")
+    val rel = stage(deletedKeys.coalesce(1), root, s"dv")
     // a zero-op DELTA commit: the live set is the parent's verbatim,
     // so the manifest body is empty and only the header's dv= list
     // changes — write cost O(|deleted keys|), the whole point of MOR
@@ -857,7 +837,7 @@ trait ManifestMutations { self: ManifestLog with ManifestData
     // sorted by src so the native scan's executor-side per-file slice
     // reads prune pages via the parquet column index (round 13)
     val rel = stage(sidecar.coalesce(1).sortWithinPartitions("src"),
-      root, s"dvp${nonce()}")
+      root, s"dvp")
     commitOpsF(root, parent => "dvp=" +
         ((if (parent == 0) Nil else scopedDvsFor(root, parent)) ++ rel)
           .mkString(",")) { parent =>
@@ -933,7 +913,7 @@ trait ManifestMutations { self: ManifestLog with ManifestData
       .collect().map(_.getString(0)).toSet
     if (touched.isEmpty) return from
     val rel = stage(positions.coalesce(1).sortWithinPartitions("src", "pos"),
-      root, s"dvr${nonce()}")
+      root, s"dvr")
     commitOpsF(root, parent => "dvr=" +
         ((if (parent == 0) Nil else rowDvsFor(root, parent)) ++ rel)
           .mkString(",")) { parent =>
@@ -1008,11 +988,11 @@ trait ManifestMutations { self: ManifestLog with ManifestData
     require(dvsFor(root, from).isEmpty && scopedDvsFor(root, from).isEmpty,
       "mixed vector kinds on one snapshot — compact the others first")
     val live = entriesFor(root, from)
-    commit(root, stageWithTypedStats(
+    commit(root, stage(
       restoreTransformCols(root, from,
           readMORPositional(spark, root, from, schema))
         .repartitionByRange(math.max(1, targetFiles), col(keyCol)),
-      root, s"cmorp$from${nonce()}",
+      root, s"cmorp$from",
       (keyCol +: live.flatMap(_.stats.map(_._1))).distinct,
       live.flatMap(_.strStats.map(_._1)).distinct,
       live.flatMap(_.dblStats.map(_._1)).distinct,
@@ -1030,11 +1010,11 @@ trait ManifestMutations { self: ManifestLog with ManifestData
       "mixed vector kinds on one snapshot — compact the others first")
     // preserve recorded stat coverage of BOTH kinds (non-narrowing)
     val live = entriesFor(root, from)
-    commit(root, stageWithTypedStats(
+    commit(root, stage(
       restoreTransformCols(root, from,
           readMORScoped(spark, root, from, schema, keyCol))
         .repartitionByRange(math.max(1, targetFiles), col(keyCol)),
-      root, s"cmors$from${nonce()}",
+      root, s"cmors$from",
       (keyCol +: live.flatMap(_.stats.map(_._1))).distinct,
       live.flatMap(_.strStats.map(_._1)).distinct,
       live.flatMap(_.dblStats.map(_._1)).distinct,
@@ -1084,11 +1064,11 @@ trait ManifestMutations { self: ManifestLog with ManifestData
     // this is the ONE commit that must NOT inherit the parent's list.
     // Stat coverage of BOTH kinds is preserved (non-narrowing).
     val live = entriesFor(root, from)
-    commit(root, stageWithTypedStats(
+    commit(root, stage(
       restoreTransformCols(root, from,
           readMOR(spark, root, from, schema, keyCol))
         .repartitionByRange(math.max(1, targetFiles), col(keyCol)),
-      root, s"cmor$from${nonce()}",
+      root, s"cmor$from",
       (keyCol +: live.flatMap(_.stats.map(_._1))).distinct,
       live.flatMap(_.strStats.map(_._1)).distinct,
       live.flatMap(_.dblStats.map(_._1)).distinct,
@@ -1357,13 +1337,9 @@ trait ManifestMutations { self: ManifestLog with ManifestData
   def compact(spark: SparkSession, root: Path, from: Int,
       schema: StructType, targetFiles: Int): Int = {
     requireNoScopedDvs(root, from, "compact")
-    // batch prefix carries the writer nonce like every other rewrite
-    // path (r8 ADVICE): a repeated or concurrent compaction of the
-    // same `from` must stage under private names, not REPLACE_EXISTING
-    // the earlier run's already-committed data files.
     val rewritten = stage(
       read(spark, root, from, schema).repartition(targetFiles),
-      root, s"compact$from${nonce()}")
+      root, s"compact$from")
     commit(root, rewritten)
   }
 }

@@ -62,7 +62,7 @@ object ManifestOps extends QueryGroup {
       // two stat columns: o_orderkey is the range-layout key (tight
       // per-file bands), o_custkey rides along so multi-predicate
       // prunes have a second recorded column to consult
-      val v1 = ManifestTable.commit(root, ManifestTable.stageWithStats(
+      val v1 = ManifestTable.commit(root, ManifestTable.stage(
         orders.repartitionByRange(8, col("o_orderkey")),
         root, "base", Seq("o_orderkey", "o_custkey")))
       val mx = orders.agg(max("o_orderkey")).head().getLong(0)
@@ -98,9 +98,9 @@ object ManifestOps extends QueryGroup {
       val root = Paths.get(staging)
       Files.createDirectories(root)
       val orders = Tables.table(spark, dir, "orders")
-      val v1 = ManifestTable.commit(root, ManifestTable.stageWithStats(
+      val v1 = ManifestTable.commit(root, ManifestTable.stage(
         orders.repartitionByRange(8, col("o_orderkey")),
-        root, "base", "o_orderkey"))
+        root, "base", Seq("o_orderkey")))
       val mx = orders.agg(max("o_orderkey")).head().getLong(0)
       val upd = orders
         .filter(col("o_orderkey") % 17 === 0 && col("o_orderkey") < mx / 4)
@@ -138,7 +138,7 @@ object ManifestOps extends QueryGroup {
       val root = Paths.get(staging)
       Files.createDirectories(root)
       val orders = Tables.table(spark, dir, "orders")
-      val v1 = ManifestTable.commit(root, ManifestTable.stageWithTypedStats(
+      val v1 = ManifestTable.commit(root, ManifestTable.stage(
         orders.repartitionByRange(8, col("o_totalprice")),
         root, "base", Seq("o_orderkey"), Nil, Seq("o_totalprice")),
         s"schema=${ManifestTable.schemaMeta(orders.schema)}")
@@ -164,7 +164,7 @@ object ManifestOps extends QueryGroup {
       val orders = Tables.table(spark, dir, "orders")
       val df = orders.select(col("o_orderkey"), col("o_custkey"),
         col("o_totalprice").cast("decimal(12,2)").as("o_price_dec"))
-      val v1 = ManifestTable.commit(root, ManifestTable.stageWithTypedStats(
+      val v1 = ManifestTable.commit(root, ManifestTable.stage(
         df.repartitionByRange(8, col("o_price_dec")),
         root, "base", Seq("o_orderkey"), Nil, Nil, Seq("o_price_dec")),
         s"schema=${ManifestTable.schemaMeta(df.schema)}")
@@ -192,7 +192,7 @@ object ManifestOps extends QueryGroup {
       val docs = Tables.table(spark, dir, "documents")
       val df = docs.select(col("doc_id"), col("n_chars"),
         unhex(md5(col("text"))).as("blob"))
-      val v1 = ManifestTable.commit(root, ManifestTable.stageWithTypedStats(
+      val v1 = ManifestTable.commit(root, ManifestTable.stage(
         df.repartitionByRange(8, col("blob")),
         root, "base", Seq("doc_id"), Nil, Nil, Nil, Seq("blob")),
         s"schema=${ManifestTable.schemaMeta(df.schema)}")
@@ -219,7 +219,7 @@ object ManifestOps extends QueryGroup {
       val df = events.select(col("event_id"), col("user_id"),
         col("event_type"), col("value"),
         timestamp_micros(Tables.tsUsCol(events)).as("ts"))
-      val v1 = ManifestTable.commit(root, ManifestTable.stageWithTypedStats(
+      val v1 = ManifestTable.commit(root, ManifestTable.stage(
         df.repartitionByRange(8, col("ts")),
         root, "base", Seq("event_id", "ts"), Nil, Nil),
         s"schema=${ManifestTable.schemaMeta(df.schema)}")
@@ -244,7 +244,7 @@ object ManifestOps extends QueryGroup {
       val root = Paths.get(staging)
       Files.createDirectories(root)
       val orders = Tables.table(spark, dir, "orders")
-      val v1 = ManifestTable.commit(root, ManifestTable.stageWithStats(
+      val v1 = ManifestTable.commit(root, ManifestTable.stage(
         orders.repartitionByRange(8, col("o_orderkey")),
         root, "base", Seq("o_orderkey", "o_custkey")),
         s"schema=${ManifestTable.schemaMeta(orders.schema)}")
@@ -279,21 +279,21 @@ object ManifestOps extends QueryGroup {
       Files.createDirectories(a); Files.createDirectories(b)
       val orders = Tables.table(spark, dir, "orders")
       val mx = orders.agg(max("o_orderkey")).head().getLong(0)
-      ManifestTable.commit(a, ManifestTable.stageWithStats(
+      ManifestTable.commit(a, ManifestTable.stage(
         orders.filter(col("o_orderkey") % 2 === 0)
           .repartitionByRange(4, col("o_orderkey")),
-        a, "base", "o_orderkey"),
+        a, "base", Seq("o_orderkey")),
         s"schema=${ManifestTable.schemaMeta(orders.schema)}")
       ManifestTable.commit(b, Nil,
         s"schema=${ManifestTable.schemaMeta(orders.schema)}")
-      val addsA = ManifestTable.stageWithStats(
+      val addsA = ManifestTable.stage(
         orders.filter(col("o_orderkey") % 2 === 1)
           .repartitionByRange(2, col("o_orderkey")),
-        a, "odd", "o_orderkey")
-      val addsB = ManifestTable.stageWithStats(
+        a, "odd", Seq("o_orderkey"))
+      val addsB = ManifestTable.stage(
         orders.filter(col("o_orderkey") > mx / 2)
           .repartitionByRange(2, col("o_orderkey")),
-        b, "audit", "o_orderkey")
+        b, "audit", Seq("o_orderkey"))
       val vs = ManifestTable.commitTxn(Seq(
         (a, addsA, ""), (b, addsB, "")))
       require(vs == Seq(2, 2), s"txn landed at $vs, expected (2,2)")
@@ -321,9 +321,9 @@ object ManifestOps extends QueryGroup {
       val (a, b) = (base.resolve("a"), base.resolve("b"))
       Files.createDirectories(a); Files.createDirectories(b)
       val orders = Tables.table(spark, dir, "orders")
-      ManifestTable.commit(a, ManifestTable.stageWithStats(
+      ManifestTable.commit(a, ManifestTable.stage(
         orders.repartitionByRange(8, col("o_orderkey")),
-        a, "base", "o_orderkey"),
+        a, "base", Seq("o_orderkey")),
         s"schema=${ManifestTable.schemaMeta(orders.schema)}")
       ManifestTable.commit(b, Nil,
         s"schema=${ManifestTable.schemaMeta(orders.schema)}")
@@ -338,14 +338,14 @@ object ManifestOps extends QueryGroup {
       val replacement = touched.withColumn("o_totalprice",
         when(col("o_orderkey") < q, col("o_totalprice") + lit(2.0d))
           .otherwise(col("o_totalprice")))
-      val addsA = ManifestTable.stageWithStats(
+      val addsA = ManifestTable.stage(
         replacement.repartitionByRange(math.max(1, hit.size),
-          col("o_orderkey")), a, "cow", "o_orderkey")
+          col("o_orderkey")), a, "cow", Seq("o_orderkey"))
       // the append half: the band's PRE-image as the audit trail
-      val addsB = ManifestTable.stageWithStats(
+      val addsB = ManifestTable.stage(
         orders.filter(col("o_orderkey") < q)
           .repartitionByRange(2, col("o_orderkey")),
-        b, "audit", "o_orderkey")
+        b, "audit", Seq("o_orderkey"))
       val vs = ManifestTable.commitTxnCow(Seq(
         (a, addsA, hit.map(_.path), ""), (b, addsB, Nil, "")))
       require(vs == Seq(2, 2), s"cow txn landed at $vs, expected (2,2)")
@@ -372,9 +372,9 @@ object ManifestOps extends QueryGroup {
       val root = Paths.get(staging)
       Files.createDirectories(root)
       val orders = Tables.table(spark, dir, "orders")
-      val v1 = ManifestTable.commit(root, ManifestTable.stageWithStats(
+      val v1 = ManifestTable.commit(root, ManifestTable.stage(
         orders.repartitionByRange(8, col("o_orderkey")),
-        root, "base", "o_orderkey"))
+        root, "base", Seq("o_orderkey")))
       val dupRel = ManifestTable.stage(
         orders.filter(col("o_orderkey") % 7 === 0).coalesce(1),
         root, "dup")
@@ -465,7 +465,7 @@ object ManifestOps extends QueryGroup {
       val root = Paths.get(staging)
       Files.createDirectories(root)
       val orders = Tables.table(spark, dir, "orders")
-      val v1 = ManifestTable.commit(root, ManifestTable.stageWithStats(
+      val v1 = ManifestTable.commit(root, ManifestTable.stage(
         orders.repartitionByRange(8, col("o_orderkey")),
         root, "base", Seq("o_orderkey", "o_custkey")))
       val v2 = ManifestTable.optimizeZorder(spark, root, v1, orders.schema,
@@ -492,12 +492,12 @@ object ManifestOps extends QueryGroup {
       Files.createDirectories(root)
       val part = Tables.table(spark, dir, "part")
       val v1 = ManifestTable.appendCommit(root,
-        ManifestTable.stageWithTypedStats(
+        ManifestTable.stage(
           part.filter(col("p_partkey") % 2 === 0)
             .repartitionByRange(6, col("p_brand")),
           root, "base", Seq("p_partkey"), Seq("p_brand")))
       val v2 = ManifestTable.appendCommit(root,
-        ManifestTable.stageWithTypedStats(
+        ManifestTable.stage(
           part.filter(col("p_partkey") % 2 === 1)
             .repartitionByRange(3, col("p_brand")),
           root, "odd", Seq("p_partkey"), Seq("p_brand")))
@@ -647,9 +647,9 @@ object ManifestOps extends QueryGroup {
       val root = Paths.get(staging)
       Files.createDirectories(root)
       val orders = Tables.table(spark, dir, "orders")
-      val v1 = ManifestTable.commit(root, ManifestTable.stageWithStats(
+      val v1 = ManifestTable.commit(root, ManifestTable.stage(
         orders.repartitionByRange(4, col("o_orderkey")),
-        root, "base", "o_orderkey"))
+        root, "base", Seq("o_orderkey")))
       val v2 = ManifestTable.deleteMOR(root,
         orders.filter(col("o_orderkey") % 13 === 0).select("o_orderkey"))
       val v3 = ManifestTable.compactMOR(spark, root, v2, orders.schema,
@@ -675,9 +675,9 @@ object ManifestOps extends QueryGroup {
       val root = Paths.get(staging)
       Files.createDirectories(root)
       val orders = Tables.table(spark, dir, "orders")
-      val v1 = ManifestTable.commit(root, ManifestTable.stageWithStats(
+      val v1 = ManifestTable.commit(root, ManifestTable.stage(
         orders.repartitionByRange(4, col("o_orderkey")),
-        root, "base", "o_orderkey"))
+        root, "base", Seq("o_orderkey")))
       val v2 = ManifestTable.deleteMORScoped(spark, root,
         orders.filter(col("o_orderkey") % 13 === 0).select("o_orderkey"),
         "o_orderkey", orders.schema)

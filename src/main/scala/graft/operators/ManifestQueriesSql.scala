@@ -31,9 +31,9 @@ private[graft] object ManifestSqlOps {
       val root = Paths.get(staging)
       Files.createDirectories(root)
       val orders = Tables.table(spark, dir, "orders")
-      val v1 = ManifestTable.commit(root, ManifestTable.stageWithStats(
+      val v1 = ManifestTable.commit(root, ManifestTable.stage(
         orders.repartitionByRange(8, col("o_orderkey")),
-        root, "base", "o_orderkey"))
+        root, "base", Seq("o_orderkey")))
       val mx = orders.agg(max("o_orderkey")).head().getLong(0)
       val upd = orders
         .filter(col("o_orderkey") % 17 === 0 && col("o_orderkey") < mx / 4)
@@ -75,9 +75,9 @@ private[graft] object ManifestSqlOps {
       val root = Paths.get(staging)
       Files.createDirectories(root)
       val orders = Tables.table(spark, dir, "orders")
-      val v1 = ManifestTable.commit(root, ManifestTable.stageWithStats(
+      val v1 = ManifestTable.commit(root, ManifestTable.stage(
         orders.repartitionByRange(8, col("o_orderkey")),
-        root, "base", "o_orderkey"))
+        root, "base", Seq("o_orderkey")))
       val mx = orders.agg(max("o_orderkey")).head().getLong(0)
       org.apache.spark.sql.graft.bridge.addStrategy(spark,
         graft.plans.ManifestDmlStrategy)
@@ -115,9 +115,9 @@ private[graft] object ManifestSqlOps {
       val root = Paths.get(staging)
       Files.createDirectories(root)
       val orders = Tables.table(spark, dir, "orders")
-      val v1 = ManifestTable.commit(root, ManifestTable.stageWithStats(
+      val v1 = ManifestTable.commit(root, ManifestTable.stage(
         orders.repartitionByRange(16, col("o_orderkey")),
-        root, "base", "o_orderkey"),
+        root, "base", Seq("o_orderkey")),
         s"schema=${ManifestTable.schemaMeta(orders.schema)}")
       graft.sources.ManifestV2Table.writeProps(root,
         Map("statsColumns" -> "o_orderkey"))
@@ -155,14 +155,14 @@ private[graft] object ManifestSqlOps {
       val (src, dst) = (base.resolve("src"), base.resolve("dst"))
       Files.createDirectories(src); Files.createDirectories(dst)
       val orders = Tables.table(spark, dir, "orders")
-      ManifestTable.commit(src, ManifestTable.stageWithStats(
+      ManifestTable.commit(src, ManifestTable.stage(
         orders.filter(col("o_orderkey") % 2 === 0)
           .repartitionByRange(4, col("o_orderkey")),
-        src, "evens", "o_orderkey"),
+        src, "evens", Seq("o_orderkey")),
         s"schema=${ManifestTable.schemaMeta(orders.schema)}")
-      ManifestTable.commit(src, ManifestTable.stageWithStats(
+      ManifestTable.commit(src, ManifestTable.stage(
         orders.repartitionByRange(8, col("o_orderkey")),
-        src, "full", "o_orderkey"),
+        src, "full", Seq("o_orderkey")),
         s"schema=${ManifestTable.schemaMeta(orders.schema)}")
       ManifestTable.commit(dst, Nil,
         s"schema=${ManifestTable.schemaMeta(orders.schema)}")
@@ -198,7 +198,7 @@ private[graft] object ManifestSqlOps {
       val root = Paths.get(staging)
       Files.createDirectories(root)
       val orders = Tables.table(spark, dir, "orders")
-      val v1 = ManifestTable.commit(root, ManifestTable.stageWithStats(
+      val v1 = ManifestTable.commit(root, ManifestTable.stage(
         orders.repartitionByRange(16, col("o_custkey")),
         root, "base", Seq("o_custkey", "o_orderkey")),
         s"schema=${ManifestTable.schemaMeta(orders.schema)}")
@@ -229,9 +229,9 @@ private[graft] object ManifestSqlOps {
       val root = Paths.get(staging)
       Files.createDirectories(root)
       val orders = Tables.table(spark, dir, "orders")
-      val v1 = ManifestTable.commit(root, ManifestTable.stageWithStats(
+      val v1 = ManifestTable.commit(root, ManifestTable.stage(
         orders.repartitionByRange(8, col("o_orderkey")),
-        root, "base", "o_orderkey"))
+        root, "base", Seq("o_orderkey")))
       val mx = orders.agg(max("o_orderkey")).head().getLong(0)
       // matched candidates: %13 keys in the bottom half, price+10
       // images; insert candidates: %29 keys shifted above max
@@ -278,9 +278,9 @@ private[graft] object ManifestSqlOps {
       val root = Paths.get(staging)
       Files.createDirectories(root)
       val orders = Tables.table(spark, dir, "orders")
-      val v1 = ManifestTable.commit(root, ManifestTable.stageWithStats(
+      val v1 = ManifestTable.commit(root, ManifestTable.stage(
         orders.repartitionByRange(8, col("o_orderkey")),
-        root, "base", "o_orderkey"))
+        root, "base", Seq("o_orderkey")))
       val mx = orders.agg(max("o_orderkey")).head().getLong(0)
       orders.filter(col("o_orderkey") < mx / 4)
         .withColumn("o_totalprice", col("o_totalprice") + lit(2.0d))
@@ -316,9 +316,9 @@ private[graft] object ManifestSqlOps {
       val root = Paths.get(staging)
       Files.createDirectories(root)
       val orders = Tables.table(spark, dir, "orders")
-      val v1 = ManifestTable.commit(root, ManifestTable.stageWithStats(
+      val v1 = ManifestTable.commit(root, ManifestTable.stage(
         orders.repartitionByRange(8, col("o_orderkey")),
-        root, "base", "o_orderkey"),
+        root, "base", Seq("o_orderkey")),
         s"schema=${ManifestTable.schemaMeta(orders.schema)}")
       val mx = orders.agg(max("o_orderkey")).head().getLong(0)
       val cat = sqlCatalog(spark)
@@ -348,9 +348,9 @@ private[graft] object ManifestSqlOps {
       val root = Paths.get(staging)
       Files.createDirectories(root)
       val orders = Tables.table(spark, dir, "orders")
-      val v1 = ManifestTable.commit(root, ManifestTable.stageWithStats(
+      val v1 = ManifestTable.commit(root, ManifestTable.stage(
         orders.repartitionByRange(4, col("o_orderkey")),
-        root, "base", "o_orderkey"),
+        root, "base", Seq("o_orderkey")),
         s"schema=${ManifestTable.schemaMeta(orders.schema)}")
       val v2 = ManifestTable.deleteMOR(root,
         orders.filter(col("o_orderkey") % 13 === 0).select("o_orderkey"))

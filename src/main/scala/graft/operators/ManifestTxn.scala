@@ -59,7 +59,7 @@ trait ManifestTxn { self: ManifestLog with ManifestData
   /** One atomic append commit across `participants` — (table root,
     * staged entry lines, extra per-table commit meta). Returns the
     * version each table landed at. The caller must have staged the
-    * data files already ([[stage]] / [[stageWithTypedStats]]); a crash
+    * data files already ([[stage]]); a crash
     * anywhere after the intent lands is rolled FORWARD by the next
     * reader of any participant.
     */

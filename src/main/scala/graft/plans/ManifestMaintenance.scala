@@ -313,17 +313,12 @@ case class CallProcedureCommand(proc: String, args: Seq[String])
         val entries = ManifestTable.entriesFor(src, latest)
         val df = spark.read.format("graft-manifest")
           .option("path", src.toString).load()
-        val batch = "repl" + java.util.UUID.randomUUID().toString.take(8)
         val (lc, sc, dc, cc) = (
           statCols(entries.flatMap(_.stats.map(_._1))),
           statCols(entries.flatMap(_.strStats.map(_._1))),
           statCols(entries.flatMap(_.dblStats.map(_._1))),
           statCols(entries.flatMap(_.decStats.map(_._1))))
-        val staged =
-          if (lc.isEmpty && sc.isEmpty && dc.isEmpty && cc.isEmpty)
-            ManifestTable.stage(df, dst, batch)
-          else ManifestTable.stageWithTypedStats(df, dst, batch,
-            lc, sc, dc, cc)
+        val staged = ManifestTable.stage(df, dst, "repl", lc, sc, dc, cc)
         val v = ManifestTable.commit(dst, staged,
           s"schema=${ManifestTable.schemaMeta(logical)}")
         Seq(Row(v.toString))

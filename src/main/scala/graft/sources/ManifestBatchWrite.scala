@@ -21,9 +21,9 @@ import org.apache.spark.sql.types._
   *     bridge (verified against this Spark: the optimized plan
   *     carried the exchange, the executed V1 write did not).
   *  2. Per-file stats are computed IN THE WRITER TASK while the rows
-  *     stream through — the staging path re-reads every staged file
-  *     with a driver-looped min/max job, an O(files) planning tax the
-  *     real formats don't pay.
+  *     stream through ([[ManifestDataWriter]], the same writer
+  *     [[ManifestTable.stage]] runs) — no second scan of the written
+  *     files.
   *
   * Each task writes ROLLING parquet files (wave 190): rows arrive
   * transform-sorted (the write's required ordering), and the writer
@@ -102,7 +102,7 @@ private[graft] class ManifestBatchWrite(rootStr: String, replace: Boolean,
     // object, so tasks re-parse locally instead of serializing them
     ManifestWriterFactory(rootStr, kit, writeSchema,
       transforms.map(_.meta), statsCols, strCols, dblCols, decCols,
-      Nil, nonce)
+      Nil, nonce, roll = true)
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val root = Paths.get(rootStr)
@@ -158,33 +158,55 @@ private[graft] case class ManifestWriterFactory(rootStr: String,
     kit: bridge.ParquetWriteKit, writeSchema: StructType,
     transformMetas: Seq[String],
     statsCols: Seq[String], strCols: Seq[String], dblCols: Seq[String],
-    decCols: Seq[String], binCols: Seq[String], nonce: String)
-    extends DataWriterFactory {
+    decCols: Seq[String], binCols: Seq[String], nonce: String,
+    roll: Boolean) extends DataWriterFactory {
 
   override def createWriter(partitionId: Int, taskId: Long)
-      : DataWriter[InternalRow] =
+      : ManifestDataWriter =
     new ManifestDataWriter(rootStr, kit, writeSchema,
       transformMetas.map(ManifestTable.parseTransform),
       statsCols, strCols, dblCols, decCols, binCols,
-      s"$nonce-p$partitionId-$taskId", partitionId, taskId)
+      s"$nonce-p$partitionId-$taskId", partitionId, taskId, roll)
+
+  /** The task body of [[ManifestTable.stage]]: write one partition's
+    * rows and return their entry lines. A partition with no rows
+    * writes no file; a failing task deletes the files it opened.
+    */
+  def writePartition(partitionId: Int, rows: Iterator[InternalRow])
+      : Iterator[String] =
+    if (!rows.hasNext) Iterator.empty
+    else {
+      val w = createWriter(partitionId,
+        org.apache.spark.TaskContext.get().taskAttemptId())
+      try {
+        rows.foreach(w.write)
+        w.commit().lines.iterator
+      } catch {
+        case e: Throwable => w.abort(); throw e
+      }
+    }
 }
 
-/** One task's ROLLING writer: lazily opens a file on the first row
-  * (empty partitions commit nothing), appends the transform columns
-  * per row, folds min/max for the stats columns as rows stream
-  * through, and ROLLS to a fresh file whenever the transform tuple
-  * changes — value-exact files by construction under the write's
-  * transform-sorted required ordering. When `transforms` is empty but
-  * `writeSchema` already CARRIES `__pt*` columns (the layout-aware
-  * OPTIMIZE path, [[ManifestRollingStage]]), the tuple is read from
-  * those columns instead of being computed.
+/** One task's writer: lazily opens a file on the first row (empty
+  * partitions commit nothing), appends the transform columns per row
+  * and folds min/max for the stats columns as rows stream through.
+  * With `roll` it opens a fresh file whenever the layout tuple changes
+  * — value-exact files by construction when the rows arrive sorted by
+  * that tuple (the native write's required ordering, the layout-aware
+  * OPTIMIZE). The tuple is the computed transform values, or, when
+  * `transforms` is empty, the `__pt*` columns `writeSchema` already
+  * carries. Without `roll` each task writes one file.
   */
 private[graft] class ManifestDataWriter(rootStr: String,
     kit: bridge.ParquetWriteKit, writeSchema: StructType,
     transforms: Seq[ManifestTable.PartTransform],
     statsCols: Seq[String], strCols: Seq[String], dblCols: Seq[String],
     decCols: Seq[String], binCols: Seq[String], fileBase: String,
-    partitionId: Int, taskId: Long) extends DataWriter[InternalRow] {
+    partitionId: Int, taskId: Long, roll: Boolean)
+    extends DataWriter[InternalRow] {
+
+  ManifestDataWriter.checkStatsTypes(writeSchema, statsCols, strCols,
+    dblCols, decCols, binCols)
 
   // per-row transform evaluation, bit-identical to the stage-time
   // Column expressions (bucket of NULL = pmod(xxhash64-of-nothing) =
@@ -205,21 +227,13 @@ private[graft] class ManifestDataWriter(rootStr: String,
   // precomputed-layout mode: roll on the __pt* columns the frame
   // already carries (the OPTIMIZE path)
   private val preTupleOrds: Seq[Int] =
-    if (transforms.nonEmpty) Nil
+    if (!roll || transforms.nonEmpty) Nil
     else writeSchema.fields.zipWithIndex.collect {
       case (f, i) if f.name.startsWith("__pt") => i
     }.toSeq
 
   private abstract class Tracker(val col: String, val ord: Int) {
     def observe(row: InternalRow): Unit
-  }
-  private def ordOf(c: String, want: DataType => Boolean, label: String)
-      : Int = {
-    val i = writeSchema.fieldIndex(c)
-    require(want(writeSchema.fields(i).dataType),
-      s"stats column '$c' is not $label-typed in the write schema " +
-      s"(${writeSchema.fields(i).dataType.simpleString})")
-    i
   }
   private class LongTracker(c: String, o: Int) extends Tracker(c, o) {
     var lo = Long.MaxValue; var hi = Long.MinValue; var seen = false
@@ -282,23 +296,15 @@ private[graft] class ManifestDataWriter(rootStr: String,
 
   private def mkTrackers(): (Seq[LongTracker], Seq[StrTracker],
       Seq[DblTracker], Seq[DecTracker], Seq[BinTracker]) = (
-    statsCols.map(c => new LongTracker(c,
-      ordOf(c, dt => dt == LongType || dt == TimestampType ||
-        dt == TimestampNTZType, "BIGINT/timestamp"))),
-    strCols.map(c => new StrTracker(c, ordOf(c, _ == StringType,
-      "STRING"))),
-    dblCols.map(c => new DblTracker(c, ordOf(c, _ == DoubleType,
-      "DOUBLE"))),
+    statsCols.map(c => new LongTracker(c, writeSchema.fieldIndex(c))),
+    strCols.map(c => new StrTracker(c, writeSchema.fieldIndex(c))),
+    dblCols.map(c => new DblTracker(c, writeSchema.fieldIndex(c))),
     decCols.map { c =>
       val i = writeSchema.fieldIndex(c)
-      writeSchema.fields(i).dataType match {
-        case d: DecimalType => new DecTracker(c, i, d.precision, d.scale)
-        case other => throw new IllegalArgumentException(
-          s"stats column '$c' is not DECIMAL-typed (${other.simpleString})")
-      }
+      val d = writeSchema.fields(i).dataType.asInstanceOf[DecimalType]
+      new DecTracker(c, i, d.precision, d.scale)
     },
-    binCols.map(c => new BinTracker(c, ordOf(c, _ == BinaryType,
-      "BINARY"))))
+    binCols.map(c => new BinTracker(c, writeSchema.fieldIndex(c))))
 
   private var writer: bridge.RowFileWriter = null
   private var rows = 0L
@@ -312,13 +318,23 @@ private[graft] class ManifestDataWriter(rootStr: String,
   private val tRow = new GenericInternalRow(transforms.size)
   private val joined = new JoinedRow()
 
+  private def fileAt(name: String) =
+    Paths.get(rootStr).resolve("data").resolve(name)
+
+  // Hadoop's checksummed local file system leaves a `.<name>.crc`
+  // sidecar next to each file; nothing reads it, and vacuum would
+  // count it as an orphan data file
+  private def dropChecksum(name: String): Unit = {
+    val f = fileAt(name)
+    Files.deleteIfExists(
+      f.resolveSibling("." + f.getFileName.toString + ".crc")): Unit
+  }
+
   private def openNext(): Unit = {
     fileName = s"$fileBase-f$fileIdx.parquet"
     fileIdx += 1
     opened += fileName
-    writer = kit.open(
-      Paths.get(rootStr).resolve("data").resolve(fileName).toString,
-      partitionId, taskId)
+    writer = kit.open(fileAt(fileName).toString, partitionId, taskId)
     current = mkTrackers()
     rows = 0L
   }
@@ -326,6 +342,7 @@ private[graft] class ManifestDataWriter(rootStr: String,
   private def closeCurrent(): Unit = if (writer != null) {
     writer.close()
     writer = null
+    dropChecksum(fileName)
     if (rows > 0L) {
       val (lt, st, dt, dct, bt) = current
       done += FileEntry(fileName,
@@ -359,7 +376,7 @@ private[graft] class ManifestDataWriter(rootStr: String,
           else java.lang.Long.valueOf(record.getLong(i)))
       else null
     if (writer == null) openNext()
-    else if (tuple != null && currentTuple != null &&
+    else if (roll && tuple != null && currentTuple != null &&
         tuple != currentTuple) {
       closeCurrent()
       openNext()
@@ -375,7 +392,7 @@ private[graft] class ManifestDataWriter(rootStr: String,
     rows += 1L
   }
 
-  override def commit(): WriterCommitMessage = {
+  override def commit(): ManifestWriteMsg = {
     closeCurrent()
     ManifestWriteMsg(done.toList)
   }
@@ -386,8 +403,7 @@ private[graft] class ManifestDataWriter(rootStr: String,
       writer = null
     }
     opened.foreach { f =>
-      try Files.deleteIfExists(
-        Paths.get(rootStr).resolve("data").resolve(f)): Unit
+      try { Files.deleteIfExists(fileAt(f)); dropChecksum(f) }
       catch { case _: Exception => () }
     }
   }
@@ -395,40 +411,25 @@ private[graft] class ManifestDataWriter(rootStr: String,
   override def close(): Unit = ()
 }
 
-/** Executor-side ROLLING staging for maintenance rewrites (round 13 —
-  * the layout-aware OPTIMIZE): run `df` (which already CARRIES its
-  * `__pt*` layout columns, transform-sorted within partitions)
-  * through [[ManifestDataWriter]]s via `mapPartitions` over the
-  * InternalRow RDD — one rolling writer per partition, value-exact
-  * stats-carrying files, entry lines collected to the driver
-  * (O(files) — the same bytes the manifest itself is). This is the
-  * staging path that makes compaction PRESERVE storage-partitioned
-  * layouts instead of straddling them.
-  */
-private[graft] object ManifestRollingStage {
-  def stage(df: org.apache.spark.sql.DataFrame, rootStr: String,
-      batch: String, statsCols: Seq[String], strCols: Seq[String],
-      dblCols: Seq[String], decCols: Seq[String], binCols: Seq[String])
-      : Seq[String] = {
-    val spark = df.sparkSession
-    val schema = df.schema
-    val kit = bridge.parquetWriteKit(spark, schema)
-    val factory = ManifestWriterFactory(rootStr, kit, schema, Nil,
-      statsCols, strCols, dblCols, decCols, binCols, batch)
-    bridge.internalRows(df).mapPartitionsWithIndex { (pid, it) =>
-      if (it.isEmpty) Iterator.empty
-      else {
-        val w = factory.createWriter(pid, pid.toLong)
-          .asInstanceOf[ManifestDataWriter]
-        try {
-          it.foreach(w.write)
-          w.commit() match {
-            case ManifestWriteMsg(lines) => lines.iterator
-          }
-        } catch {
-          case e: Throwable => w.abort(); throw e
-        }
+private[graft] object ManifestDataWriter {
+  /** Refuse a stats column that is missing from `schema` or whose type
+    * its stats kind cannot record: long bounds take BIGINT and both
+    * timestamp types (epoch micros), the others their own type.
+    */
+  def checkStatsTypes(schema: StructType, longCols: Seq[String],
+      strCols: Seq[String], dblCols: Seq[String], decCols: Seq[String],
+      binCols: Seq[String]): Unit = {
+    def check(cols: Seq[String], label: String)(ok: DataType => Boolean) =
+      cols.foreach { c =>
+        val dt = schema(c).dataType
+        require(ok(dt), s"stats column '$c' is not $label-typed in the " +
+          s"write schema (${dt.simpleString})")
       }
-    }.collect().toSeq
+    check(longCols, "BIGINT/timestamp")(dt => dt == LongType ||
+      dt == TimestampType || dt == TimestampNTZType)
+    check(strCols, "STRING")(_.isInstanceOf[StringType])
+    check(dblCols, "DOUBLE")(_ == DoubleType)
+    check(decCols, "DECIMAL")(_.isInstanceOf[DecimalType])
+    check(binCols, "BINARY")(_ == BinaryType)
   }
 }

@@ -132,9 +132,6 @@ class ManifestSource extends RelationProvider with SchemaRelationProvider
     // predicates prune written tables
     val statsDblCols = colsOf("statsDoubleColumns")
     val statsDecCols = colsOf("statsDecimalColumns")
-    // batch prefixes must be write-unique (the writeNonce discipline:
-    // a repeated prefix REPLACE_EXISTINGs an earlier write's committed
-    // data files) — uuid-named files, like the real formats
     // COLUMN MAPPING (round-10 ADVICE fix): an Append onto a renamed
     // table must stage under PHYSICAL names and carry the parent's
     // colmap= forward, or the mapping-aware read null-fills the
@@ -161,8 +158,7 @@ class ManifestSource extends RelationProvider with SchemaRelationProvider
       "transforms and renamed columns are unsupported — compact and " +
       "recreate, or avoid renaming transform source columns")
     def physName(c: String) = cmap.getOrElse(c, c)
-    def staged(tag: String, mapped: Boolean): Seq[String] = {
-      val batch = tag + java.util.UUID.randomUUID().toString.take(8)
+    def staged(batch: String, mapped: Boolean): Seq[String] = {
       val out = if (mapped && cmap.nonEmpty)
         df.select(df.columns.toSeq.map(c => col(c).as(physName(c))): _*)
       else df
@@ -173,7 +169,7 @@ class ManifestSource extends RelationProvider with SchemaRelationProvider
       // arbitrary proxy for output files): `writeFiles` as a write
       // option or durable table property, else 16 — matching the
       // bucket(16) convention, and harmless for small inserts because
-      // empty staged partitions are dropped at stats time.
+      // an empty partition stages no file.
       val targetFiles = parameters.get("writeFiles")
         .orElse(ManifestV2Table.props(root).get("writeFiles"))
         .map(_.toInt).getOrElse(16)
@@ -187,12 +183,8 @@ class ManifestSource extends RelationProvider with SchemaRelationProvider
         if (mapped) cs.map(physName) else cs
       val allStats = (names(statsCols) ++ transforms.map(_.statName))
         .distinct
-      if (allStats.isEmpty && statsStrCols.isEmpty &&
-          statsDblCols.isEmpty && statsDecCols.isEmpty)
-        ManifestTable.stage(base, root, batch)
-      else ManifestTable.stageWithTypedStats(base, root, batch,
-        allStats, names(statsStrCols), names(statsDblCols),
-        names(statsDecCols))
+      ManifestTable.stage(base, root, batch, allStats,
+        names(statsStrCols), names(statsDblCols), names(statsDecCols))
     }
     val schemaMeta = s"schema=${ManifestTable.schemaMeta(df.schema)}"
     // MERGE-SCHEMA widening (round 11 — r10-VERDICT task 7): an

@@ -199,8 +199,7 @@ private[graft] class ManifestStreamSink(ctx: SQLContext, root: Path,
             .repartitionByRange(math.max(1, targetFiles),
               transforms.map(t => org.apache.spark.sql.functions
                 .col(t.statName)): _*)
-          ManifestTable.stageWithTypedStats(laid, root,
-            s"b$batchId${java.util.UUID.randomUUID().toString.take(8)}",
+          ManifestTable.stage(laid, root, s"b$batchId",
             (longCols ++ transforms.map(_.statName)).distinct,
             strCols, dblCols, decCols)
         }: Unit
@@ -218,13 +217,8 @@ private[graft] class ManifestStreamSink(ctx: SQLContext, root: Path,
       // passed the old outside-the-loop check and both published,
       // breaking the one-commit-per-batch-id ledger invariant).
       if (!ManifestTable.committedBatchesCached(root).contains(batchId)) {
-        val batch = s"b$batchId-c${java.util.UUID.randomUUID().toString.take(8)}"
-        val staged =
-          if (longCols.isEmpty && strCols.isEmpty && dblCols.isEmpty &&
-              decCols.isEmpty)
-            ManifestTable.stage(df, root, batch)
-          else ManifestTable.stageWithTypedStats(df, root, batch,
-            longCols, strCols, dblCols, decCols)
+        val staged = ManifestTable.stage(df, root, s"b$batchId-c",
+          longCols, strCols, dblCols, decCols)
         ManifestTable.commitCheckpointBatch(root, staged, batchId): Unit
       }
     }

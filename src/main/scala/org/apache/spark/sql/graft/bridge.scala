@@ -182,15 +182,20 @@ object bridge {
     new org.apache.spark.util.SerializableConfiguration(
       spark.asInstanceOf[classic.SparkSession].sessionState.newHadoopConf())
 
-  /** The DataFrame's physical `RDD[InternalRow]` (round 13 — the
-    * rolling maintenance stage): `QueryExecution.toRdd` without the
-    * Row conversion tax. Rows may be reused per-partition — consumers
-    * must write/copy eagerly.
+  /** Run `body` on the DataFrame's physical `RDD[InternalRow]`
+    * (`QueryExecution.toRdd`, without the Row conversion tax) as one
+    * SQL execution named `name`, the way `df.write` runs: query
+    * execution listeners and the SQL UI see its plan. Rows may be
+    * reused per-partition — consumers must write/copy eagerly.
     */
-  def internalRows(df: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow] =
-    df.asInstanceOf[classic.Dataset[org.apache.spark.sql.Row]]
-      .queryExecution.toRdd
+  def executeRows[T](df: org.apache.spark.sql.DataFrame, name: String)(
+      body: org.apache.spark.rdd.RDD[
+        org.apache.spark.sql.catalyst.InternalRow] => T): T = {
+    val qe = df.asInstanceOf[classic.Dataset[org.apache.spark.sql.Row]]
+      .queryExecution
+    org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(qe,
+      Some(name))(body(qe.toRdd))
+  }
 
   /** A serializable per-task parquet writer kit (round 13 — the
     * native V2 BatchWrite): `ParquetUtils.prepareWrite` configures the

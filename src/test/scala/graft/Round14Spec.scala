@@ -1,33 +1,38 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Path}
 import graft.operators.ManifestTable
 import org.apache.spark.sql.functions._
 
-/** Round-14 optimization guards: the one-job typed-stats map must key
-  * staged files by a decode that round-trips every legal batch name —
-  * a lookup miss is treated as "empty file" and DELETES the staged
-  * file, so a decode mismatch would silently drop rows from the commit
-  * (r13 ADVICE item 1). URLDecoder turned a literal '+' into a space;
-  * the URI-path decode must not.
+/** Staging guards: every staged file survives whatever characters the
+  * caller's batch name carries, and a staging call that fails leaves
+  * no file of its batch in data/.
   */
 class Round14Spec extends SparkSpec {
 
-  test("stageWithTypedStats keeps every staged file when the batch " +
-    "name contains '+' (URLDecoder would have deleted them as 'empty')") {
-    val root = Files.createTempDirectory("graft_r14_plus")
+  private def dataFiles(root: Path): Seq[Path] = {
+    val data = root.resolve("data")
+    if (!Files.exists(data)) Nil
+    else {
+      val st = Files.walk(data)
+      try st.filter(Files.isRegularFile(_)).toArray.toSeq.map(_.asInstanceOf[Path])
+      finally st.close()
+    }
+  }
+
+  private def stagesEveryFile(batch: String): Unit = {
+    val root = Files.createTempDirectory("graft_r14_name")
     val orders = Tables.table(spark, sfDir, "orders").limit(100)
-    val staged = ManifestTable.stageWithStats(
-      orders.repartition(3), root, "b+1", "o_orderkey")
+    val staged = ManifestTable.stage(
+      orders.repartition(3), root, batch, Seq("o_orderkey"))
     assert(staged.size == 3, s"expected 3 staged files, got $staged")
     val v = ManifestTable.commit(root, staged)
     val entries = ManifestTable.entriesFor(root, v)
     assert(entries.size == 3)
     entries.foreach { e =>
-      assert(e.path.startsWith("b+1-"), s"unexpected staged name ${e.path}")
+      assert(e.path.startsWith(s"$batch-"), s"unexpected staged name ${e.path}")
       assert(Files.exists(root.resolve("data").resolve(e.path)),
-        s"staged file ${e.path} was deleted — decode mismatch treated a " +
-          "non-empty file as empty")
+        s"staged file ${e.path} is missing")
       assert(e.stats.exists(_._1 == "o_orderkey"),
         s"no o_orderkey bounds recorded for ${e.path}")
     }
@@ -36,20 +41,51 @@ class Round14Spec extends SparkSpec {
     assert(back.count() == 100L, "committed rows != staged rows")
   }
 
-  test("a refused stageWithTypedStats commit leaves no staged files in data/") {
-    val root = Files.createTempDirectory("graft_r14_orphan")
-    // a '/' in the batch name stages into data/sub/, while the stats job
-    // names each file by its basename: no stats row matches a staged name
-    Files.createDirectories(root.resolve("data").resolve("sub"))
-    val orders = Tables.table(spark, sfDir, "orders").limit(100)
+  test("stageWithTypedStats keeps every staged file when the batch " +
+    "name contains '+' (URLDecoder would have deleted them as 'empty')") {
+    stagesEveryFile("b+1")
+  }
+
+  test("stage keeps every staged file when the batch name contains '%'") {
+    stagesEveryFile("b%2B1")
+  }
+
+  test("a stats column of the wrong type fails the stage and leaves " +
+    "no file of the batch in data/") {
+    val root = Files.createTempDirectory("graft_r14_type")
+    val df = spark.range(0, 400, 1, 4)
+      .select(col("id").cast("int").as("k"), col("id").as("v"))
     val e = intercept[IllegalArgumentException] {
-      ManifestTable.stageWithStats(
-        orders.repartition(3), root, "sub/b", "o_orderkey")
+      ManifestTable.stage(df, root, "b", Seq("k"))
     }
-    assert(e.getMessage.contains("name decode mismatch"), e.getMessage)
-    val st = Files.walk(root.resolve("data"))
-    val left = try st.filter(Files.isRegularFile(_)).toArray.toSeq
-      finally st.close()
+    val left = dataFiles(root)
     assert(left.isEmpty, s"refused batch left files behind: $left")
+    assert(e.getMessage.contains("'k'"), e.getMessage)
+  }
+
+  test("a task failing on its last row fails the stage and leaves no " +
+    "file of the batch in data/") {
+    val root = Files.createTempDirectory("graft_r14_fail")
+    // an earlier committed batch under the same name must survive
+    val kept = ManifestTable.stage(spark.range(0, 10, 1, 1).toDF("k"),
+      root, "b")
+    ManifestTable.commit(root, kept)
+    // 8 partitions of 100 rows; partition 4's last row (k = 499)
+    // raises, after the tasks of partitions 0-3 have written files
+    val df = spark.range(0, 800, 1, 8).select(
+      when(col("id") === 499L, raise_error(lit("boom")))
+        .otherwise(col("id")).as("k"))
+    val e = intercept[Exception] {
+      ManifestTable.stage(df, root, "b", Seq("k"))
+    }
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("boom")),
+      e.toString)
+    val left = dataFiles(root).map(p =>
+      root.resolve("data").relativize(p).toString)
+    assert(left.toSet == kept.toSet,
+      s"failed batch left files behind: ${left.filterNot(kept.toSet)}")
+    assert(ManifestTable.read(spark, root, 1,
+      spark.range(0).toDF("k").schema).count() == 10L)
   }
 }

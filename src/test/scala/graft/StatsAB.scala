@@ -28,7 +28,7 @@ object StatsAB {
       // (a) shipped one-job path, staging included both sides equally
       val rootA = Files.createTempDirectory("graft_statsab_one")
       var t0 = System.nanoTime()
-      val entries = ManifestTable.stageWithTypedStats(
+      val entries = ManifestTable.stage(
         orders.repartition(nFiles), rootA, "b",
         Seq("o_orderkey", "o_custkey"), Seq("o_orderstatus"))
       val tOne = (System.nanoTime() - t0) / 1e9

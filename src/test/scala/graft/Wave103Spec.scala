@@ -45,8 +45,8 @@ class Wave103Spec extends SparkSpec {
     import spark.implicits._
     val df = spark.range(100).select(col("id").as("k"),
       (col("id") * 3).as("v"))
-    val v1 = ManifestTable.commit(root, ManifestTable.stageWithStats(
-      df.coalesce(1), root, "base", "k"))
+    val v1 = ManifestTable.commit(root, ManifestTable.stage(
+      df.coalesce(1), root, "base", Seq("k")))
     val v2 = ManifestTable.deleteMOR(root,
       df.filter(col("k") < 10).select("k"))
     val v3 = ManifestTable.deleteMOR(root,
@@ -66,8 +66,8 @@ class Wave103Spec extends SparkSpec {
     assert(ManifestTable.read(spark, root, v4, df.schema).count() == 80)
     // and vacuum BEFORE the compaction horizon keeps referenced DVs:
     val root2 = Files.createTempDirectory("graft_mf_mor3")
-    ManifestTable.commit(root2, ManifestTable.stageWithStats(
-      df.coalesce(1), root2, "base", "k"))
+    ManifestTable.commit(root2, ManifestTable.stage(
+      df.coalesce(1), root2, "base", Seq("k")))
     ManifestTable.deleteMOR(root2, df.filter(col("k") < 10).select("k"))
     val dead2 = ManifestTable.vacuum(root2, keepFrom = 2, retainMillis = 0)
     assert(!ManifestTable.dvsFor(root2, 2).exists(dead2.contains),

@@ -15,8 +15,8 @@ class Wave107Spec extends SparkSpec {
     val root = Files.createTempDirectory("graft_mf_w107")
     val df = spark.range(100).select(col("id").as("k"),
       (col("id") * 3).as("v"))
-    val v1 = ManifestTable.commit(root, ManifestTable.stageWithStats(
-      df.repartitionByRange(4, col("k")), root, "base", "k"))
+    val v1 = ManifestTable.commit(root, ManifestTable.stage(
+      df.repartitionByRange(4, col("k")), root, "base", Seq("k")))
     assert(v1 == 1)
     (root, df)
   }
@@ -29,10 +29,10 @@ class Wave107Spec extends SparkSpec {
     assert(ManifestTable.dvsFor(root, v2).size == 1)
     // append on a DV-carrying table: the old code dropped the dv= meta
     // here and readMOR of the new head resurrected the deleted rows
-    val v3 = ManifestTable.appendCommit(root, ManifestTable.stageWithStats(
+    val v3 = ManifestTable.appendCommit(root, ManifestTable.stage(
       df.filter(col("k") >= 100).unionAll(
         spark.range(100, 110).select(col("id").as("k"),
-          (col("id") * 3).as("v"))).coalesce(1), root, "late", "k"))
+          (col("id") * 3).as("v"))).coalesce(1), root, "late", Seq("k")))
     assert(ManifestTable.dvsFor(root, v3).size == 1,
       "append dropped the parent's deletion vectors")
     assert(ManifestTable.readMOR(spark, root, v3, df.schema, "k")
@@ -106,18 +106,18 @@ class Wave107Spec extends SparkSpec {
     // in-band newcomer: rows with k in [40,49] land AFTER the merge
     // read v1 — under the old file-level check this composed and the
     // new rows silently skipped the transform
-    ManifestTable.appendCommit(root, ManifestTable.stageWithStats(
+    ManifestTable.appendCommit(root, ManifestTable.stage(
       spark.range(40, 50).select(col("id").as("k"), lit(0L).as("v"))
-        .coalesce(1), root, "inband", "k"))
+        .coalesce(1), root, "inband", Seq("k")))
     intercept[java.util.ConcurrentModificationException] {
       ManifestTable.mergeCoW(spark, root, 1, df.schema, "k", 40, 49)(
         bump(40, 49))
     }
     // disjoint newcomer composes: merge band [0,9] vs append [200,209]
     val (root2, df2) = tinyTable()
-    ManifestTable.appendCommit(root2, ManifestTable.stageWithStats(
+    ManifestTable.appendCommit(root2, ManifestTable.stage(
       spark.range(200, 210).select(col("id").as("k"), lit(0L).as("v"))
-        .coalesce(1), root2, "out", "k"))
+        .coalesce(1), root2, "out", Seq("k")))
     val v3 = ManifestTable.mergeCoW(spark, root2, 1, df2.schema,
       "k", 0, 9)(bump(0, 9))
     val got = ManifestTable.read(spark, root2, v3, df2.schema)

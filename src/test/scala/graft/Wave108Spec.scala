@@ -94,13 +94,13 @@ class Wave108Spec extends SparkSpec {
     "stats survive the chain") {
     val root = Files.createTempDirectory("graft_mf_dlog2")
     val df = spark.range(200).select(col("id").as("k"), (col("id") * 3).as("v"))
-    val v1 = ManifestTable.commit(root, ManifestTable.stageWithStats(
-      df.repartitionByRange(4, col("k")), root, "base", "k"))
+    val v1 = ManifestTable.commit(root, ManifestTable.stage(
+      df.repartitionByRange(4, col("k")), root, "base", Seq("k")))
     // a small append, then a band merge: the merge manifest must be a
     // delta carrying only (-replaced, +rewritten)
-    val v2 = ManifestTable.appendCommit(root, ManifestTable.stageWithStats(
+    val v2 = ManifestTable.appendCommit(root, ManifestTable.stage(
       spark.range(200, 210).select(col("id").as("k"), (col("id") * 3).as("v"))
-        .coalesce(1), root, "late", "k"))
+        .coalesce(1), root, "late", Seq("k")))
     val v3 = ManifestTable.mergeCoW(spark, root, v2, df.schema, "k", 0, 49)(
       b => b.withColumn("v",
         when(col("k").between(0, 49), col("v") + 1).otherwise(col("v"))))
@@ -137,7 +137,7 @@ class Wave108Spec extends SparkSpec {
     // DIFFERENT file subset than a k band — both dimensions prune
     val df = spark.range(1000).select(col("id").as("k"),
       (lit(10000L) - col("id")).as("j"), (col("id") * 7).as("v"))
-    val v1 = ManifestTable.commit(root, ManifestTable.stageWithStats(
+    val v1 = ManifestTable.commit(root, ManifestTable.stage(
       df.repartitionByRange(8, col("k")), root, "base", Seq("k", "j")))
     val entries = ManifestTable.entriesFor(root, v1)
     assert(entries.size == 8 && entries.forall(e =>

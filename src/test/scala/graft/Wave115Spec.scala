@@ -35,11 +35,11 @@ class Wave115Spec extends SparkSpec {
     "delete and compaction; a pure rewrite feeds NOTHING") {
     val root = Files.createTempDirectory("graft_mf_cdf")
     val df = spark.range(300).select(col("id").as("k"), (col("id") * 3).as("v"))
-    val v1 = ManifestTable.commit(root, ManifestTable.stageWithStats(
-      df.repartitionByRange(4, col("k")), root, "base", "k"))
-    val v2 = ManifestTable.appendCommit(root, ManifestTable.stageWithStats(
+    val v1 = ManifestTable.commit(root, ManifestTable.stage(
+      df.repartitionByRange(4, col("k")), root, "base", Seq("k")))
+    val v2 = ManifestTable.appendCommit(root, ManifestTable.stage(
       spark.range(300, 320).select(col("id").as("k"), lit(0L).as("v"))
-        .coalesce(1), root, "late", "k"))
+        .coalesce(1), root, "late", Seq("k")))
     val v3 = ManifestTable.mergeCoW(spark, root, v2, df.schema, "k", 0, 49)(
       b => b.filter(!(col("k").between(0, 49) && col("k") % 7 === 0))
         .withColumn("v", when(col("k").between(0, 49), col("v") + 1)
@@ -54,8 +54,8 @@ class Wave115Spec extends SparkSpec {
     // (v4→v5 crosses a DV-carry, so assert the pure case on a clean
     // compaction of v2)
     val root2 = Files.createTempDirectory("graft_mf_cdf2")
-    ManifestTable.commit(root2, ManifestTable.stageWithStats(
-      df.repartitionByRange(4, col("k")), root2, "base", "k"))
+    ManifestTable.commit(root2, ManifestTable.stage(
+      df.repartitionByRange(4, col("k")), root2, "base", Seq("k")))
     val c = ManifestTable.compact(spark, root2, 1, df.schema, 1)
     assert(ManifestTable.readChanges(spark, root2, 1, c, df.schema, "k")
       .isEmpty, "compaction must feed no changes")

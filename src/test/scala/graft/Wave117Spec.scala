@@ -15,8 +15,8 @@ class Wave117Spec extends SparkSpec {
   private def tiny() = {
     val root = Files.createTempDirectory("graft_mf_dvp")
     val df = spark.range(100).select(col("id").as("k"), (col("id") * 3).as("v"))
-    val v1 = ManifestTable.commit(root, ManifestTable.stageWithStats(
-      df.repartitionByRange(4, col("k")), root, "base", "k"))
+    val v1 = ManifestTable.commit(root, ManifestTable.stage(
+      df.repartitionByRange(4, col("k")), root, "base", Seq("k")))
     assert(v1 == 1)
     (root, df)
   }

@@ -15,8 +15,8 @@ class Wave120Spec extends SparkSpec {
   private def base() = {
     val root = Files.createTempDirectory("graft_mf_upsert")
     val df = spark.range(100).select(col("id").as("k"), (col("id") * 3).as("v"))
-    val v1 = ManifestTable.commit(root, ManifestTable.stageWithStats(
-      df.repartitionByRange(4, col("k")), root, "base", "k"))
+    val v1 = ManifestTable.commit(root, ManifestTable.stage(
+      df.repartitionByRange(4, col("k")), root, "base", Seq("k")))
     assert(v1 == 1)
     (root, df)
   }
@@ -68,9 +68,9 @@ class Wave120Spec extends SparkSpec {
     // commit: the upsert retries on top and both commits survive.
     // The append must carry key stats — a stats-less newcomer cannot
     // prove disjointness and the conflict rule rightly aborts on it
-    val v2 = ManifestTable.appendCommit(root, ManifestTable.stageWithStats(
+    val v2 = ManifestTable.appendCommit(root, ManifestTable.stage(
       spark.range(200, 205).select(col("id").as("k"), lit(0L).as("v"))
-        .coalesce(1), root, "disjoint", "k"))
+        .coalesce(1), root, "disjoint", Seq("k")))
     val v3 = ManifestTable.upsert(spark, root, 1, df.schema, "k", upd)
     assert(v3 == v2 + 1)
     val got = ManifestTable.read(spark, root, v3, df.schema)

@@ -22,7 +22,7 @@ class Wave121Spec extends SparkSpec {
     val root = Files.createTempDirectory("graft_mf_zorder")
     val df = spark.range(4096).select(col("id").as("k"),
       (col("id") * 2654435761L % 4096).as("c"))
-    val v1 = ManifestTable.commit(root, ManifestTable.stageWithStats(
+    val v1 = ManifestTable.commit(root, ManifestTable.stage(
       df.repartitionByRange(16, col("k")), root, "base", Seq("k", "c")))
     assert(v1 == 1)
     (root, df)
@@ -73,7 +73,7 @@ class Wave121Spec extends SparkSpec {
     "interleave, and a conflicting later rewrite aborts") {
     val root = Files.createTempDirectory("graft_mf_zconst")
     val df = spark.range(100).select(col("id").as("k"), lit(7L).as("c"))
-    ManifestTable.commit(root, ManifestTable.stageWithStats(
+    ManifestTable.commit(root, ManifestTable.stage(
       df.repartitionByRange(4, col("k")), root, "base", Seq("k", "c")))
     val v2 = ManifestTable.optimizeZorder(spark, root, 1, df.schema,
       Seq("k", "c"), 4)
@@ -94,7 +94,7 @@ class Wave121Spec extends SparkSpec {
       (col("id") / 256).cast("long").as("a"),
       ((col("id") / 16) % 16).cast("long").as("b"),
       (col("id") * 2654435761L % 16).as("c"))
-    ManifestTable.commit(root, ManifestTable.stageWithStats(
+    ManifestTable.commit(root, ManifestTable.stage(
       df.repartitionByRange(16, col("a")), root, "base",
       Seq("a", "b", "c")))
     val v2 = ManifestTable.optimizeZorder(spark, root, 1, df.schema,

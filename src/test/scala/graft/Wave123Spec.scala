@@ -49,8 +49,8 @@ class Wave123Spec extends SparkSpec {
     "and MOR zero-op commits") {
     val root = Files.createTempDirectory("graft_mf_tsall")
     val df = spark.range(50).select(col("id").as("k"), (col("id") * 2).as("v"))
-    ManifestTable.commit(root, ManifestTable.stageWithStats(
-      df.repartitionByRange(2, col("k")), root, "base", "k"))
+    ManifestTable.commit(root, ManifestTable.stage(
+      df.repartitionByRange(2, col("k")), root, "base", Seq("k")))
     ManifestTable.appendCommit(root, ManifestTable.stage(
       spark.range(50, 60).select(col("id").as("k"), (col("id") * 2).as("v"))
         .coalesce(1), root, "d"))

@@ -15,8 +15,8 @@ class Wave125Spec extends SparkSpec {
     "fails loudly instead of landing nondeterministically") {
     val root = Files.createTempDirectory("graft_mf_dupkey")
     val df = spark.range(50).select(col("id").as("k"), (col("id") * 2).as("v"))
-    ManifestTable.commit(root, ManifestTable.stageWithStats(
-      df.repartitionByRange(2, col("k")), root, "base", "k"))
+    ManifestTable.commit(root, ManifestTable.stage(
+      df.repartitionByRange(2, col("k")), root, "base", Seq("k")))
     val dup = spark.createDataFrame(Seq((10L, 1L), (10L, 2L), (60L, 3L)))
       .toDF("k", "v")
     val e = intercept[IllegalArgumentException] {
@@ -32,8 +32,8 @@ class Wave125Spec extends SparkSpec {
     "monotone timestamps across a mixed lifecycle") {
     val root = Files.createTempDirectory("graft_mf_hist")
     val df = spark.range(100).select(col("id").as("k"), (col("id") * 2).as("v"))
-    ManifestTable.commit(root, ManifestTable.stageWithStats(
-      df.repartitionByRange(4, col("k")), root, "base", "k"))        // v1
+    ManifestTable.commit(root, ManifestTable.stage(
+      df.repartitionByRange(4, col("k")), root, "base", Seq("k")))        // v1
     ManifestTable.appendCommit(root, ManifestTable.stage(
       spark.range(100, 110).select(col("id").as("k"), (col("id") * 2).as("v"))
         .coalesce(1), root, "a"))                                    // v2

@@ -46,8 +46,8 @@ class Wave131Spec extends SparkSpec {
     "the live set survives, pinned-old reads break only as documented") {
     val root = Files.createTempDirectory("graft_mf_vac130")
     val df = spark.range(100).select(col("id").as("k"), (col("id") * 3).as("v"))
-    ManifestTable.commit(root, ManifestTable.stageWithStats(
-      df.repartitionByRange(4, col("k")), root, "base", "k"))
+    ManifestTable.commit(root, ManifestTable.stage(
+      df.repartitionByRange(4, col("k")), root, "base", Seq("k")))
     val v2 = ManifestTable.upsert(spark, root, 1, df.schema, "k",
       spark.createDataFrame(Seq((10L, 999L))).toDF("k", "v"))
     val v3 = ManifestTable.optimizeZorder(spark, root, v2, df.schema,

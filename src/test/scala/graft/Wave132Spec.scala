@@ -22,7 +22,7 @@ class Wave132Spec extends SparkSpec {
     val df = spark.createDataFrame(
       nasty.zipWithIndex.map { case (s, i) => (i.toLong, s) })
       .toDF("k", "s")
-    val v1 = ManifestTable.commit(root, ManifestTable.stageWithTypedStats(
+    val v1 = ManifestTable.commit(root, ManifestTable.stage(
       df.coalesce(1), root, "base", Seq("k"), Seq("s")))
     val es = ManifestTable.entriesFor(root, v1)
     assert(es.size == 1)
@@ -44,7 +44,7 @@ class Wave132Spec extends SparkSpec {
         // deterministic two-letter tag: 'a'+id%26 twice
         expr("char(97 + id % 26)"), expr("char(97 + id % 26)")).as("tag"),
       (col("id") * 3).as("v"))
-    val v1 = ManifestTable.commit(root, ManifestTable.stageWithTypedStats(
+    val v1 = ManifestTable.commit(root, ManifestTable.stage(
       df.repartitionByRange(8, col("tag")), root, "base",
       Seq("k"), Seq("tag")))
     // plus one STATLESS file: must always be admitted
@@ -82,7 +82,7 @@ class Wave132Spec extends SparkSpec {
     val root = Files.createTempDirectory("graft_mf_strmerge")
     val df = spark.range(400).select(col("id").as("k"),
       expr("char(97 + id % 26)").as("tag"), (col("id") * 3).as("v"))
-    val v1 = ManifestTable.commit(root, ManifestTable.stageWithTypedStats(
+    val v1 = ManifestTable.commit(root, ManifestTable.stage(
       df.repartitionByRange(4, col("k")), root, "base",
       Seq("k"), Seq("tag")))
     val v2 = ManifestTable.mergeCoW(spark, root, v1, df.schema,

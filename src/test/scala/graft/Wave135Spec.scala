@@ -23,7 +23,7 @@ class Wave135Spec extends SparkSpec {
     val df = spark.range(260).select(col("id").as("k"),
       concat(expr("char(97 + id % 26)"),
         expr("char(97 + id % 26)")).as("tag"))
-    val v1 = ManifestTable.commit(root, ManifestTable.stageWithTypedStats(
+    val v1 = ManifestTable.commit(root, ManifestTable.stage(
       df.repartitionByRange(4, col("tag")), root, "base",
       Seq("k"), Seq("tag")))
     assert(v1 == 1)

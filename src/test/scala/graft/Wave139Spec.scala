@@ -80,7 +80,7 @@ class Wave139Spec extends SparkSpec {
     val supp = new String(Character.toChars(0x10000))
     val df = spark.createDataFrame(Seq((1L, "￿"), (2L, supp)))
       .toDF("k", "tag")
-    ManifestTable.commit(root, ManifestTable.stageWithTypedStats(
+    ManifestTable.commit(root, ManifestTable.stage(
       df.coalesce(1), root, "base", Seq("k"), Seq("tag")))
     val hit = ManifestTable.readPruned(spark, root, 1, df.schema,
       between(("tag", "￿", "￿")))
@@ -97,7 +97,7 @@ class Wave139Spec extends SparkSpec {
     val root = Files.createTempDirectory("graft_zstr")
     val df = spark.range(400).select(col("id").as("k"),
       (col("id") % 50).as("c"), expr("char(97 + id % 26)").as("tag"))
-    val v1 = ManifestTable.commit(root, ManifestTable.stageWithTypedStats(
+    val v1 = ManifestTable.commit(root, ManifestTable.stage(
       df.repartitionByRange(4, col("k")), root, "base",
       Seq("k", "c"), Seq("tag")))
     val v2 = ManifestTable.optimizeZorder(spark, root, v1, df.schema,
@@ -118,7 +118,7 @@ class Wave139Spec extends SparkSpec {
     val root = Files.createTempDirectory("graft_prune_dv")
     val df = spark.range(100).select(col("id").as("k"),
       expr("char(97 + id % 26)").as("tag"))
-    ManifestTable.commit(root, ManifestTable.stageWithTypedStats(
+    ManifestTable.commit(root, ManifestTable.stage(
       df.repartitionByRange(4, col("k")), root, "base",
       Seq("k"), Seq("tag")))
     val v2 = ManifestTable.deleteMOR(root, df.filter(col("k") < 10)

@@ -45,7 +45,7 @@ class Wave141Spec extends SparkSpec {
     // and proved every such file disjoint
     val df = spark.range(26).select(col("id").as("k"),
       concat(lit("퟿"), expr("char(97 + id % 26)")).as("tag"))
-    ManifestTable.commit(root, ManifestTable.stageWithTypedStats(
+    ManifestTable.commit(root, ManifestTable.stage(
       df.repartition(2), root, "b", Seq("k"), Seq("tag")))
     val r = rel(root)
     val pre = r.admittedEntries(Array(StringStartsWith("tag", "퟿")))
@@ -100,7 +100,7 @@ class Wave141Spec extends SparkSpec {
     val root = Files.createTempDirectory("graft_w141_crc")
     val df = spark.range(100).select(col("id").as("k"))
     ManifestTable.commit(root,
-      ManifestTable.stageWithStats(df.repartition(3), root, "b", "k"))
+      ManifestTable.stage(df.repartition(3), root, "b", Seq("k")))
     val md = root.resolve("_manifests")
     val crcs = {
       val s = Files.list(md)

@@ -84,7 +84,7 @@ class Wave142Spec extends SparkSpec {
       format_string("s%04d", col("id")).as("s"),
       (col("id") * 0.5).as("d"),
       ((col("id") * 2654435761L) % 1000L).as("u"))
-    ManifestTable.commit(root, ManifestTable.stageWithTypedStats(
+    ManifestTable.commit(root, ManifestTable.stage(
       df.repartitionByRange(8, col("k")), root, "base",
       Seq("k", "u"), Seq("s"), Seq("d")))
     ManifestTable.buildBloomIndex(spark, root, df.schema, "u")
@@ -128,8 +128,8 @@ class Wave142Spec extends SparkSpec {
     val root = Files.createTempDirectory("graft_w142_refuse")
     val df = spark.range(10).select(col("id").as("k"),
       format_string("s%d", col("id")).as("s"))
-    ManifestTable.commit(root, ManifestTable.stageWithStats(df, root,
-      "base", "k"))
+    ManifestTable.commit(root, ManifestTable.stage(df, root,
+      "base", Seq("k")))
     // a collated comparison has no Column form here: dropping it would
     // return every admitted row
     val collated = CollatedEqualTo("s", "S1",

@@ -113,8 +113,8 @@ class Wave143Spec extends SparkSpec {
     // the programmatic twin on a second table
     val root2 = Files.createTempDirectory("w143_api").resolve("t")
     Files.createDirectories(root2)
-    val v1 = ManifestTable.commit(root2, ManifestTable.stageWithStats(
-      base.repartitionByRange(4, col("k")), root2, "base", "k"))
+    val v1 = ManifestTable.commit(root2, ManifestTable.stage(
+      base.repartitionByRange(4, col("k")), root2, "base", Seq("k")))
     ManifestTable.upsert(spark, root2, v1, base.schema, "k", updates)
     val sqlRows = spark.sql(s"SELECT k, v, s FROM $cat.t ORDER BY k")
       .collect().toSeq

@@ -74,7 +74,7 @@ class Wave146Spec extends SparkSpec {
       .repartitionByRange(4, col("k"))
     Seq(rootP, rootS).foreach { r =>
       ManifestTable.commit(r,
-        ManifestTable.stageWithStats(df, r, "base", "k"))
+        ManifestTable.stage(df, r, "base", Seq("k")))
     }
     val schema = df.schema
     // positional: resolve k % 13 == 0 to (src, pos) by provenance scan
@@ -106,7 +106,7 @@ class Wave146Spec extends SparkSpec {
     val df = spark.range(0, 100).selectExpr("id AS k", "id AS v")
       .repartitionByRange(2, col("k"))
     ManifestTable.commit(root,
-      ManifestTable.stageWithStats(df, root, "base", "k"))
+      ManifestTable.stage(df, root, "base", Seq("k")))
     ManifestTable.deleteWhereMORPositional(spark, root, df.schema,
       col("k") % 10 === 0)
     val v = ManifestTable.latestVersion(root)
@@ -131,7 +131,7 @@ class Wave146Spec extends SparkSpec {
     // an append BETWEEN delete and compact must keep subtracting
     val root2 = fresh("inherit")
     ManifestTable.commit(root2,
-      ManifestTable.stageWithStats(df, root2, "base", "k"))
+      ManifestTable.stage(df, root2, "base", Seq("k")))
     ManifestTable.deleteWhereMORPositional(spark, root2, df.schema,
       col("k") < 10)
     ManifestTable.appendCommit(root2, ManifestTable.stage(

@@ -32,7 +32,7 @@ class Wave150Spec extends SparkSpec {
     Files.createDirectories(root)
     val df = spark.range(0, 50).selectExpr("id AS k", "id AS v")
     ManifestTable.commit(root,
-      ManifestTable.stageWithStats(df, root, "base", "k"))
+      ManifestTable.stage(df, root, "base", Seq("k")))
     val ckpt = Files.createTempDirectory("graft_w150_ck").toString
     val seen = new java.util.concurrent.atomic.AtomicLong(0)
     def drain(ignore: Boolean): Long = {

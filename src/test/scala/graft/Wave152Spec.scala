@@ -32,8 +32,8 @@ class Wave152Spec extends SparkSpec {
     // key 7 appears TWICE in the target (unconstrained appends)
     val dup = base.unionAll(
       spark.range(7, 8).selectExpr("id AS k", "id + 100 AS v"))
-    val v1 = ManifestTable.commit(root, ManifestTable.stageWithStats(
-      dup.repartitionByRange(2, col("k")), root, "base", "k"))
+    val v1 = ManifestTable.commit(root, ManifestTable.stage(
+      dup.repartitionByRange(2, col("k")), root, "base", Seq("k")))
     val updates = spark.range(7, 9).selectExpr("id AS k", "id * 10 AS v")
     val e = intercept[IllegalArgumentException] {
       ManifestTable.upsert(spark, root, v1, dup.schema, "k", updates)
@@ -75,7 +75,7 @@ class Wave152Spec extends SparkSpec {
     Files.createDirectories(root)
     val df = spark.range(0, 30).selectExpr("id AS k", "id AS v")
     ManifestTable.commit(root,
-      ManifestTable.stageWithStats(df, root, "base", "k"))
+      ManifestTable.stage(df, root, "base", Seq("k")))
     // v2: a key vector lands; v3+: appends (some re-adding DV'd keys)
     ManifestTable.deleteMOR(root,
       spark.range(0, 5).selectExpr("id AS k"))

@@ -108,7 +108,7 @@ class Wave155Spec extends SparkSpec {
     Files.createDirectories(root)
     val df = spark.range(0, 100).selectExpr("id AS k",
       "timestamp_micros(1700000000000000 + id * 1000000) AS ts")
-    ManifestTable.commit(root, ManifestTable.stageWithTypedStats(
+    ManifestTable.commit(root, ManifestTable.stage(
       df.repartitionByRange(4, col("k")), root, "b",
       Seq("k", "ts"), Nil, Nil))
     val entries = ManifestTable.entriesFor(root, 1)
@@ -145,7 +145,7 @@ class Wave155Spec extends SparkSpec {
     Files.createDirectories(root)
     val df = spark.range(0, 80)
       .selectExpr("id AS k", "cast(id AS double) * 1.5 AS p")
-    ManifestTable.commit(root, ManifestTable.stageWithTypedStats(
+    ManifestTable.commit(root, ManifestTable.stage(
       df.repartitionByRange(4, col("k")), root, "b",
       Seq("k"), Nil, Seq("p")))
     ManifestTable.updateWhereCoW(spark, root, df.schema,

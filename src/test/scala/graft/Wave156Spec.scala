@@ -43,8 +43,8 @@ class Wave156Spec extends SparkSpec {
     val root = Files.createTempDirectory("graft_w156_rt").resolve("t")
     Files.createDirectories(root)
     val df = spark.range(0, 1600).selectExpr("id AS k", "id * 2 AS v")
-    ManifestTable.commit(root, ManifestTable.stageWithStats(
-      df.repartitionByRange(16, col("k")), root, "base", "k"),
+    ManifestTable.commit(root, ManifestTable.stage(
+      df.repartitionByRange(16, col("k")), root, "base", Seq("k")),
       s"schema=${ManifestTable.schemaMeta(df.schema)}")
     val scan = new ManifestScanBuilder(spark.sqlContext, root, 1,
       df.schema).build().asInstanceOf[ManifestRuntimeScan]
@@ -118,7 +118,7 @@ class Wave156Spec extends SparkSpec {
     val df = spark.range(0, 500)
       .selectExpr("id AS k", "concat('s', id) AS s",
         "cast(id AS double) / 3.0 AS p")
-    ManifestTable.commit(root, ManifestTable.stageWithTypedStats(
+    ManifestTable.commit(root, ManifestTable.stage(
       df.repartitionByRange(5, col("k")), root, "b",
       Seq("k"), Seq("s"), Seq("p")),
       s"schema=${ManifestTable.schemaMeta(df.schema)}")

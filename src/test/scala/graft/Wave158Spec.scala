@@ -26,16 +26,16 @@ class Wave158Spec extends SparkSpec {
     Files.createDirectories(root)
     val df = spark.range(0, rows).selectExpr("id AS k", "id AS v")
     if (rows > 0)
-      ManifestTable.commit(root, ManifestTable.stageWithStats(
-        df.repartitionByRange(2, col("k")), root, "base", "k"))
+      ManifestTable.commit(root, ManifestTable.stage(
+        df.repartitionByRange(2, col("k")), root, "base", Seq("k")))
     else ManifestTable.commit(root, Nil)
     root
   }
 
   private def stageAdds(root: Path, lo: Long, hi: Long, tag: String) =
-    ManifestTable.stageWithStats(
+    ManifestTable.stage(
       spark.range(lo, hi).selectExpr("id AS k", "id AS v"),
-      root, tag, "k")
+      root, tag, Seq("k"))
 
   private val schema =
     org.apache.spark.sql.types.StructType.fromDDL("k BIGINT, v BIGINT")

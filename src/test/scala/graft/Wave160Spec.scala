@@ -62,8 +62,8 @@ class Wave160Spec extends SparkSpec {
     Files.createDirectories(root)
     val df = spark.range(0, 400)
       .selectExpr("id AS k", "(id * 2654435761) % 1000 AS u")
-    val v1 = ManifestTable.commit(root, ManifestTable.stageWithStats(
-      df.repartitionByRange(4, col("k")), root, "base", "k"))
+    val v1 = ManifestTable.commit(root, ManifestTable.stage(
+      df.repartitionByRange(4, col("k")), root, "base", Seq("k")))
     val v2 = ManifestTable.buildBloomIndex(spark, root, df.schema, "u")
     assert(v2 == v1 + 1)
     // idempotent: full coverage → no new version

@@ -80,7 +80,7 @@ class Wave161Spec extends SparkSpec {
     Files.createDirectories(root)
     val df = spark.range(0, 80).selectExpr("id AS k",
       "cast(cast(id AS double) / 4.0 AS decimal(10,2)) AS p")
-    ManifestTable.commit(root, ManifestTable.stageWithTypedStats(
+    ManifestTable.commit(root, ManifestTable.stage(
       df.repartitionByRange(4, col("k")), root, "b",
       Seq("k"), Nil, Nil, Seq("p")))
     ManifestTable.updateWhereCoW(spark, root, df.schema,

@@ -29,8 +29,8 @@ class Wave162Spec extends SparkSpec {
     Files.createDirectories(root)
     val df = spark.range(0, 100)
       .selectExpr("id AS k", "cast(id AS int) AS i")
-    ManifestTable.commit(root, ManifestTable.stageWithStats(
-      df.repartitionByRange(2, col("k")), root, "b", "k"))
+    ManifestTable.commit(root, ManifestTable.stage(
+      df.repartitionByRange(2, col("k")), root, "b", Seq("k")))
     val e1 = intercept[IllegalArgumentException] {
       ManifestTable.buildBloomIndex(spark, root, df.schema, "i")
     }

@@ -71,8 +71,8 @@ class Wave163Spec extends SparkSpec {
     val root = Files.createTempDirectory("graft_w163_mrg").resolve("t")
     Files.createDirectories(root)
     val base = spark.range(0, 40).selectExpr("id AS k", "id AS v")
-    ManifestTable.commit(root, ManifestTable.stageWithStats(
-      base.repartitionByRange(2, col("k")), root, "b", "k"),
+    ManifestTable.commit(root, ManifestTable.stage(
+      base.repartitionByRange(2, col("k")), root, "b", Seq("k")),
       s"schema=${ManifestTable.schemaMeta(base.schema)}")
     // the merge evolves with column `m`; the concurrent widening
     // (again injected via the first metaOf invocation) adds `z`

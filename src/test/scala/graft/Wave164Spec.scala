@@ -113,8 +113,8 @@ class Wave164Spec extends SparkSpec {
     java.nio.file.Files.createDirectories(root)
     val df = spark.range(0, 400)
       .selectExpr("id AS k", "(id * 2654435761) % 1000 AS u")
-    ManifestTable.commit(root, ManifestTable.stageWithStats(
-      df.repartitionByRange(4, col("k")), root, "base", "k"),
+    ManifestTable.commit(root, ManifestTable.stage(
+      df.repartitionByRange(4, col("k")), root, "base", Seq("k")),
       s"schema=${ManifestTable.schemaMeta(df.schema)}")
     ManifestTable.buildBloomIndex(spark, root, df.schema, "u")
     // append WITHOUT rebuilding the index: the new file has no bitset

@@ -25,8 +25,8 @@ class Wave165Spec extends SparkSpec {
     // values scatter across files (modular shuffle) — the bloom case
     val df = spark.range(0, 2000)
       .selectExpr("id AS k", "(id * 2654435761) % 5000 AS u")
-    ManifestTable.commit(root, ManifestTable.stageWithStats(
-      df.repartitionByRange(6, col("k")), root, "base", "k"),
+    ManifestTable.commit(root, ManifestTable.stage(
+      df.repartitionByRange(6, col("k")), root, "base", Seq("k")),
       s"schema=${ManifestTable.schemaMeta(df.schema)}")
     val v2 = ManifestTable.buildBloomIndex(spark, root, df.schema, "u")
     assert(v2 == 2)

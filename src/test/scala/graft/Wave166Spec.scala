@@ -83,8 +83,8 @@ class Wave166Spec extends SparkSpec {
     Files.createDirectories(root)
     // duplicate rows across files: only the SCOPED copy must die
     val df = spark.range(0, 300).selectExpr("id AS k", "id * 3 AS v")
-    ManifestTable.commit(root, ManifestTable.stageWithStats(
-      df.repartitionByRange(3, col("k")), root, "base", "k"),
+    ManifestTable.commit(root, ManifestTable.stage(
+      df.repartitionByRange(3, col("k")), root, "base", Seq("k")),
       s"schema=${ManifestTable.schemaMeta(df.schema)}")
     ManifestTable.appendCommit(root, ManifestTable.stage(
       df.filter(col("k") < 100).coalesce(1), root, "dup"))

@@ -28,9 +28,9 @@ class Wave167Spec extends SparkSpec {
     val root = Files.createTempDirectory(s"graft_w167_$tag").resolve("t")
     Files.createDirectories(root)
     if (rows > 0)
-      ManifestTable.commit(root, ManifestTable.stageWithStats(
+      ManifestTable.commit(root, ManifestTable.stage(
         spark.range(0, rows).selectExpr("id AS k", "id AS v")
-          .repartitionByRange(files, col("k")), root, "base", "k"))
+          .repartitionByRange(files, col("k")), root, "base", Seq("k")))
     else ManifestTable.commit(root, Nil)
     root
   }
@@ -43,13 +43,13 @@ class Wave167Spec extends SparkSpec {
     assert(hit.nonEmpty && hit.size < 4, s"band hit ${hit.size}")
     val touched = spark.read.schema(schema).parquet(
       hit.map(e => a.resolve("data").resolve(e.path).toString): _*)
-    val addsA = ManifestTable.stageWithStats(
+    val addsA = ManifestTable.stage(
       touched.withColumn("v",
         when(col("k") < 100, col("v") + 1000).otherwise(col("v"))),
-      a, "cow", "k")
-    val addsB = ManifestTable.stageWithStats(
+      a, "cow", Seq("k"))
+    val addsB = ManifestTable.stage(
       spark.range(0, 100).selectExpr("id AS k", "id AS v"),
-      b, "audit", "k")
+      b, "audit", Seq("k"))
     val vs = ManifestTable.commitTxnCow(Seq(
       (a, addsA, hit.map(_.path), ""), (b, addsB, Nil, "")))
     assert(vs == Seq(2, 2), s"versions $vs")
@@ -69,14 +69,14 @@ class Wave167Spec extends SparkSpec {
   test("crash between publishes: the CoW participant rolls forward " +
     "on the first read of the published one") {
     val (a, b) = (mkTable("ca", 10, 1), mkTable("cb", 200, 2))
-    val addsA = ManifestTable.stageWithStats(
-      spark.range(10, 16).selectExpr("id AS k", "id AS v"), a, "txa", "k")
+    val addsA = ManifestTable.stage(
+      spark.range(10, 16).selectExpr("id AS k", "id AS v"), a, "txa", Seq("k"))
     // B's CoW half: rewrite its first file with +1 values
     val f0 = ManifestTable.entriesFor(b, 1).head
     val repl = spark.read.schema(schema)
       .parquet(b.resolve("data").resolve(f0.path).toString)
       .withColumn("v", col("v") + 1)
-    val addsB = ManifestTable.stageWithStats(repl, b, "txb", "k")
+    val addsB = ManifestTable.stage(repl, b, "txb", Seq("k"))
     val id = s"tw167crash${System.nanoTime()}"
     val txnDir = a.resolve("_txns")
     Files.createDirectories(txnDir)
@@ -104,11 +104,11 @@ class Wave167Spec extends SparkSpec {
   test("a concurrent rewrite of a removed file poisons the txn " +
     "LOUDLY on completion") {
     val (a, b) = (mkTable("pa", 10, 1), mkTable("pb", 100, 2))
-    val addsA = ManifestTable.stageWithStats(
-      spark.range(10, 12).selectExpr("id AS k", "id AS v"), a, "pxa", "k")
+    val addsA = ManifestTable.stage(
+      spark.range(10, 12).selectExpr("id AS k", "id AS v"), a, "pxa", Seq("k"))
     val f0 = ManifestTable.entriesFor(b, 1).head
-    val addsB = ManifestTable.stageWithStats(
-      spark.range(500, 550).selectExpr("id AS k", "id AS v"), b, "pxb", "k")
+    val addsB = ManifestTable.stage(
+      spark.range(500, 550).selectExpr("id AS k", "id AS v"), b, "pxb", Seq("k"))
     val id = s"tw167poison${System.nanoTime()}"
     val txnDir = a.resolve("_txns")
     Files.createDirectories(txnDir)
@@ -122,9 +122,9 @@ class Wave167Spec extends SparkSpec {
     ManifestTable.commitOps(a, addsA, Nil,
       s"txn=$id txnlog=${a.toAbsolutePath.relativize(intent.toAbsolutePath)}")
     // the concurrent writer rewrites f0 before anyone completes
-    val replLines = ManifestTable.stageWithStats(
+    val replLines = ManifestTable.stage(
       spark.range(0, 50).selectExpr("id AS k", "id * 2 AS v"),
-      b, "conc", "k")
+      b, "conc", Seq("k"))
     ManifestTable.commitOps(b, replLines, Seq(f0.path))
     val e = intercept[java.util.ConcurrentModificationException] {
       ManifestTable.filesFor(a, 2) // triggers roll-forward
@@ -135,8 +135,8 @@ class Wave167Spec extends SparkSpec {
   test("a stale removed path fails the pre-check before any intent " +
     "lands (clean abort)") {
     val (a, b) = (mkTable("qa", 10, 1), mkTable("qb", 10, 1))
-    val addsA = ManifestTable.stageWithStats(
-      spark.range(10, 12).selectExpr("id AS k", "id AS v"), a, "qxa", "k")
+    val addsA = ManifestTable.stage(
+      spark.range(10, 12).selectExpr("id AS k", "id AS v"), a, "qxa", Seq("k"))
     val e = intercept[IllegalArgumentException] {
       ManifestTable.commitTxnCow(Seq(
         (a, addsA, Nil, ""),

@@ -94,7 +94,7 @@ class Wave171Spec extends SparkSpec {
     Files.createDirectories(root)
     val df = spark.range(0, 80).selectExpr("id AS k",
       "unhex(md5(cast(id AS string))) AS b")
-    ManifestTable.commit(root, ManifestTable.stageWithTypedStats(
+    ManifestTable.commit(root, ManifestTable.stage(
       df.repartitionByRange(4, col("k")), root, "base",
       Seq("k"), Nil, Nil, Nil, Seq("b")))
     ManifestTable.updateWhereCoW(spark, root, df.schema,

@@ -30,8 +30,8 @@ class Wave172Spec extends SparkSpec {
     val root = Files.createTempDirectory("graft_w172").resolve("t")
     Files.createDirectories(root)
     val df = spark.range(0, 400).selectExpr("id AS k", "id AS v")
-    ManifestTable.commit(root, ManifestTable.stageWithStats(
-      df.repartitionByRange(4, col("k")), root, "base", "k"),
+    ManifestTable.commit(root, ManifestTable.stage(
+      df.repartitionByRange(4, col("k")), root, "base", Seq("k")),
       s"schema=${ManifestTable.schemaMeta(df.schema)}")
     ManifestTable.deleteWhereCoW(spark, root, schema, col("k") < 100,
       longBands = Seq(("k", 0L, 99L)))
@@ -54,8 +54,8 @@ class Wave172Spec extends SparkSpec {
     val root = Files.createTempDirectory("graft_w172_dv").resolve("t")
     Files.createDirectories(root)
     val df = spark.range(0, 100).selectExpr("id AS k", "id AS v")
-    ManifestTable.commit(root, ManifestTable.stageWithStats(
-      df, root, "base", "k"),
+    ManifestTable.commit(root, ManifestTable.stage(
+      df, root, "base", Seq("k")),
       s"schema=${ManifestTable.schemaMeta(df.schema)}")
     ManifestTable.deleteMOR(root,
       spark.range(0, 10).selectExpr("id AS k"))        // v2: dv

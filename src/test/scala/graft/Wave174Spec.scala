@@ -34,8 +34,8 @@ class Wave174Spec extends SparkSpec {
     val root = Files.createTempDirectory("graft_w174_st").resolve("t")
     Files.createDirectories(root)
     val df = spark.range(0, 4000).selectExpr("id AS k", "id * 3 AS v")
-    ManifestTable.commit(root, ManifestTable.stageWithStats(
-      df.repartitionByRange(4, col("k")), root, "b", "k"),
+    ManifestTable.commit(root, ManifestTable.stage(
+      df.repartitionByRange(4, col("k")), root, "b", Seq("k")),
       s"schema=${ManifestTable.schemaMeta(df.schema)}")
     def scan(fs: Array[org.apache.spark.sql.sources.Filter]) = {
       val b = new ManifestScanBuilder(spark.sqlContext, root, 1, df.schema)

@@ -45,8 +45,8 @@ class Wave179Spec extends SparkSpec {
     val root = Files.createTempDirectory("graft_w179_dvp").resolve("t")
     Files.createDirectories(root)
     val df = spark.range(0, 200000).selectExpr("id AS k", "id * 3 AS v")
-    ManifestTable.commit(root, ManifestTable.stageWithStats(
-      df.repartitionByRange(4, col("k")), root, "base", "k"),
+    ManifestTable.commit(root, ManifestTable.stage(
+      df.repartitionByRange(4, col("k")), root, "base", Seq("k")),
       s"schema=${ManifestTable.schemaMeta(df.schema)}")
     ManifestTable.deleteMORScoped(spark, root,
       spark.range(0, 100000).selectExpr("id AS k"), "k", df.schema)
@@ -71,8 +71,8 @@ class Wave179Spec extends SparkSpec {
     val root = Files.createTempDirectory("graft_w179_dvr").resolve("t")
     Files.createDirectories(root)
     val df = spark.range(0, 200000).selectExpr("id AS k", "id * 7 AS v")
-    ManifestTable.commit(root, ManifestTable.stageWithStats(
-      df.repartitionByRange(4, col("k")), root, "base", "k"),
+    ManifestTable.commit(root, ManifestTable.stage(
+      df.repartitionByRange(4, col("k")), root, "base", Seq("k")),
       s"schema=${ManifestTable.schemaMeta(df.schema)}")
     // delete every even row position in every file
     ManifestTable.deleteWhereMORPositional(spark, root, df.schema,
@@ -98,8 +98,8 @@ class Wave179Spec extends SparkSpec {
     val root = Files.createTempDirectory("graft_w179_slice").resolve("t")
     Files.createDirectories(root)
     val df = spark.range(0, 1000).selectExpr("id AS k", "id AS v")
-    ManifestTable.commit(root, ManifestTable.stageWithStats(
-      df.repartitionByRange(4, col("k")), root, "base", "k"),
+    ManifestTable.commit(root, ManifestTable.stage(
+      df.repartitionByRange(4, col("k")), root, "base", Seq("k")),
       s"schema=${ManifestTable.schemaMeta(df.schema)}")
     ManifestTable.deleteMORScoped(spark, root,
       spark.range(0, 500).selectExpr("id AS k"), "k", df.schema)
@@ -127,8 +127,8 @@ class Wave179Spec extends SparkSpec {
     val root = Files.createTempDirectory("graft_w179_dv").resolve("t")
     Files.createDirectories(root)
     val df = spark.range(0, 100000).selectExpr("id AS k", "id AS v")
-    ManifestTable.commit(root, ManifestTable.stageWithStats(
-      df.repartitionByRange(4, col("k")), root, "base", "k"),
+    ManifestTable.commit(root, ManifestTable.stage(
+      df.repartitionByRange(4, col("k")), root, "base", Seq("k")),
       s"schema=${ManifestTable.schemaMeta(df.schema)}")
     ManifestTable.deleteMOR(root,
       spark.range(0, 50000).selectExpr("id AS k"))

@@ -97,12 +97,12 @@ class Wave181Spec extends SparkSpec {
     Files.createDirectories(root)
     val narrow = spark.range(0, 1000)
       .selectExpr("id AS k", "CAST(id AS INT) AS q")
-    ManifestTable.commit(root, ManifestTable.stageWithStats(
-      narrow.repartitionByRange(4, col("k")), root, "base", "k"),
+    ManifestTable.commit(root, ManifestTable.stage(
+      narrow.repartitionByRange(4, col("k")), root, "base", Seq("k")),
       s"schema=${ManifestTable.schemaMeta(narrow.schema)}")
     ManifestTable.widenColumnType(root, "q", LongType)
     val wide = spark.range(1000, 2000).selectExpr("id AS k", "id AS q")
-    ManifestTable.appendCommit(root, ManifestTable.stageWithTypedStats(
+    ManifestTable.appendCommit(root, ManifestTable.stage(
       wide.repartitionByRange(4, col("k")), root, "w", Seq("k", "q"),
       Nil, Nil), ManifestTable.evolutionMeta(root,
         ManifestTable.latestVersion(root)))

@@ -13,9 +13,9 @@ class Wave87Spec extends SparkSpec {
   private def build() = {
     val root = Files.createTempDirectory("graft_mf_cow")
     val orders = Tables.table(spark, sfDir, "orders")
-    val v1 = ManifestTable.commit(root, ManifestTable.stageWithStats(
+    val v1 = ManifestTable.commit(root, ManifestTable.stage(
       orders.repartitionByRange(6, col("o_orderkey")),
-      root, "base", "o_orderkey"))
+      root, "base", Seq("o_orderkey")))
     val mx = orders.agg(max("o_orderkey")).head().getLong(0)
     (root, orders, v1, mx / 4, mx / 2)
   }

@@ -14,9 +14,9 @@ class Wave95Spec extends SparkSpec {
   private def build() = {
     val root = Files.createTempDirectory("graft_mf_iso2")
     val orders = Tables.table(spark, sfDir, "orders")
-    val v1 = ManifestTable.commit(root, ManifestTable.stageWithStats(
+    val v1 = ManifestTable.commit(root, ManifestTable.stage(
       orders.repartitionByRange(8, col("o_orderkey")),
-      root, "base", "o_orderkey"))
+      root, "base", Seq("o_orderkey")))
     val mx = orders.agg(max("o_orderkey")).head().getLong(0)
     (root, orders, v1, mx)
   }
@@ -61,8 +61,8 @@ class Wave95Spec extends SparkSpec {
     // append lands v2 while the merge still reads v1
     val extra = orders.limit(5)
       .withColumn("o_orderkey", col("o_orderkey") + lit(mx + 1000))
-    val v2 = ManifestTable.appendCommit(root, ManifestTable.stageWithStats(
-      extra.coalesce(1), root, "late", "o_orderkey"))
+    val v2 = ManifestTable.appendCommit(root, ManifestTable.stage(
+      extra.coalesce(1), root, "late", Seq("o_orderkey")))
     assert(v2 == 2)
     val v3 = ManifestTable.mergeCoW(spark, root, v1, orders.schema,
       "o_orderkey", 0, mx / 8)(df =>
@@ -77,16 +77,16 @@ class Wave95Spec extends SparkSpec {
     "and pinned readers are untouched") {
     val root = Files.createTempDirectory("graft_mf_opt")
     val orders = Tables.table(spark, sfDir, "orders")
-    val v1 = ManifestTable.commit(root, ManifestTable.stageWithStats(
+    val v1 = ManifestTable.commit(root, ManifestTable.stage(
       orders.repartitionByRange(2, col("o_orderkey")),
-      root, "big", "o_orderkey"))
+      root, "big", Seq("o_orderkey")))
     // four tiny appends — the small-file tail a streaming sink leaves
     val mx = orders.agg(max("o_orderkey")).head().getLong(0)
     val v = (1 to 4).foldLeft(v1) { (_, i) =>
-      ManifestTable.appendCommit(root, ManifestTable.stageWithStats(
+      ManifestTable.appendCommit(root, ManifestTable.stage(
         orders.limit(3).withColumn("o_orderkey",
           col("o_orderkey") + lit(mx + 100L * i)).coalesce(1),
-        root, s"tiny$i", "o_orderkey"))
+        root, s"tiny$i", Seq("o_orderkey")))
     }
     val before = ManifestTable.entriesFor(root, v)
     val data = root.resolve("data")
