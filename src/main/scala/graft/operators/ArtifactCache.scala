@@ -7,10 +7,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * upgrade of the pid-keyed caches (r4 ADVICE offered both designs;
   * pid-keying was the conservative first cut): the cache key is a
   * FINGERPRINT of the source fixtures (per file: name, byte length,
-  * mtime), so
+  * mtime) plus a stamp of the engine code that builds the artifact,
+  * so
   *
   *  - a regenerated fixture changes the fingerprint ⇒ a fresh build
-  *    (the staleness hazard pid-keying guarded against),
+  *    (the staleness hazard pid-keying guarded against), and so does
+  *    a rebuilt engine (an artifact holds what the code that built it wrote),
   *  - concurrent JVMs race benignly: each builder writes a pid-private
   *    staging dir, then ONE atomic rename publishes it; losers fall
   *    back to the published copy (or their own staging dir while the
@@ -79,6 +81,37 @@ object ArtifactCache {
     md.digest().take(8).map("%02x".format(_)).mkString
   }
 
+  /** Stamp of the engine code this JVM runs: the relative name, length
+    * and mtime of every file under the code source of this class (a
+    * classes directory), or of its jar. Every artifact root folds it
+    * in, so an artifact built by other code is never read. Computed
+    * once per JVM.
+    */
+  private[graft] lazy val codeStamp: String = {
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    Option(getClass.getProtectionDomain.getCodeSource).foreach { cs =>
+      val src = Paths.get(cs.getLocation.toURI)
+      val files =
+        if (!Files.isDirectory(src)) Seq(src)
+        else {
+          val w = Files.walk(src)
+          try w.filter(Files.isRegularFile(_)).sorted().toArray.toSeq
+            .collect { case f: Path => f }
+          finally w.close()
+        }
+      files.foreach(f => md.update((s"${src.relativize(f)}:${Files.size(f)}:" +
+        Files.getLastModifiedTime(f).toMillis).getBytes("UTF-8")))
+    }
+    md.digest().take(8).map("%02x".format(_)).mkString
+  }
+
+  /** Root of an artifact built by the code `stamp` names from the
+    * current state of `sources`.
+    */
+  private[graft] def rootFor(cacheName: String, sources: Seq[String],
+      stamp: String): Path =
+    Paths.get(s"/tmp/graft_cache/$cacheName/${fingerprint(sources)}-$stamp")
+
   /** Read the artifact, building+publishing it first if absent. */
   def apply(spark: SparkSession, cacheName: String,
       sources: Seq[String])(build: => DataFrame): DataFrame =
@@ -105,7 +138,7 @@ object ArtifactCache {
     */
   def path(cacheName: String, sources: Seq[String])
       (write: String => Unit): String = {
-    val root = Paths.get(s"/tmp/graft_cache/$cacheName/${fingerprint(sources)}")
+    val root = rootFor(cacheName, sources, codeStamp)
     if (Files.exists(root.resolve("_SUCCESS"))) root.toString
     // the staging dir is per JVM, so the threads of one JVM must not
     // build into it together: one builds, the others wait on the root's

@@ -957,7 +957,7 @@ trait ManifestLog { self: ManifestData with ManifestMutations
     // the stats consumers (readPruned / mergeCoW / optimizeSmall).
     val added = stage(df, root, s"b$batchId", longCols, strCols, dblCols,
       decCols)
-    commitOpsF(root, _ => s"batch=$batchId") { parent =>
+    commitOpsF(root, batchMeta(batchId, Some(df.schema))) { parent =>
       if (committedBatchesCached(root).contains(batchId)) None
       else Some((added, Nil)) // O(|batch|) delta commit
     }.getOrElse(latestVersion(root))
@@ -991,10 +991,29 @@ trait ManifestLog { self: ManifestData with ManifestMutations
     */
   def commitCheckpointBatch(root: Path, files: Seq[String],
       batchId: Long): Int =
-    commitOpsF(root, _ => s"batch=$batchId", checkpoint = true) { parent =>
+    commitCheckpointBatch(root, files, batchId, None)
+
+  /** [[commitCheckpointBatch]] that records `schema` on the table's
+    * first commit.
+    */
+  private[graft] def commitCheckpointBatch(root: Path, files: Seq[String],
+      batchId: Long, schema: Option[StructType]): Int =
+    commitOpsF(root, batchMeta(batchId, schema), checkpoint = true) { parent =>
       if (committedBatchesCached(root).contains(batchId)) None
       else Some((files, if (parent == 0) Nil else filesFor(root, parent)))
     }.getOrElse(latestVersion(root))
+
+  /** Header meta of a streaming batch commit: its batch id, plus the
+    * `schema=` of `schema` on the table's first commit, so a table whose
+    * first batch held no rows still resolves its schema. A schema the
+    * header cannot encode (a space in a name or type) is left to the
+    * data files' footers, as before.
+    */
+  private def batchMeta(batchId: Long, schema: Option[StructType])(
+      parent: Int): String =
+    (s"batch=$batchId" +: schema.filter(_ => parent == 0).flatMap(s =>
+      scala.util.Try(s"schema=${schemaMeta(s)}").toOption).toSeq)
+      .mkString(" ")
 
   /** Columnar (parquet) encoding of checkpoint manifest SEGMENTS —
     * wave 133, closing the "text manifests vs avro/parquet" encoding

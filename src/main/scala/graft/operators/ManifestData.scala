@@ -167,8 +167,12 @@ trait ManifestData { self: ManifestLog with ManifestMutations
     def exprCol: Column =
       col(srcCol) - pmod(col(srcCol), lit(w))
     def ofLiteral(v: Long): Long = v - java.lang.Math.floorMod(v, w)
+    // monotone; an open lower end stays open (truncating a bound
+    // within w of Long.MinValue would wrap to a huge positive value and
+    // admit no file)
     def bandOf(lo: Long, hi: Long): Option[(Long, Long)] =
-      Some((ofLiteral(lo), ofLiteral(hi))) // monotone
+      Some((if (lo < Long.MinValue + w) Long.MinValue else ofLiteral(lo),
+        ofLiteral(hi)))
   }
 
   /** Epoch-micros → days-since-epoch (the Iceberg `days(ts)` shape on

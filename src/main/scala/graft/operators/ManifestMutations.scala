@@ -15,6 +15,95 @@ import org.apache.spark.sql.types.StructType
 trait ManifestMutations { self: ManifestLog with ManifestData
     with ManifestTxn with ManifestBloom =>
 
+  /** Stage the rows of a copy-on-write rewrite of version `from` as
+    * `<tag><from>` files: the recorded transforms' `__pt*` columns are
+    * restored first (the rows were read under the logical schema), then
+    * `layout` lays the frame out, and the files record the stats
+    * coverage of `coverage` — every long, string, double, decimal and
+    * binary column those entries record, after the `lead` columns. A
+    * rewrite never narrows the columns later prunes rely on. `roll`
+    * as in [[stageFiles]].
+    */
+  private def restage(root: Path, from: Int, rows: DataFrame,
+      coverage: Seq[FileEntry], lead: Seq[String], tag: String,
+      roll: Boolean = false)(layout: DataFrame => DataFrame): Seq[String] = {
+    def cols(kind: FileEntry => Seq[(String, Any)]) =
+      coverage.flatMap(kind(_).map(_._1)).distinct
+    stageFiles(layout(restoreTransformCols(root, from, rows)), root,
+      s"$tag$from", roll, (lead ++ cols(_.stats)).distinct,
+      cols(_.strStats), cols(_.dblStats), cols(_.decStats),
+      cols(_.binStats))
+  }
+
+  /** Range-lay a rewrite of `hit` on its leading recorded long stat
+    * column, one range per touched file, so the new files stay
+    * prunable; a stats-less set keeps the frame's own layout.
+    */
+  private def byLeadStat(hit: Seq[FileEntry])(df: DataFrame): DataFrame =
+    hit.flatMap(_.stats.map(_._1)).headOption.fold(df)(k =>
+      df.repartitionByRange(math.max(1, hit.size), col(k)))
+
+  /** Publish a copy-on-write rewrite of version `from`: remove the
+    * `removed` files, add the `adds` this call restaged and the
+    * `inserted` lines its caller staged. This is the one conflict rule
+    * of every rewrite: inside the publish retry, against the parent
+    * that wins the race, the commit is refused with
+    * `ConcurrentModificationException` when
+    *  - a `removed` file is no longer live (a later commit rewrote the
+    *    read set; publishing would drop that commit's changes);
+    *  - a file added after `from` matches `newcomer` (its rows never
+    *    saw the rewrite — the write skew a file-level check admits);
+    *  - the parent holds scoped (`dvp=`) or row-position (`dvr=`)
+    *    vectors other than the ones this commit `clears` (a rewrite
+    *    would orphan their file scopes and resurrect deleted rows), or
+    *    a `clears` list that differs from `from`'s (clearing it would
+    *    drop a later delete).
+    * When `parent == from` nothing can differ, so nothing is re-read.
+    * A refused commit deletes the `adds` files, then throws; the
+    * caller's `inserted` files and any other failure are left alone
+    * (a failure after the link means the version is already public).
+    * `clears` names the vector kind this commit materialized, written
+    * as an empty `<kind>=` token so the list is not inherited.
+    */
+  private def publishRewrite(root: Path, from: Int, removed: Seq[FileEntry],
+      adds: Seq[String], metaOf: Int => String,
+      newcomer: FileEntry => Boolean = _ => false,
+      checkpoint: Boolean = false, inserted: Seq[String] = Nil,
+      clears: String = ""): Int = {
+    def refuse(parent: Int, why: String): Nothing = {
+      adds.foreach(l => Files.deleteIfExists(
+        root.resolve("data").resolve(l.split('\t').head)): Unit)
+      throw new java.util.ConcurrentModificationException(
+        s"rewrite of v$from conflicts with v$parent: $why — re-read and " +
+        "re-run")
+    }
+    def vectors(v: Int) = Map("dv" -> dvsFor(root, v),
+      "dvp" -> scopedDvsFor(root, v), "dvr" -> rowDvsFor(root, v))
+    lazy val (before, was) = (filesFor(root, from).toSet, vectors(from))
+    val meta: Int => String = p => Seq(metaOf(p),
+      if (clears.isEmpty) "" else s"$clears=").filter(_.nonEmpty).mkString(" ")
+    commitOpsF(root, meta, checkpoint) { parent =>
+      if (parent != from) {
+        val cur = entriesFor(root, parent)
+        val live = cur.map(_.path).toSet
+        val gone = removed.map(_.path).filterNot(live)
+        if (gone.nonEmpty) refuse(parent, s"a later commit rewrote " +
+          s"${gone.size} file(s) of its read set (${gone.take(3).mkString(",")})")
+        val late = cur.filter(e => !before(e.path) && newcomer(e))
+        if (late.nonEmpty) refuse(parent, "a later commit added rows the " +
+          s"rewrite never saw (${late.take(3).map(_.path).mkString(",")})")
+        vectors(parent).foreach { case (k, vs) =>
+          if (k == clears && vs != was(k)) refuse(parent, s"a later " +
+            s"commit changed the $k= vectors this commit clears")
+          if (k != clears && k != "dv" && vs.nonEmpty) refuse(parent,
+            s"$k= vectors are outstanding and a rewrite would orphan " +
+            "their file scopes")
+        }
+      }
+      Some((adds ++ inserted, removed.map(_.path)))
+    }.get
+  }
+
   /** Copy-on-write MERGE: apply `transform` to the rows of ONLY the
     * files whose [min,max] key band intersects [loKey, hiKey] — the
     * stats-pruned affected set — and commit (untouched entries ++
@@ -24,96 +113,24 @@ trait ManifestMutations { self: ManifestLog with ManifestData
     * This is the Delta/Iceberg merge shape stated minimally: at 100 TB
     * a keyed upsert touching one tenant's band rewrites the handful of
     * files the stats admit, never the table; pinned readers of the
-    * pre-merge snapshot are untouched by immutability.
+    * pre-merge snapshot are untouched by immutability. A newcomer file
+    * whose key band intersects the merge band (or that has no key
+    * stats) conflicts ([[publishRewrite]]); appends and merges
+    * disjoint from the band compose.
     */
   def mergeCoW(spark: SparkSession, root: Path, from: Int,
       schema: StructType, keyCol: String, loKey: Long, hiKey: Long)(
       transform: DataFrame => DataFrame): Int = {
     requireNoScopedDvs(root, from, "mergeCoW")
-    val fromEntries = entriesFor(root, from)
-    val hit = fromEntries.filter(_.mayContain(keyCol, loKey, hiKey))
+    val hit = entriesFor(root, from).filter(_.mayContain(keyCol, loKey, hiKey))
     require(hit.nonEmpty, "merge band matched no file — nothing to do")
-    val affected = spark.read.schema(schema).parquet(
-      hit.map(e => root.resolve("data").resolve(e.path).toString): _*)
-    // the rewrite preserves the hit files' FULL stats coverage (plus
-    // the merge key), STRING bounds included: a merge must not
-    // silently narrow the column set later prunes rely on
-    val statCols = (keyCol +: hit.flatMap(_.stats.map(_._1))).distinct
-    val strCols = hit.flatMap(_.strStats.map(_._1)).distinct
-    val dblCols = hit.flatMap(_.dblStats.map(_._1)).distinct
-    val decCols = hit.flatMap(_.decStats.map(_._1)).distinct
-    val binCols = hit.flatMap(_.binStats.map(_._1)).distinct
-    val rewritten = stage(
-      restoreTransformCols(root, from, transform(affected))
-        .repartitionByRange(math.max(1, hit.size), col(keyCol)),
-      root, s"merge$from", statCols, strCols, dblCols, decCols,
-      binCols)
-    // SERIALIZABLE-WRITER commit: recompute the conflict checks against
-    // whatever parent WINS the publish race, aborting on BOTH conflict
-    // directions. (1) A concurrent commit removed a file this merge
-    // read — our read set was rewritten under us, and committing would
-    // silently drop that writer's changes (the Delta/Iceberg
-    // write-conflict rule). (2) A concurrent commit ADDED a file whose
-    // key band intersects our merge band — its rows should have seen
-    // the transform but did not, the write-skew the r8 ADVICE showed
-    // made the old check merely snapshot-isolated; a band-intersecting
-    // newcomer (or one with no stats for the key, which cannot prove
-    // disjointness) now aborts too. Appends and merges DISJOINT from
-    // the band still compose: the retry folds their files in via the
-    // delta log and both commits land.
-    val fromPaths = fromEntries.map(_.path).toSet
-    commitOpsF(root, _ => s"merge=v$from") { parent =>
-      val cur = entriesFor(root, parent)
-      val curPaths = cur.map(_.path).toSet
-      if (!hit.forall(e => curPaths.contains(e.path)))
-        throw new java.util.ConcurrentModificationException(
-          s"merge over v$from conflicts: a commit after v$from " +
-          "rewrote part of its read set — re-read and re-merge")
-      val inBandNewcomer = cur.filterNot(e => fromPaths.contains(e.path))
-        .filter(_.mayContain(keyCol, loKey, hiKey))
-      if (inBandNewcomer.nonEmpty)
-        throw new java.util.ConcurrentModificationException(
-          s"merge over v$from conflicts: a commit after v$from added " +
-          s"rows inside the merge band [$loKey,$hiKey] " +
-          s"(${inBandNewcomer.map(_.path).mkString(",")}) that the " +
-          "transform never saw — re-read and re-merge")
-      Some((rewritten, hit.map(_.path)))
-    }.get
+    val rewritten = restage(root, from,
+      transform(scanFiles(spark, root, schema, hit.map(_.path))), hit,
+      Seq(keyCol), "merge")(_.repartitionByRange(hit.size, col(keyCol)))
+    publishRewrite(root, from, hit, rewritten, _ => s"merge=v$from",
+      _.mayContain(keyCol, loKey, hiKey))
   }
 
-  /** MERGE INTO (keyed upsert), copy-on-write: replace the FULL ROW of
-    * every table key present in `updates` and insert the rows whose
-    * key the table does not hold — one OCC commit, the
-    * `WHEN MATCHED THEN UPDATE / WHEN NOT MATCHED THEN INSERT` shape
-    * every real format exposes. Unlike [[mergeCoW]] (a band-scoped
-    * TRANSFORM the caller expresses as a closure), the update set here
-    * is DATA: an arbitrary keyed DataFrame, which is how upserts
-    * arrive in production (a CDC batch, a corrections feed).
-    *
-    * Touched-file discovery is a broadcast join of the update keys
-    * against the per-file key bands (one row per live file — the same
-    * order of bytes the manifest itself is): a file is touched when
-    * ANY update key falls inside its recorded band; a file with no
-    * recorded `keyCol` stats cannot prove disjointness and is always
-    * touched. The collected result is O(|touched files|), never
-    * O(table) — at 100 TB a keyed upsert rewrites the handful of files
-    * the stats admit ("a MERGE into 100 TB rewrites 3 files, not the
-    * table"). Matched-row replacement and the insert remainder are ONE
-    * union: survivors (touched-file rows whose key is not updated)
-    * ++ the entire `updates` frame.
-    *
-    * Contract: `updates` carries `schema`'s columns and at most one
-    * row per key (two images of one key would land nondeterministically).
-    * Conflicts follow [[mergeCoW]]'s SERIALIZABLE-WRITER rule,
-    * recomputed inside the publish retry against the winning parent:
-    * a later commit that rewrote part of the touched set aborts, and
-    * so does a newcomer file whose band intersects the updates' global
-    * key range (its rows never saw the upsert — write skew); appends
-    * and rewrites disjoint from the range compose. Key-based DVs
-    * inherit with the documented [[deleteMOR]] caveat (an upserted key
-    * that is also in an outstanding DV stays subtracted until
-    * [[compactMOR]]); scoped DVs fail loudly like every rewrite path.
-    */
   /** Touched-file discovery shared by [[upsert]] and [[mergeRewrite]]:
     * a broadcast join of the distinct source keys against the per-file
     * key bands (one row per live file — the same order of bytes the
@@ -145,6 +162,30 @@ trait ManifestMutations { self: ManifestLog with ManifestData
     entries.filter(e => hitPaths(e.path))
   }
 
+  /** MERGE INTO (keyed upsert), copy-on-write: replace the FULL ROW of
+    * every table key present in `updates` and insert the rows whose
+    * key the table does not hold — one OCC commit, the
+    * `WHEN MATCHED THEN UPDATE / WHEN NOT MATCHED THEN INSERT` shape
+    * every real format exposes. Unlike [[mergeCoW]] (a band-scoped
+    * TRANSFORM the caller expresses as a closure), the update set here
+    * is DATA: an arbitrary keyed DataFrame, which is how upserts
+    * arrive in production (a CDC batch, a corrections feed).
+    *
+    * Touched files come from [[touchedByKeys]] — at 100 TB a keyed
+    * upsert rewrites the handful of files the stats admit ("a MERGE
+    * into 100 TB rewrites 3 files, not the table"). Matched-row
+    * replacement and the insert remainder are ONE union: survivors
+    * (touched-file rows whose key is not updated) ++ the entire
+    * `updates` frame.
+    *
+    * Contract: `updates` carries `schema`'s columns and at most one
+    * row per key (two images of one key would land nondeterministically).
+    * Conflicts follow [[publishRewrite]] with the newcomer band = the
+    * updates' global key range. Key-based DVs inherit with the
+    * documented [[deleteMOR]] caveat (an upserted key that is also in
+    * an outstanding DV stays subtracted until [[compactMOR]]); scoped
+    * DVs fail loudly like every rewrite path.
+    */
   def upsert(spark: SparkSession, root: Path, from: Int,
       schema: StructType, keyCol: String, updates: DataFrame): Int = {
     requireNoScopedDvs(root, from, "upsert")
@@ -161,14 +202,9 @@ trait ManifestMutations { self: ManifestLog with ManifestData
       s"(${kb.getLong(2)} rows, ${kb.getLong(3)} distinct keys) — " +
       "an upsert needs at most one row per key")
     val (kLo, kHi) = (kb.getLong(0), kb.getLong(1))
-    val fromEntries = entriesFor(root, from)
-    val hit = touchedByKeys(spark, fromEntries, keyCol, updates)
-    val data = root.resolve("data")
+    val hit = touchedByKeys(spark, entriesFor(root, from), keyCol, updates)
     val ordered = updates.select(schema.fieldNames.map(col).toSeq: _*)
-    val touched =
-      if (hit.isEmpty) null
-      else spark.read.schema(schema)
-        .parquet(hit.map(e => data.resolve(e.path).toString): _*)
+    val touched = scanFiles(spark, root, schema, hit.map(_.path))
     // TARGET-side duplicate guard (round-10 ADVICE, medium): the
     // upsert replaces every matched key with ONE source image — if the
     // table holds duplicate rows for a matched key (appends are
@@ -194,37 +230,10 @@ trait ManifestMutations { self: ManifestLog with ManifestData
       else touched
         .join(updates.select(keyCol), Seq(keyCol), "left_anti")
         .unionByName(ordered)
-    // rewritten files keep the touched set's stats coverage (mergeCoW
-    // discipline, string bounds included): an upsert must not narrow
-    // the columns later prunes rely on
-    val statCols = (keyCol +: hit.flatMap(_.stats.map(_._1))).distinct
-    val strColsU = hit.flatMap(_.strStats.map(_._1)).distinct
-    val dblColsU = hit.flatMap(_.dblStats.map(_._1)).distinct
-    val decColsU = hit.flatMap(_.decStats.map(_._1)).distinct
-    val binColsU = hit.flatMap(_.binStats.map(_._1)).distinct
-    val rewritten = stage(
-      restoreTransformCols(root, from, replacement)
-        .repartitionByRange(math.max(1, hit.size + 1), col(keyCol)),
-      root, s"upsert$from", statCols, strColsU, dblColsU,
-      decColsU, binColsU)
-    val fromPaths = fromEntries.map(_.path).toSet
-    commitOpsF(root, _ => s"upsert=v$from") { parent =>
-      val cur = entriesFor(root, parent)
-      val curPaths = cur.map(_.path).toSet
-      if (!hit.forall(e => curPaths.contains(e.path)))
-        throw new java.util.ConcurrentModificationException(
-          s"upsert over v$from conflicts: a commit after v$from " +
-          "rewrote part of its touched set — re-read and re-upsert")
-      val newcomer = cur.filterNot(e => fromPaths.contains(e.path))
-        .filter(_.mayContain(keyCol, kLo, kHi))
-      if (newcomer.nonEmpty)
-        throw new java.util.ConcurrentModificationException(
-          s"upsert over v$from conflicts: a commit after v$from added " +
-          s"rows inside the update key range [$kLo,$kHi] " +
-          s"(${newcomer.map(_.path).mkString(",")}) the upsert never " +
-          "saw — re-read and re-upsert")
-      Some((rewritten, hit.map(_.path)))
-    }.get
+    val rewritten = restage(root, from, replacement, hit, Seq(keyCol),
+      "upsert")(_.repartitionByRange(hit.size + 1, col(keyCol)))
+    publishRewrite(root, from, hit, rewritten, _ => s"upsert=v$from",
+      _.mayContain(keyCol, kLo, kHi))
   }
 
   /** GENERAL row-level MERGE rewrite (round 11 — the r10-VERDICT top
@@ -242,13 +251,11 @@ trait ManifestMutations { self: ManifestLog with ManifestData
     * O(table) — UNLESS `touchAll` (a merge with NOT MATCHED BY SOURCE
     * actions must see every target row; that clause is definitionally
     * a full-table operation, exactly as in Delta). Conflicts follow
-    * the [[upsert]] serializable-writer rule recomputed inside the
-    * publish retry: a later commit that rewrote part of the touched
-    * set aborts, and so does a newcomer file whose band intersects the
-    * source key range (or ANY newcomer under `touchAll` — its rows
-    * never saw the not-matched-by-source clauses). An empty source
-    * with band-scoped semantics returns `from` untouched (nothing can
-    * match and nothing inserts).
+    * [[publishRewrite]] with the newcomer band = the source key range,
+    * or ANY newcomer under `touchAll` (its rows never saw the
+    * not-matched-by-source clauses). An empty source with band-scoped
+    * semantics returns `from` untouched (nothing can match and nothing
+    * inserts).
     */
   def mergeRewrite(spark: SparkSession, root: Path, from: Int,
       schema: StructType, keyCol: String, sourceKeys: DataFrame,
@@ -268,26 +275,9 @@ trait ManifestMutations { self: ManifestLog with ManifestData
     val hit =
       if (touchAll) fromEntries
       else touchedByKeys(spark, fromEntries, keyCol, sourceKeys)
-    val data = root.resolve("data")
-    val touched =
-      if (hit.isEmpty) spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-      else spark.read.schema(schema)
-        .parquet(hit.map(e => data.resolve(e.path).toString): _*)
-    val replacement = rewrite(touched)
-    // the non-narrowing rule: rewritten files keep the touched set's
-    // stat coverage, string bounds included
-    val statCols = (keyCol +: hit.flatMap(_.stats.map(_._1))).distinct
-    val strCols = hit.flatMap(_.strStats.map(_._1)).distinct
-    val dblCols = hit.flatMap(_.dblStats.map(_._1)).distinct
-    val decCols = hit.flatMap(_.decStats.map(_._1)).distinct
-    val binCols = hit.flatMap(_.binStats.map(_._1)).distinct
-    val rewritten = stage(
-      restoreTransformCols(root, from, replacement)
-        .repartitionByRange(math.max(1, hit.size + 1), col(keyCol)),
-      root, s"mrg$from", statCols, strCols, dblCols, decCols,
-      binCols)
-    val fromPaths = fromEntries.map(_.path).toSet
+    val rewritten = restage(root, from,
+      rewrite(scanFiles(spark, root, schema, hit.map(_.path))), hit,
+      Seq(keyCol), "mrg")(_.repartitionByRange(hit.size + 1, col(keyCol)))
     // extraMetaOf rides THE merge commit itself — schema evolution on
     // MERGE widens atomically with the data change (review fix: a
     // separate pre-commit ADD would survive a failed or conflicted
@@ -296,64 +286,36 @@ trait ManifestMutations { self: ManifestLog with ManifestData
     // evolved schema= built from a pre-read snapshot would overwrite
     // a concurrent non-intersecting commit's own widening, dropping
     // that column from the logical view)
-    commitOpsF(root, p => (s"merge=v$from " + extraMetaOf(p)).trim) { parent =>
-      val cur = entriesFor(root, parent)
-      val curPaths = cur.map(_.path).toSet
-      if (!hit.forall(e => curPaths.contains(e.path)))
-        throw new java.util.ConcurrentModificationException(
-          s"merge over v$from conflicts: a commit after v$from " +
-          "rewrote part of its touched set — re-read and re-merge")
-      val newcomer = cur.filterNot(e => fromPaths.contains(e.path))
-        .filter(e => touchAll || bounds.exists { case (lo, hi) =>
-          e.mayContain(keyCol, lo, hi) })
-      if (newcomer.nonEmpty)
-        throw new java.util.ConcurrentModificationException(
-          s"merge over v$from conflicts: a commit after v$from added " +
-          s"rows the merge never saw " +
-          s"(${newcomer.map(_.path).mkString(",")}) — re-read and " +
-          "re-merge")
-      Some((rewritten, hit.map(_.path)))
-    }.get
+    publishRewrite(root, from, hit, rewritten,
+      p => (s"merge=v$from " + extraMetaOf(p)).trim,
+      e => touchAll || bounds.exists { case (lo, hi) =>
+        e.mayContain(keyCol, lo, hi) })
   }
 
-  /** Shared copy-on-write file-rewrite commit: replace exactly `hit`
-    * with the staged `replacement` rows under the upsert's conflict
-    * discipline (touched files must still be live at publish time).
-    * The staged files keep the touched set's stat coverage — a rewrite
-    * must never narrow the columns later prunes rely on.
+  /** Shared copy-on-write body of [[deleteWhereCoW]] and
+    * [[updateWhereCoW]] on the latest version: the band hints (plain
+    * bands plus the hidden-partition bands they derive) prune the
+    * touched set, `transform` maps the touched files' rows to their
+    * replacement, and the replacement is clustered back on the leading
+    * recorded stat column. No touched file commits nothing.
     */
-  private def rewriteFilesCoW(spark: SparkSession, root: Path, from: Int,
-      hit: Seq[FileEntry], replacement: DataFrame, opMeta: String,
-      batchTag: String): Int = {
-    val statCols = hit.flatMap(_.stats.map(_._1)).distinct
-    val strCols = hit.flatMap(_.strStats.map(_._1)).distinct
-    val dblCols = hit.flatMap(_.dblStats.map(_._1)).distinct
-    val decCols = hit.flatMap(_.decStats.map(_._1)).distinct
-    val binCols = hit.flatMap(_.binStats.map(_._1)).distinct
-    // restore hidden-partitioning virtual columns FIRST: the leading
-    // stat column (the clustering key below) may itself be a __pt*
-    // transform the logical-schema frame lacks (wave-150 review fix)
-    val restored = restoreTransformCols(root, from, replacement)
-    // keep the rewritten set clustered on the leading stat column when
-    // one exists (narrow bounds keep the files prunable); otherwise
-    // the layout is whatever the replacement plan produced
-    val laid = statCols.headOption match {
-      case Some(k) => restored
-        .repartitionByRange(math.max(1, hit.size), col(k))
-      case None => restored
-    }
-    // a stats-less table (no statsColumns property) still rewrites —
-    // there is just no coverage to preserve
-    val rewritten = stage(laid, root, s"$batchTag$from",
-      statCols, strCols, dblCols, decCols, binCols)
-    commitOpsF(root, _ => opMeta) { parent =>
-      val curPaths = entriesFor(root, parent).map(_.path).toSet
-      if (!hit.forall(e => curPaths.contains(e.path)))
-        throw new java.util.ConcurrentModificationException(
-          s"$opMeta over v$from conflicts: a commit after v$from " +
-          "rewrote part of its touched set — re-read and re-run")
-      Some((rewritten, hit.map(_.path)))
-    }.get
+  private def rewriteFilesCoW(spark: SparkSession, root: Path,
+      schema: StructType, op: String, tag: String,
+      longBands: Seq[(String, Long, Long)],
+      strBands: Seq[(String, Option[String], Option[String])],
+      dblBands: Seq[(String, Double, Double)],
+      decBands: Seq[(String, Option[BigDecimal], Option[BigDecimal])])(
+      transform: DataFrame => DataFrame): Int = {
+    val from = latestVersion(root)
+    require(from > 0, s"${op}Where on an empty table")
+    requireNoScopedDvs(root, from, s"${op}Where")
+    val (hit, _, _) = prunedEntries(root, from,
+      longBands ++ hiddenBands(root, from, longBands), strBands,
+      dblBands, decBands)
+    if (hit.isEmpty) return from
+    publishRewrite(root, from, hit, restage(root, from,
+      transform(scanFiles(spark, root, schema, hit.map(_.path))), hit,
+      Nil, tag)(byLeadStat(hit)), _ => s"$op=v$from")
   }
 
   /** SQL `DELETE FROM … WHERE cond` as copy-on-write: the band hints
@@ -371,23 +333,10 @@ trait ManifestMutations { self: ManifestLog with ManifestData
       strBands: Seq[(String, Option[String], Option[String])] = Nil,
       dblBands: Seq[(String, Double, Double)] = Nil,
       decBands: Seq[(String, Option[BigDecimal], Option[BigDecimal])] = Nil)
-      : Int = {
-    val from = latestVersion(root)
-    require(from > 0, "deleteWhere on an empty table")
-    requireNoScopedDvs(root, from, "deleteWhere")
-    // hidden partitioning composes: derive virtual transform bands
-    // from the caller's plain bands (superset admit either way)
-    val (hit, _, _) = prunedEntries(root, from,
-      longBands ++ hiddenBands(root, from, longBands), strBands,
-      dblBands, decBands)
-    if (hit.isEmpty) return from
-    val data = root.resolve("data")
-    val kept = spark.read.schema(schema)
-      .parquet(hit.map(e => data.resolve(e.path).toString): _*)
-      .filter(not(coalesce(cond, lit(false))))
-    rewriteFilesCoW(spark, root, from, hit, kept,
-      s"delete=v$from", "del")
-  }
+      : Int =
+    rewriteFilesCoW(spark, root, schema, "delete", "del", longBands,
+      strBands, dblBands, decBands)(
+      _.filter(not(coalesce(cond, lit(false)))))
 
   /** Predicate-scoped overwrite (round 13 — Delta's `replaceWhere`,
     * Spark SQL's `INSERT INTO … REPLACE WHERE cond SELECT …`): one
@@ -446,8 +395,7 @@ trait ManifestMutations { self: ManifestLog with ManifestData
     val data = root.resolve("data")
     val newPaths = newLines.map(_.split('\t').head)
     if (newPaths.nonEmpty) {
-      val stray = !spark.read.schema(schema)
-        .parquet(newPaths.map(p => data.resolve(p).toString): _*)
+      val stray = !scanFiles(spark, root, schema, newPaths)
         .filter(not(coalesce(cond, lit(false)))).limit(1).isEmpty
       if (stray) {
         newPaths.foreach(p =>
@@ -462,33 +410,13 @@ trait ManifestMutations { self: ManifestLog with ManifestData
     val (hit, _, _) = prunedEntries(root, from,
       longBands ++ hiddenBands(root, from, longBands), strBands,
       dblBands, decBands)
-    // survivors: the touched files' non-matching rows, coverage
-    // preserved, clustered back on the leading recorded stat column
-    val survNames: Seq[String] = if (hit.isEmpty) Nil else {
-      val sc = hit.flatMap(_.stats.map(_._1)).distinct
-      val sSc = hit.flatMap(_.strStats.map(_._1)).distinct
-      val dSc = hit.flatMap(_.dblStats.map(_._1)).distinct
-      val decSc = hit.flatMap(_.decStats.map(_._1)).distinct
-      val binSc = hit.flatMap(_.binStats.map(_._1)).distinct
-      val kept = restoreTransformCols(root, from,
-        spark.read.schema(schema)
-          .parquet(hit.map(e => data.resolve(e.path).toString): _*)
-          .filter(not(coalesce(cond, lit(false)))))
-      val laid = sc.headOption match {
-        case Some(k) => kept.repartitionByRange(
-          math.max(1, hit.size), col(k))
-        case None => kept
-      }
-      stage(laid, root, s"rws$from", sc, sSc, dSc, decSc, binSc)
-    }
-    commitOpsF(root, _ => s"replacewhere=v$from") { parent =>
-      val curPaths = entriesFor(root, parent).map(_.path).toSet
-      if (!hit.forall(e => curPaths.contains(e.path)))
-        throw new java.util.ConcurrentModificationException(
-          s"replaceWhere over v$from conflicts: a commit after " +
-          s"v$from rewrote part of its touched set — re-read and re-run")
-      Some((survNames ++ newLines, hit.map(_.path)))
-    }.get
+    // survivors: the touched files' non-matching rows
+    val survNames = if (hit.isEmpty) Nil else restage(root, from,
+      scanFiles(spark, root, schema, hit.map(_.path))
+        .filter(not(coalesce(cond, lit(false)))), hit, Nil, "rws")(
+      byLeadStat(hit))
+    publishRewrite(root, from, hit, survNames, _ => s"replacewhere=v$from",
+      inserted = newLines)
   }
 
   /** DYNAMIC partition overwrite (round 13 — Iceberg's signature
@@ -538,40 +466,22 @@ trait ManifestMutations { self: ManifestLog with ManifestData
       }
     }
     val bucketLike = t.isInstanceOf[BucketTransform]
-    val (drop, rewriteSet) = hit.partition(e => bucketLike &&
+    val rewriteSet = hit.filterNot(e => bucketLike &&
       e.band(t.statName).exists { case (lo, hi) =>
         lo == hi && values.contains(lo) })
-    val survNames: Seq[String] = if (rewriteSet.isEmpty) Nil else {
+    val survNames = if (rewriteSet.isEmpty) Nil else {
       val inS = {
         val base = if (values.isEmpty) lit(false)
           else t.exprCol.isin(values.toSeq: _*)
         if (hasNullPart) base || t.exprCol.isNull else base
       }
-      val sc = rewriteSet.flatMap(_.stats.map(_._1)).distinct
-      val sSc = rewriteSet.flatMap(_.strStats.map(_._1)).distinct
-      val dSc = rewriteSet.flatMap(_.dblStats.map(_._1)).distinct
-      val decSc = rewriteSet.flatMap(_.decStats.map(_._1)).distinct
-      val binSc = rewriteSet.flatMap(_.binStats.map(_._1)).distinct
-      val kept = restoreTransformCols(root, from,
-        spark.read.schema(schema)
-          .parquet(rewriteSet.map(e =>
-            data.resolve(e.path).toString): _*)
-          .filter(not(coalesce(inS, lit(false)))))
-      val laid = sc.headOption match {
-        case Some(k) => kept.repartitionByRange(
-          math.max(1, rewriteSet.size), col(k))
-        case None => kept
-      }
-      stage(laid, root, s"dyo$from", sc, sSc, dSc, decSc, binSc)
+      restage(root, from,
+        scanFiles(spark, root, schema, rewriteSet.map(_.path))
+          .filter(not(coalesce(inS, lit(false)))), rewriteSet, Nil,
+        "dyo")(byLeadStat(rewriteSet))
     }
-    commitOpsF(root, _ => s"dynoverwrite=v$from") { parent =>
-      val curPaths = entriesFor(root, parent).map(_.path).toSet
-      if (!hit.forall(e => curPaths.contains(e.path)))
-        throw new java.util.ConcurrentModificationException(
-          s"dynamic overwrite over v$from conflicts: a commit after " +
-          s"v$from rewrote part of its touched set — re-run")
-      Some((survNames ++ newLines, hit.map(_.path)))
-    }.get
+    publishRewrite(root, from, hit, survNames, _ => s"dynoverwrite=v$from",
+      inserted = newLines)
   }
 
   /** SQL `UPDATE … SET … WHERE cond` as copy-on-write: same pruned
@@ -589,28 +499,15 @@ trait ManifestMutations { self: ManifestLog with ManifestData
     require(set.nonEmpty, "UPDATE with no assignments")
     set.keys.foreach(k => require(schema.fieldNames.contains(k),
       s"UPDATE assigns unknown column '$k'"))
-    val from = latestVersion(root)
-    require(from > 0, "updateWhere on an empty table")
-    requireNoScopedDvs(root, from, "updateWhere")
-    // hidden partitioning composes: derive virtual transform bands
-    // from the caller's plain bands (superset admit either way)
-    val (hit, _, _) = prunedEntries(root, from,
-      longBands ++ hiddenBands(root, from, longBands), strBands,
-      dblBands, decBands)
-    if (hit.isEmpty) return from
-    val data = root.resolve("data")
     val c = coalesce(cond, lit(false))
-    val updated = spark.read.schema(schema)
-      .parquet(hit.map(e => data.resolve(e.path).toString): _*)
-      .select(schema.fields.toSeq.map { f =>
+    rewriteFilesCoW(spark, root, schema, "update", "upd", longBands,
+      strBands, dblBands, decBands)(_.select(schema.fields.toSeq.map { f =>
         set.get(f.name) match {
           case Some(v) =>
             when(c, v.cast(f.dataType)).otherwise(col(f.name)).as(f.name)
           case None => col(f.name)
         }
-      }: _*)
-    rewriteFilesCoW(spark, root, from, hit, updated,
-      s"update=v$from", "upd")
+      }: _*))
   }
 
   /** OPTIMIZE (small-file bin-packing): rewrite ONLY the live files
@@ -632,38 +529,23 @@ trait ManifestMutations { self: ManifestLog with ManifestData
       schema: StructType, keyCol: String, smallBytes: Long): Int = {
     requireNoScopedDvs(root, from, "optimizeSmall")
     val data = root.resolve("data")
-    val (small, keep) = entriesFor(root, from)
-      .partition(e => Files.size(data.resolve(e.path)) < smallBytes)
+    val small = entriesFor(root, from)
+      .filter(e => Files.size(data.resolve(e.path)) < smallBytes)
     if (small.size < 2) return from
-    // preserve the packed files' stats coverage (string bounds
-    // included), like mergeCoW
-    val statCols = (keyCol +: small.flatMap(_.stats.map(_._1))).distinct
-    val strCols = small.flatMap(_.strStats.map(_._1)).distinct
-    val dblCols = small.flatMap(_.dblStats.map(_._1)).distinct
-    val decCols = small.flatMap(_.decStats.map(_._1)).distinct
-    val binCols = small.flatMap(_.binStats.map(_._1)).distinct
-    val restored = restoreTransformCols(root, from,
-      spark.read.schema(schema)
-        .parquet(small.map(e => data.resolve(e.path).toString): _*))
     val target = math.max(1,
       (small.map(e => Files.size(data.resolve(e.path))).sum
         / smallBytes).toInt)
     val ts = partTransforms(root, from)
-    val laid =
+    val packed = restage(root, from,
+      scanFiles(spark, root, schema, small.map(_.path)), small,
+      Seq(keyCol), "opt", roll = ts.nonEmpty) { restored =>
       if (ts.nonEmpty) {
         val sortCols = (ts.map(_.statName) :+ keyCol).map(col)
         restored.repartitionByRange(target, sortCols: _*)
           .sortWithinPartitions(sortCols: _*)
       } else restored.repartitionByRange(target, col(keyCol))
-    val packed = stageFiles(laid, root, s"opt$from",
-      roll = ts.nonEmpty, statCols, strCols, dblCols, decCols, binCols)
-    commitOpsF(root, _ => s"optimize=v$from") { parent =>
-      val curPaths = entriesFor(root, parent).map(_.path).toSet
-      if (!small.forall(e => curPaths.contains(e.path)))
-        throw new java.util.ConcurrentModificationException(
-          s"optimize over v$from conflicts with a later rewrite")
-      Some((packed, small.map(_.path)))
-    }.get
+    }
+    publishRewrite(root, from, small, packed, _ => s"optimize=v$from")
   }
 
   /** Deletion-vector names a version references (merge-on-read state),
@@ -716,8 +598,10 @@ trait ManifestMutations { self: ManifestLog with ManifestData
     * bits (doubles, clamp-safe for any value range — the z-value only
     * ORDERS the rewrite, data is untouched), interleaved with
     * codegen-friendly mask/shift ops, range-partitioned and sorted on
-    * the z-value, and staged with stats on BOTH columns. Commit
-    * follows [[optimizeSmall]]'s read-set conflict rule.
+    * the z-value, and staged with stats on every interleaved column
+    * plus the live set's recorded coverage (the narrow per-file bands
+    * ARE the product this op sells). Commit follows
+    * [[publishRewrite]]'s read-set rule.
     */
   def optimizeZorder(spark: SparkSession, root: Path, from: Int,
       schema: StructType, cols: Seq[String], targetFiles: Int): Int = {
@@ -725,7 +609,7 @@ trait ManifestMutations { self: ManifestLog with ManifestData
     require(cols.size == 2 || cols.size == 3,
       "optimizeZorder interleaves 2 or 3 columns")
     val live = entriesFor(root, from)
-    val df = read(spark, root, from, schema)
+    val df = scanFiles(spark, root, schema, live.map(_.path))
     val aggs = cols.flatMap(c => Seq(min(c), max(c)))
     val b = df.agg(aggs.head, aggs.tail: _*).head()
     if (b.isNullAt(0)) return from // empty table — nothing to cluster
@@ -739,27 +623,11 @@ trait ManifestMutations { self: ManifestLog with ManifestData
       if (cols.size == 2) spreadBits else spreadBits3
     val z = cols.indices.map(i => shiftleft(spread(norm(i)), i))
       .reduce(_ bitwiseOR _)
-    // stats on both interleaved columns: the narrow per-file bands ARE
-    // the product this op sells; preserve any further recorded columns
-    // of BOTH kinds (the non-narrowing rule, wave-139 review fix)
-    val statCols = (cols ++ live.flatMap(_.stats.map(_._1))).distinct
-    val strCols = live.flatMap(_.strStats.map(_._1)).distinct
-    val dblCols = live.flatMap(_.dblStats.map(_._1)).distinct
-    val decCols = live.flatMap(_.decStats.map(_._1)).distinct
-    val binCols = live.flatMap(_.binStats.map(_._1)).distinct
-    val rewritten = stage(
-      restoreTransformCols(root, from, df.withColumn("__z", z)
+    val rewritten = restage(root, from, df, live, cols, "zorder")(
+      _.withColumn("__z", z)
         .repartitionByRange(math.max(1, targetFiles), col("__z"))
-        .sortWithinPartitions("__z").drop("__z")),
-      root, s"zorder$from", statCols, strCols, dblCols,
-      decCols, binCols)
-    commitOpsF(root, _ => s"zorder=v$from") { parent =>
-      val curPaths = entriesFor(root, parent).map(_.path).toSet
-      if (!live.forall(e => curPaths.contains(e.path)))
-        throw new java.util.ConcurrentModificationException(
-          s"zorder over v$from conflicts with a later rewrite")
-      Some((rewritten, live.map(_.path)))
-    }.get
+        .sortWithinPartitions("__z").drop("__z"))
+    publishRewrite(root, from, live, rewritten, _ => s"zorder=v$from")
   }
 
   /** Merge-on-READ delete — the CoW alternative real formats call
@@ -987,17 +855,8 @@ trait ManifestMutations { self: ManifestLog with ManifestData
       schema: StructType, keyCol: String, targetFiles: Int): Int = {
     require(dvsFor(root, from).isEmpty && scopedDvsFor(root, from).isEmpty,
       "mixed vector kinds on one snapshot — compact the others first")
-    val live = entriesFor(root, from)
-    commit(root, stage(
-      restoreTransformCols(root, from,
-          readMORPositional(spark, root, from, schema))
-        .repartitionByRange(math.max(1, targetFiles), col(keyCol)),
-      root, s"cmorp$from",
-      (keyCol +: live.flatMap(_.stats.map(_._1))).distinct,
-      live.flatMap(_.strStats.map(_._1)).distinct,
-      live.flatMap(_.dblStats.map(_._1)).distinct,
-      live.flatMap(_.decStats.map(_._1)).distinct,
-      live.flatMap(_.binStats.map(_._1)).distinct), meta = "dvr=")
+    materialize(root, from, readMORPositional(spark, root, from, schema),
+      keyCol, targetFiles, "cmorp", clears = "dvr")
   }
 
   /** Materialize the scoped-MOR view into plain stats-carrying files
@@ -1008,18 +867,22 @@ trait ManifestMutations { self: ManifestLog with ManifestData
       schema: StructType, keyCol: String, targetFiles: Int): Int = {
     require(dvsFor(root, from).isEmpty && rowDvsFor(root, from).isEmpty,
       "mixed vector kinds on one snapshot — compact the others first")
-    // preserve recorded stat coverage of BOTH kinds (non-narrowing)
+    materialize(root, from, readMORScoped(spark, root, from, schema, keyCol),
+      keyCol, targetFiles, "cmors", clears = "dvp")
+  }
+
+  /** Publish `view` — version `from` minus its vectors of kind
+    * `clears` — as `from`'s whole live set, range-laid on `keyCol`
+    * into `targetFiles` files, and clear that vector list. Any file
+    * added after `from` conflicts: its rows were never subtracted.
+    */
+  private def materialize(root: Path, from: Int, view: DataFrame,
+      keyCol: String, targetFiles: Int, tag: String, clears: String): Int = {
     val live = entriesFor(root, from)
-    commit(root, stage(
-      restoreTransformCols(root, from,
-          readMORScoped(spark, root, from, schema, keyCol))
-        .repartitionByRange(math.max(1, targetFiles), col(keyCol)),
-      root, s"cmors$from",
-      (keyCol +: live.flatMap(_.stats.map(_._1))).distinct,
-      live.flatMap(_.strStats.map(_._1)).distinct,
-      live.flatMap(_.dblStats.map(_._1)).distinct,
-      live.flatMap(_.decStats.map(_._1)).distinct,
-      live.flatMap(_.binStats.map(_._1)).distinct), meta = "dvp=")
+    publishRewrite(root, from, live, restage(root, from, view, live,
+        Seq(keyCol), tag)(_.repartitionByRange(math.max(1, targetFiles),
+        col(keyCol))), _ => "", _ => true, checkpoint = true,
+      clears = clears)
   }
 
   /** Fail-loud guard for the rewrite paths: positional vectors do not
@@ -1060,20 +923,8 @@ trait ManifestMutations { self: ManifestLog with ManifestData
   def compactMOR(spark: SparkSession, root: Path, from: Int,
       schema: StructType, keyCol: String, targetFiles: Int): Int = {
     requireNoScopedDvs(root, from, "compactMOR")
-    // explicit empty dv= token: the vectors were just materialized, so
-    // this is the ONE commit that must NOT inherit the parent's list.
-    // Stat coverage of BOTH kinds is preserved (non-narrowing).
-    val live = entriesFor(root, from)
-    commit(root, stage(
-      restoreTransformCols(root, from,
-          readMOR(spark, root, from, schema, keyCol))
-        .repartitionByRange(math.max(1, targetFiles), col(keyCol)),
-      root, s"cmor$from",
-      (keyCol +: live.flatMap(_.stats.map(_._1))).distinct,
-      live.flatMap(_.strStats.map(_._1)).distinct,
-      live.flatMap(_.dblStats.map(_._1)).distinct,
-      live.flatMap(_.decStats.map(_._1)).distinct,
-      live.flatMap(_.binStats.map(_._1)).distinct), meta = "dv=")
+    materialize(root, from, readMOR(spark, root, from, schema, keyCol),
+      keyCol, targetFiles, "cmor", clears = "dv")
   }
 
   /** Retention: delete data files referenced by NO version ≥
@@ -1155,27 +1006,6 @@ trait ManifestMutations { self: ManifestLog with ManifestData
     dead
   }
 
-  /** LOG retention (wave 138): delete the manifest files no kept
-    * version's resolution can reach — without it `_manifests/` grows
-    * one file per commit FOREVER (a million-commit table carries a
-    * million log files), the unbounded-metadata twin of the data-file
-    * problem [[vacuum]] solves; Delta's logRetentionDuration and
-    * Iceberg's expire-snapshots exist for exactly this.
-    *
-    * Resolving any v ≥ `keepFrom` needs v's delta chain back to its
-    * checkpoint, and chains only ever point BACKWARD — so everything
-    * below `chainBase(keepFrom)` (the checkpoint at or below it) is
-    * unreachable from every kept version and can go. Time travel below
-    * `keepFrom` dies — that is the point, the same contract as
-    * [[vacuum]]; batch-ledger entries recorded only in expired
-    * manifests are forgotten (don't expire below a live sink's replay
-    * horizon), and `history`/`versionAt` truncate to the kept range.
-    * The `_first` hint is written BEFORE the deletes so a crash
-    * mid-expiry leaves a valid (already-truncated) view plus some
-    * undeleted stragglers the next expiry sweeps; the expired
-    * checkpoints' parquet segments become unreferenced and fall to
-    * [[vacuumOrphanSegments]]. Returns the deleted manifest names.
-    */
   /** RESTORE the table to snapshot `to` (round 12 — Delta's `RESTORE
     * TABLE … VERSION AS OF`, Iceberg's rollback_to_snapshot): ONE new
     * checkpoint commit whose live set, deletion-vector lists, and
@@ -1281,6 +1111,27 @@ trait ManifestMutations { self: ManifestLog with ManifestData
     else None
   }
 
+  /** LOG retention (wave 138): delete the manifest files no kept
+    * version's resolution can reach — without it `_manifests/` grows
+    * one file per commit FOREVER (a million-commit table carries a
+    * million log files), the unbounded-metadata twin of the data-file
+    * problem [[vacuum]] solves; Delta's logRetentionDuration and
+    * Iceberg's expire-snapshots exist for exactly this.
+    *
+    * Resolving any v ≥ `keepFrom` needs v's delta chain back to its
+    * checkpoint, and chains only ever point BACKWARD — so everything
+    * below `chainBase(keepFrom)` (the checkpoint at or below it) is
+    * unreachable from every kept version and can go. Time travel below
+    * `keepFrom` dies — that is the point, the same contract as
+    * [[vacuum]]; batch-ledger entries recorded only in expired
+    * manifests are forgotten (don't expire below a live sink's replay
+    * horizon), and `history`/`versionAt` truncate to the kept range.
+    * The `_first` hint is written BEFORE the deletes so a crash
+    * mid-expiry leaves a valid (already-truncated) view plus some
+    * undeleted stragglers the next expiry sweeps; the expired
+    * checkpoints' parquet segments become unreferenced and fall to
+    * [[vacuumOrphanSegments]]. Returns the deleted manifest names.
+    */
   def expireManifests(root: Path, keepFrom: Int): Seq[String] = {
     val latest = latestVersion(root)
     require(keepFrom >= 1 && keepFrom <= latest,
@@ -1330,16 +1181,19 @@ trait ManifestMutations { self: ManifestLog with ManifestData
 
 
   /** Compaction as a normal snapshot: rewrite version `from`'s live
-    * set into `targetFiles` files and commit the REPLACEMENT list.
-    * Old files stay on disk — every pinned reader of `from` is
-    * untouched (snapshot isolation by immutability).
+    * set round-robin into `targetFiles` files that keep its stats
+    * coverage, and publish them in its place as a checkpoint. Files
+    * appended after `from` stay live; a later rewrite of `from`'s files
+    * conflicts. Old files stay on disk — every pinned reader of `from`
+    * is untouched (snapshot isolation by immutability).
     */
   def compact(spark: SparkSession, root: Path, from: Int,
       schema: StructType, targetFiles: Int): Int = {
     requireNoScopedDvs(root, from, "compact")
-    val rewritten = stage(
-      read(spark, root, from, schema).repartition(targetFiles),
-      root, s"compact$from")
-    commit(root, rewritten)
+    val live = entriesFor(root, from)
+    publishRewrite(root, from, live, restage(root, from,
+        scanFiles(spark, root, schema, live.map(_.path)), live, Nil,
+        "compact")(_.repartition(targetFiles)), _ => "",
+      checkpoint = true)
   }
 }

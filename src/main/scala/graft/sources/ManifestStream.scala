@@ -219,7 +219,8 @@ private[graft] class ManifestStreamSink(ctx: SQLContext, root: Path,
       if (!ManifestTable.committedBatchesCached(root).contains(batchId)) {
         val staged = ManifestTable.stage(df, root, s"b$batchId-c",
           longCols, strCols, dblCols, decCols)
-        ManifestTable.commitCheckpointBatch(root, staged, batchId): Unit
+        ManifestTable.commitCheckpointBatch(root, staged, batchId,
+          Some(df.schema)): Unit
       }
     }
   }

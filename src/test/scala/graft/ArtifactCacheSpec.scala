@@ -6,8 +6,8 @@ import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.IntegerType
 
-/** ArtifactCache: fingerprint keying, build-once semantics, and
-  * staleness behavior when a source fixture changes.
+/** ArtifactCache: fingerprint and code-stamp keying, build-once
+  * semantics, and staleness behavior when a source fixture changes.
   */
 class ArtifactCacheSpec extends SparkSpec {
 
@@ -64,6 +64,21 @@ class ArtifactCacheSpec extends SparkSpec {
       if (Files.isDirectory(p) && !p.getFileName.toString.contains(".p"))
         assert(Files.exists(p.resolve("_SUCCESS")), s"$p lacks _SUCCESS")
     } finally s2.close()
+  }
+
+  test("artifact roots built by different engine code are distinct") {
+    val dir = freshSource(5)
+    val src = Seq(s"$dir/src.parquet")
+    val stamp = operators.ArtifactCache.codeStamp
+    assert(stamp.matches("[0-9a-f]{16}") &&
+      stamp == operators.ArtifactCache.codeStamp)
+    assert(operators.ArtifactCache.rootFor("acspec_code", src, "aaaa") !=
+      operators.ArtifactCache.rootFor("acspec_code", src, "bbbb"))
+    operators.ArtifactCache(spark, "acspec_code", src) {
+      spark.read.parquet(src.head)
+    }.count()
+    assert(Files.exists(operators.ArtifactCache
+      .rootFor("acspec_code", src, stamp).resolve("_SUCCESS")))
   }
 
   test("concurrent first calls in one JVM build once and share the published root") {

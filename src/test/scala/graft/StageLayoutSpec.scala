@@ -7,7 +7,8 @@ import graft.operators.ManifestTable.{BucketTransform, DaysTransform}
 import org.apache.spark.sql.functions._
 
 /** File layout of [[ManifestTable.stage]]: one file per non-empty input
-  * partition, none for an empty one (partition 0 included); hidden
+  * partition, none for an empty one (partition 0 included), under names
+  * no other call reuses; hidden
   * partitioning never rolls on the unsorted range-laid frame; the
   * layout-aware OPTIMIZE still rolls to value-exact files; and a
   * merge-on-read delete of zero keys commits no sidecar.
@@ -36,6 +37,17 @@ class StageLayoutSpec extends SparkSpec {
     assert(dataFileCount(root) == 5L, "no other file (checksums included)")
     val v = ManifestTable.commit(root, a ++ b)
     assert(ManifestTable.read(spark, root, v, four.schema).count() == 125L)
+  }
+
+  test("two stage calls with one batch name write distinct files") {
+    val root = Files.createTempDirectory("graft_layout_names")
+    val df = spark.range(0, 10, 1, 2).toDF("k")
+    val a = ManifestTable.stage(df, root, "same")
+    val b = ManifestTable.stage(df, root, "same")
+    assert(a.size == 2 && b.size == 2)
+    assert(a.toSet.intersect(b.toSet).isEmpty,
+      s"the second call reused the first call's names: $a $b")
+    assert(dataFileCount(root) == 4L)
   }
 
   test("stageHidden with days() stages at most `files` files") {

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 /** Round-9 wave 107: the r8 ADVICE hazards in the manifest format —
   * deletion-vector propagation through every commit path, vacuum's
-  * retention guard for in-flight writers, the compact staging nonce,
+  * retention guard for in-flight writers, a stale repeated compaction,
   * and mergeCoW's write-skew (in-band newcomer) conflict.
   */
 class Wave107Spec extends SparkSpec {
@@ -88,10 +88,12 @@ class Wave107Spec extends SparkSpec {
     val c1 = ManifestTable.compact(spark, root, 1, df.schema, 1)
     val sig1 = ManifestTable.read(spark, root, c1, df.schema)
       .agg(count(lit(1)), sum("k"), sum("v")).head()
-    val c2 = ManifestTable.compact(spark, root, 1, df.schema, 1)
-    assert(ManifestTable.filesFor(root, c1).toSet
-      .intersect(ManifestTable.filesFor(root, c2).toSet).isEmpty,
-      "repeated compaction reused the first run's file names")
+    // the first already rewrote v1's files, so the second aborts (and
+    // deletes only its own staged files)
+    intercept[java.util.ConcurrentModificationException] {
+      ManifestTable.compact(spark, root, 1, df.schema, 1)
+    }
+    assert(ManifestTable.latestVersion(root) == c1)
     // the first compaction's snapshot still reads intact
     assert(ManifestTable.read(spark, root, c1, df.schema)
       .agg(count(lit(1)), sum("k"), sum("v")).head() == sig1)

@@ -20,6 +20,7 @@ import org.apache.spark.sql.streaming.Trigger
   *    composes with the stats consumers)
   *  - Complete mode replaces the live set per batch; Update is
   *    rejected loudly
+  *  - an empty first batch still records the table's schema
   */
 class Wave154Spec extends SparkSpec {
 
@@ -80,6 +81,23 @@ class Wave154Spec extends SparkSpec {
       .collect().map(_.getLong(0)).sorted.toSeq
     assert(rows == (0L until 25L).toSeq,
       s"restart must land only the new batch, got ${rows.size} rows")
+  }
+
+  test("an empty first micro-batch records schema= and reads as 0 rows") {
+    Seq(org.apache.spark.sql.streaming.OutputMode.Append(),
+        org.apache.spark.sql.streaming.OutputMode.Complete()).foreach { m =>
+      val root = Files.createTempDirectory("graft_w154_empty").resolve("t")
+      Files.createDirectories(root)
+      val sink = new graft.sources.ManifestSource().createSink(
+        spark.sqlContext, Map("path" -> root.toString), Nil, m)
+      sink.addBatch(0, spark.range(0).selectExpr("id AS k", "'x' AS s"))
+      assert(ManifestTable.latestVersion(root) == 1 &&
+        ManifestTable.filesFor(root, 1).isEmpty)
+      assert(ManifestTable.headerMeta(root, 1).get("schema")
+        .contains("k:bigint,s:string"), s"$m")
+      assert(spark.read.format("graft-manifest")
+        .option("path", root.toString).load().count() == 0, s"$m")
+    }
   }
 
   test("Complete mode replaces the live set; Update is rejected") {
