@@ -1416,15 +1416,17 @@ trait ManifestLog { self: ManifestData with ManifestMutations
       val tmp = d.resolve(s".tmp_${name(v)}_p${ProcessHandle.current().pid()}" +
         s"_t${Thread.currentThread().getId}")
       Files.write(tmp, body.getBytes("UTF-8"))
-      try {
-        Files.createLink(d.resolve(name(v)), tmp) // atomic, fails if exists
-        Files.delete(tmp)
+      val won =
+        try { Files.createLink(d.resolve(name(v)), tmp); true } // atomic, fails if exists
+        catch { case _: java.nio.file.FileAlreadyExistsException => false }
+      // once linked, v is public: nothing after the link may throw, or a
+      // caller's abort (ManifestBatchWrite.abort) would delete files v
+      // names. A leftover .tmp_ file is harmless.
+      try Files.deleteIfExists(tmp): Unit catch { case _: Exception => () }
+      if (won) {
         writeHint(root, v)
         return Some(v)
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
-          Files.delete(tmp) // lost the race — retry on the new latest
-      }
+      } // else lost the race — retry on the new latest
     }
     None // unreachable
   }

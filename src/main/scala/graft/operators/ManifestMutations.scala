@@ -371,8 +371,16 @@ trait ManifestMutations { self: ManifestLog with ManifestData
     val insLaid = restoreTransformCols(root, from, aligned)
     val insNames = stage(insLaid, root, s"rwi$from",
       statsCols, strStatsCols, dblStatsCols, decStatsCols)
-    spliceReplaceWhere(spark, root, schema, cond, insNames,
+    // a refused commit deletes only the survivors it staged itself
+    // (publishRewrite); the insert half is this call's to delete
+    try spliceReplaceWhere(spark, root, schema, cond, insNames,
       longBands, strBands, dblBands, decBands)
+    catch {
+      case e: java.util.ConcurrentModificationException =>
+        insNames.foreach(l => Files.deleteIfExists(
+          root.resolve("data").resolve(l.split('\t').head)): Unit)
+        throw e
+    }
   }
 
   /** The commit half of REPLACE WHERE, shared by the frame path above

@@ -67,12 +67,11 @@ private[graft] object ManifestReadOps {
       val st = Streaming.lateReplayStream(spark, dir)
         .select(col("event_id"), col("user_id"), col("event_type"),
           col("value"), col("ts_us"))
-      val q = st.writeStream
+      Streaming.awaitStream(spark)(st.writeStream
         .foreachBatch((b: DataFrame, id: Long) =>
           ManifestTable.commitBatch(b, root, id): Unit)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+        .start())
       ManifestTable.read(spark, root,
           ManifestTable.latestVersion(root), StructType(st.schema.fields))
         .orderBy("event_id")
@@ -93,13 +92,12 @@ private[graft] object ManifestReadOps {
       val st = Streaming.lateReplayStream(spark, dir)
         .select(col("event_id"), col("user_id"), col("event_type"),
           col("value"), col("ts_us"))
-      val q = st.writeStream.format("graft-manifest")
+      Streaming.awaitStream(spark)(st.writeStream.format("graft-manifest")
         .option("path", root.toString)
         .option("statsColumns", "event_id")
         .option("checkpointLocation", base.resolve("_ckpt").toString)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+        .start())
       ManifestTable.read(spark, root,
           ManifestTable.latestVersion(root), StructType(st.schema.fields))
         .orderBy("event_id")

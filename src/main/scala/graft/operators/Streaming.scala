@@ -3,7 +3,8 @@ package graft.operators
 import graft.{Canon, QueryGroup, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout,
+  OutputMode, StreamingQuery, Trigger}
 import java.util.concurrent.atomic.AtomicLong
 
 /** Group J (streaming) — SURVEY.md §2.J: tumbling windows, session
@@ -134,6 +135,28 @@ object Streaming extends QueryGroup {
       .withColumn("ts_t", timestamp_micros(Tables.tsUsCol(raw)))
   }
 
+  /** Start a stream, wait for it to end and return it: the one way the
+    * engine runs a stream. For the run, the session names
+    * [[LocalCheckpointFiles]] as the checkpoint file manager and holds
+    * `pins`; every key is restored afterwards. The query clones the
+    * session's confs when it starts, so the restore cannot reach it.
+    */
+  private[graft] def awaitStream(spark: SparkSession,
+      pins: (String, String)*)(start: => StreamingQuery): StreamingQuery = {
+    val held = (LocalCheckpointFiles.ConfKey ->
+      classOf[LocalCheckpointFiles].getName) +: pins
+    val prev = held.map { case (k, _) => k -> spark.conf.getOption(k) }
+    held.foreach { case (k, v) => spark.conf.set(k, v) }
+    try {
+      val q = start
+      q.awaitTermination()
+      q
+    } finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
   /** Run `df` (streaming) to completion into a memory sink, return the
     * materialized result.
     */
@@ -141,27 +164,23 @@ object Streaming extends QueryGroup {
       mode: OutputMode): DataFrame = {
     val name = s"graft_sink_${sink.incrementAndGet()}"
     // state-store parallelism sized to the replay volume: each stateful
-    // operator opens one state store PER shuffle partition per batch
-    // (delta file + commit each), a fixed ~50 ms/store cost that
-    // dominates a 100 k-row replay at 32 partitions. 4 matches the
-    // driver's 4-CPU session and halves the warm replay cost vs 8
-    // (measured: stream_stream_join 5.2 → 2.5 s, stream_dedup 2.3 →
-    // 1.9 s at sf0.1); a production continuous run sizes this to the
-    // cluster instead (the setting is pinned per-query at first start).
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, "4")
-    try {
-      val q = df.writeStream.format("memory").queryName(name)
-        .outputMode(mode).trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      // measurement hook (guide §1): per-batch duration breakdown
-      if (sys.env.contains("GRAFT_STREAM_DEBUG"))
-        q.recentProgress.foreach { p =>
-          System.err.println(s"[stream-debug] batch=${p.batchId} " +
-            s"rows=${p.numInputRows} durationMs=${p.durationMs}")
-        }
-    } finally spark.conf.set(key, prev)
+    // operator opens one state store PER shuffle partition per batch,
+    // and each store writes and renames a delta file (plus its .crc)
+    // every batch. That fixed cost is checkpoint file I/O, kept
+    // in-process by LocalCheckpointFiles (Hadoop's local file system
+    // would start a chmod/readlink process per file). 4 matches the
+    // driver's 4-CPU session; a production continuous run sizes this to
+    // the cluster instead (the setting is pinned per-query at first
+    // start).
+    val q = awaitStream(spark, "spark.sql.shuffle.partitions" -> "4")(
+      df.writeStream.format("memory").queryName(name)
+        .outputMode(mode).trigger(Trigger.AvailableNow()).start())
+    // measurement hook (guide §1): per-batch duration breakdown
+    if (sys.env.contains("GRAFT_STREAM_DEBUG"))
+      q.recentProgress.foreach { p =>
+        System.err.println(s"[stream-debug] batch=${p.batchId} " +
+          s"rows=${p.numInputRows} durationMs=${p.durationMs}")
+      }
     spark.table(name)
   }
 

@@ -11,8 +11,9 @@ import org.apache.spark.sql.functions._
   * (`publishRewrite`): a stale compaction composes with an append
   * instead of dropping it, a compaction that would clear a later
   * deletion vector aborts, a rewrite over a later scoped vector is
-  * refused, a refused rewrite deletes the files it staged, and
-  * `compact` keeps the stats coverage it rewrites.
+  * refused, a refused rewrite (a replaceWhere's insert half too)
+  * deletes the files it staged, and `compact` keeps the stats coverage
+  * it rewrites.
   */
 class RewriteConflictSpec extends SparkSpec {
 
@@ -90,6 +91,29 @@ class RewriteConflictSpec extends SparkSpec {
     assert(dataFiles(root).toSet == before)
   }
 
+  test("a replaceWhere refused by a rewrite after its snapshot deletes " +
+    "its insert files") {
+    val (root, df) = tinyTable()
+    val victim = ManifestTable.entriesFor(root, 1)
+      .filter(_.mayContain("k", 10, 19)).map(_.path)
+    assert(victim.nonEmpty)
+    // the first row the predicate sees (the staged-rows check, after
+    // replaceWhere has pinned v1) lands a rewrite of its read set
+    RewriteConflictSpec.onFirstRow.set(() =>
+      ManifestTable.commitOps(root, Nil, victim): Unit)
+    val inBand = udf(() => RewriteConflictSpec.fire()).asNondeterministic()
+    intercept[java.util.ConcurrentModificationException] {
+      ManifestTable.replaceWhereCoW(spark, root, df.schema,
+        inBand() && col("k").between(10, 19),
+        spark.range(10, 20).select(col("id").as("k"), lit(-1L).as("v")),
+        statsCols = Seq("k"), longBands = Seq(("k", 10L, 19L)))
+    }
+    assert(ManifestTable.latestVersion(root) == 2)
+    val left = dataFiles(root).filter(f => f.startsWith("rwi") ||
+      f.startsWith("rws"))
+    assert(left.isEmpty, s"the refused replaceWhere left its files: $left")
+  }
+
   test("compact keeps every entry's stats columns, __pt* included, and " +
     "a pruned read stays row-exact") {
     val root = Files.createTempDirectory("graft_rwc_stats")
@@ -110,5 +134,17 @@ class RewriteConflictSpec extends SparkSpec {
       between(("k", 30L, 60L)))
     assert(pruned.collect().toSet ==
       df.filter(col("k").between(30, 60)).collect().toSet)
+  }
+}
+
+object RewriteConflictSpec {
+  /** Runs once, on the first call of [[fire]], then resets. */
+  val onFirstRow =
+    new java.util.concurrent.atomic.AtomicReference[() => Unit](null)
+
+  def fire(): Boolean = {
+    val f = onFirstRow.getAndSet(null)
+    if (f != null) f()
+    true
   }
 }
