@@ -43,23 +43,14 @@ object Tables {
     * state of the files: inference runs a Spark job (footer reads in
     * `mergeSchemasInParallel`) on every call, while a read handed the
     * schema starts none. An entry is keyed by the path and
-    * the session's values of [[inferenceConfs]], and holds the path's
-    * [[operators.ArtifactCache.fingerprint]] (name, length and mtime of
-    * the file, or of each file listed in the directory): a rewritten
-    * file or an added part file misses and is inferred again, replacing
-    * the stale entry. Callers that arrive while a path is inferred wait
-    * for that one inference; callers of other paths do not.
+    * the session's values of [[inferenceConfs]], and is inferred again
+    * when the path's [[operators.ArtifactCache.fingerprint]] (name,
+    * length and mtime of the file, or of each file listed in the
+    * directory) changes ([[operators.PerFingerprint]]).
     */
-  def schemaOf(spark: SparkSession, path: String): StructType = {
-    val fp = operators.ArtifactCache.fingerprint(Seq(path))
-    val key = (path, inferenceConfs.map(k => spark.conf.get(k)))
-    val slot = schemas.compute(key,
-      (_, old) => if (old != null && old.fingerprint == fp) old else new Slot(fp))
-    slot.synchronized {
-      if (slot.schema == null) slot.schema = spark.read.parquet(path).schema
-      slot.schema
-    }
-  }
+  def schemaOf(spark: SparkSession, path: String): StructType =
+    schemas((path, inferenceConfs.map(k => spark.conf.get(k))), Seq(path))(
+      spark.read.parquet(path).schema)
 
   /** Every session conf that changes what parquet schema inference
     * returns: the eight `ParquetToSparkSchemaConverter(SQLConf)` reads
@@ -79,11 +70,8 @@ object Tables {
     SQLConf.PARQUET_SCHEMA_RESPECT_SUMMARIES,
     SQLConf.PARTITION_COLUMN_TYPE_INFERENCE).map(_.key)
 
-  private final class Slot(val fingerprint: String) {
-    var schema: StructType = _ // guarded by this
-  }
   private val schemas =
-    new java.util.concurrent.ConcurrentHashMap[(String, Seq[String]), Slot]()
+    new operators.PerFingerprint[(String, Seq[String]), StructType]
 
   /** Canonical epoch-µs derivation from whatever physical form the
     * fixture's `ts` column carries. The driver has shipped the events

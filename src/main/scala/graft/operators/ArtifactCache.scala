@@ -175,3 +175,28 @@ object ArtifactCache {
   private val builds =
     new java.util.concurrent.ConcurrentHashMap[Path, Object]()
 }
+
+/** In-JVM values derived from files, each computed once per state of its
+  * source files: an entry holds the sources'
+  * [[ArtifactCache.fingerprint]], so a rewritten file or an added part
+  * file misses and is computed again, replacing the stale entry. Callers
+  * that arrive while a key is computed wait for that one computation;
+  * callers of other keys do not. A computation that throws leaves no
+  * value, and the next caller computes again.
+  */
+private[graft] final class PerFingerprint[K, V <: AnyRef] {
+  private final class Slot(val fingerprint: String) {
+    var value: V = _ // guarded by this
+  }
+  private val slots = new java.util.concurrent.ConcurrentHashMap[K, Slot]()
+
+  def apply(key: K, sources: Seq[String])(compute: => V): V = {
+    val fp = ArtifactCache.fingerprint(sources)
+    val slot = slots.compute(key,
+      (_, old) => if (old != null && old.fingerprint == fp) old else new Slot(fp))
+    slot.synchronized {
+      if (slot.value == null) slot.value = compute
+      slot.value
+    }
+  }
+}

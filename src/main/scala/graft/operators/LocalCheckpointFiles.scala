@@ -68,6 +68,17 @@ object LocalCheckpointFiles {
     */
   val ConfKey = "spark.sql.streaming.checkpointFileManagerClass"
 
+  /** Make `conf` resolve `file:` paths to a [[NioLocalFileSystem]]: a
+    * fresh instance per lookup, since Hadoop's file system cache would
+    * otherwise hand back the JVM's `LocalFileSystem`, whatever the conf
+    * names. For writers that resolve their file system from a conf,
+    * such as parquet's `HadoopOutputFile`.
+    */
+  def useNioPermissions(conf: Configuration): Unit = {
+    conf.set("fs.file.impl", classOf[NioLocalFileSystem].getName)
+    conf.setBoolean("fs.file.impl.disable.cache", true)
+  }
+
   /** A scheme-less path resolves against `fs.defaultFS`. */
   private def isLocalPath(p: Path, conf: Configuration): Boolean =
     Option(p.toUri.getScheme)
@@ -77,7 +88,7 @@ object LocalCheckpointFiles {
       extends FileSystemBasedCheckpointFileManager(path, conf) {
 
     override protected val fs: FileSystem = {
-      val local = new LocalFileSystem(new NioPermissions)
+      val local = new NioLocalFileSystem
       local.setConf(conf)
       local.initialize(URI.create("file:///"), conf)
       local
@@ -97,10 +108,18 @@ object LocalCheckpointFiles {
     * bits (`rwxr-x---`, the form both APIs print), applied in-process. A
     * sticky bit has no `java.nio` form and keeps Hadoop's `chmod`.
     */
-  private class NioPermissions extends RawLocalFileSystem {
+  private[operators] class NioPermissions extends RawLocalFileSystem {
     override def setPermission(p: Path, perm: FsPermission): Unit =
       if (perm.getStickyBit) super.setPermission(p, perm)
       else Files.setPosixFilePermissions(pathToFile(p).toPath,
         PosixFilePermissions.fromString(perm.toString))
   }
 }
+
+/** Hadoop's checksummed `LocalFileSystem` over
+  * [[LocalCheckpointFiles.NioPermissions]]: the same files, `.crc`
+  * sidecars and permission bits, with no `chmod` process per file or
+  * directory it creates.
+  */
+class NioLocalFileSystem
+    extends LocalFileSystem(new LocalCheckpointFiles.NioPermissions)

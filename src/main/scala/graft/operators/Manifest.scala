@@ -1057,6 +1057,7 @@ trait ManifestLog { self: ManifestData with ManifestMutations
 
     def write(file: Path, entries: Seq[FileEntry]): Unit = {
       val conf = new org.apache.hadoop.conf.Configuration()
+      LocalCheckpointFiles.useNioPermissions(conf) // no `chmod` process
       @annotation.nowarn("cat=deprecation")
       val w = ExampleParquetWriter.builder(
           new org.apache.hadoop.fs.Path(file.toString))

@@ -36,31 +36,38 @@ object Streaming extends QueryGroup {
   private val HourUs = 3600L * 1000 * 1000
   private val GapUs = 30L * 60 * 1000 * 1000
 
-  /** events as a stream: canonical µs long + proper timestamp column.
-    * The file source needs a DIRECTORY; fixtures are read-only files, so
-    * replay from a per-sfDir temp dir (copy once, idempotent).
+  /** The directory a stream of `dir`'s events replays from: the file
+    * source needs a DIRECTORY and fixtures are files, so the events
+    * parquet is copied into an [[ArtifactCache]] root, once per state of
+    * the source. A published copy never changes, so streams of one `dir`
+    * may read it at the same time.
     */
-  private def eventStream(spark: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    val replay = Paths.get("/tmp/graft_replay",
-      dir.replaceAll("[^A-Za-z0-9.]", "_"))
-    Files.createDirectories(replay)
+  private[graft] def replayDir(dir: String): String = {
+    import java.nio.file.{Files, Paths}
+    import java.nio.file.StandardCopyOption.REPLACE_EXISTING
     val src = Paths.get(s"$dir/events.parquet")
-    if (Files.isDirectory(src)) {
-      // Spark-written fixture (e.g. a ScaleSynth dir): events.parquet
-      // is a DIRECTORY of part files — copy each; a naive copy of the
-      // directory entry would create an EMPTY replay and the stream
-      // would silently process zero rows
-      val s = Files.list(src)
-      try s.filter(p => p.getFileName.toString.endsWith(".parquet"))
-        .forEach(p => Files.copy(p, replay.resolve(p.getFileName),
-          StandardCopyOption.REPLACE_EXISTING): Unit)
-      finally s.close()
-    } else
-      Files.copy(src, replay.resolve("events.parquet"),
-        StandardCopyOption.REPLACE_EXISTING)
+    ArtifactCache.path("replay", Seq(src.toString)) { staging =>
+      val out = Files.createDirectories(Paths.get(staging))
+      if (Files.isDirectory(src)) {
+        // Spark-written fixture (e.g. a ScaleSynth dir): events.parquet
+        // is a DIRECTORY of part files — copy each; a naive copy of the
+        // directory entry would create an EMPTY replay and the stream
+        // would silently process zero rows
+        val s = Files.list(src)
+        try s.filter(p => p.getFileName.toString.endsWith(".parquet"))
+          .forEach(p => Files.copy(p, out.resolve(p.getFileName),
+            REPLACE_EXISTING): Unit)
+        finally s.close()
+      } else Files.copy(src, out.resolve("events.parquet"), REPLACE_EXISTING)
+      Files.write(out.resolve("_SUCCESS"), Array.emptyByteArray): Unit
+    }
+  }
+
+  /** events as a stream: canonical µs long + proper timestamp column. */
+  private def eventStream(spark: SparkSession, dir: String): DataFrame = {
+    val replay = replayDir(dir)
     val batchTwin = Tables.table(spark, dir, "events") // sets nanosAsLong
-    val raw = spark.readStream.schema(batchTwin.schema).parquet(replay.toString)
+    val raw = spark.readStream.schema(batchTwin.schema).parquet(replay)
     raw.withColumn("ts_us", Tables.tsUsCol(raw))
       .withColumn("ts_t", timestamp_micros(Tables.tsUsCol(raw)))
   }

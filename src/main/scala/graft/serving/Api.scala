@@ -7,6 +7,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.{Json, SparkEntry, Tables}
+import graft.operators.PerFingerprint
 
 /** Minimal HTTP JSON serving tier over the query library — the analog of
   * the reference's API service (an HTTP JSON API over Spark jobs;
@@ -16,14 +17,27 @@ import graft.{Json, SparkEntry, Tables}
   * only PARAMETERIZES a declared query (or its library form) and
   * serializes the small result — single-vehicle slices and fixed-size
   * reports — so the collect here is the response payload itself, never a
-  * corpus materialization. Pushdown does the serving-time work: the
-  * vehicle filter lands on the parquet scan (grouping-key predicates
-  * push through the aggregate), so a trace request reads one vehicle's
-  * row groups, not the fleet's.
+  * corpus materialization. The vehicle filter lands on the parquet scan
+  * (grouping-key predicates push through the aggregate), but it prunes
+  * no row group of the fixtures: each fixture `events.parquet`
+  * (sf0.001–sf0.1) is one row group holding every vehicle, so there only
+  * a trace's time window can skip data.
+  *
+  * Per-vehicle endpoints (trace, summary, trips, resample, changepoint)
+  * build their frame — table resolution and Catalyst analysis of the
+  * whole declared query — once per state of `events.parquet`
+  * ([[graft.operators.PerFingerprint]]); a request only adds its
+  * vehicle filter (and, for trace, its window, projection and order) to
+  * the held frame. Endpoints without parameters build their query per
+  * request: some hold eager `localCheckpoint`s a held frame would pin.
   *
   * JDK built-in `com.sun.net.httpserver` (public JRE API since Java 6):
   * the zero-egress build cannot resolve a web framework and does not
-  * need one to prove the serving shape. Port 0 = ephemeral (tests).
+  * need one to prove the serving shape. Port 0 = ephemeral (tests). The
+  * server writes a reply's headers and body as two writes, so with
+  * Nagle's algorithm on a small body waits for the client's delayed ACK
+  * of the headers (about 40 ms on a kept-alive connection); [[start]]
+  * turns it off (`sun.net.httpserver.nodelay`).
   *
   * Concurrency: the server's dispatcher thread only accepts connections;
   * handlers run on a pool of `defaultParallelism` threads of the session
@@ -67,9 +81,13 @@ object Api {
     * `events_trace` harness query: one vehicle, half-open time window.
     */
   def trace(spark: SparkSession, dir: String, userId: Long,
+      fromUs: Option[Long], toUs: Option[Long]): DataFrame =
+    traceOf(Tables.events(spark, dir), userId, fromUs, toUs)
+
+  /** [[trace]] over an already built `events` frame. */
+  private def traceOf(events: DataFrame, userId: Long,
       fromUs: Option[Long], toUs: Option[Long]): DataFrame = {
-    val base = Tables.events(spark, dir)
-      .filter(col("user_id") === userId)
+    val base = events.filter(col("user_id") === userId)
     val lo = fromUs.map(f => col("ts_us") >= f).getOrElse(lit(true))
     val hi = toUs.map(t => col("ts_us") < t).getOrElse(lit(true))
     base.filter(lo && hi)
@@ -104,10 +122,26 @@ object Api {
   private val VehiclePath =
     "^/vehicles/(-?\\d+)/(trace|summary|changepoint|resample|trips)$".r
 
+  /** The declared query each per-vehicle endpoint but trace filters. The
+    * id filter is a grouping or window partition key of each, so it
+    * pushes below their aggregates and exchanges to the scan.
+    */
+  private val VehicleQueries = Map(
+    "summary" -> "events_user_summary",
+    "trips" -> "events_trip_stats",
+    "resample" -> "events_resample_lerp",
+    "changepoint" -> "events_changepoint")
+
+  private val NoDelay = "sun.net.httpserver.nodelay"
+
   /** Start the API over one corpus dir; returns the running server
     * (ephemeral port when `port` = 0 — read it off `getAddress`).
     */
   def start(spark: SparkSession, dir: String, port: Int = 0): HttpServer = {
+    // the JDK reads this once, when the JVM creates its first server, so
+    // it must be set before that; a value the JVM was started with wins
+    if (System.getProperty(NoDelay) == null)
+      System.setProperty(NoDelay, "true")
     val server = HttpServer.create(
       new java.net.InetSocketAddress("127.0.0.1", port), 0)
     server.setExecutor(handlerPool(spark.sparkContext.defaultParallelism))
@@ -130,6 +164,14 @@ object Api {
         .map(v => v.toLongOption.getOrElse(
           throw new BadParam(s"$name=$v is not an integer")))
 
+    // each per-vehicle endpoint's frame, analyzed once per state of the
+    // events table
+    val events = Seq(s"$dir/events.parquet")
+    val frames = new PerFingerprint[String, DataFrame]
+    def frame(kind: String): DataFrame = frames(kind, events)(
+      if (kind == "trace") Tables.events(spark, dir)
+      else SparkEntry.queries(VehicleQueries(kind))(spark, dir))
+
     server.createContext("/", (x: HttpExchange) => {
       try {
         val path = x.getRequestURI.getPath
@@ -149,15 +191,13 @@ object Api {
             // ANN index health: occupancy/skew row for the serving index
             respond(x, 200, toJson(
               SparkEntry.queries("vec_ivf_stats")(spark, dir)))
-          case VehiclePath(id, "summary") =>
-            // grouping-key predicate pushes below the aggregate to the scan
-            val df = SparkEntry.queries("events_user_summary")(spark, dir)
-              .filter(col("user_id") === id.toLong)
-            respond(x, 200, toJson(df))
           case VehiclePath(id, "trace") =>
+            val (from, to) = (param(x, "from_us"), param(x, "to_us"))
+            respond(x, 200, toJson(traceOf(frame("trace"), id.toLong,
+              from, to)))
+          case VehiclePath(id, kind) =>
             respond(x, 200, toJson(
-              trace(spark, dir, id.toLong,
-                param(x, "from_us"), param(x, "to_us"))))
+              frame(kind).filter(col("user_id") === id.toLong)))
           case "/stats/od-matrix" =>
             // zone-to-zone trip flows (≤ zone² rows by construction)
             respond(x, 200, toJson(
@@ -166,12 +206,6 @@ object Api {
             // density clusters over the synthetic grid (DBSCAN-lite)
             respond(x, 200, toJson(
               SparkEntry.queries("geo_cluster_cells")(spark, dir)))
-          case VehiclePath(id, "trips") =>
-            // per-vehicle trip log; the grouping-key filter prunes the
-            // window exchange input like /resample and /changepoint
-            respond(x, 200, toJson(
-              SparkEntry.queries("events_trip_stats")(spark, dir)
-                .filter(col("user_id") === id.toLong)))
           case "/stats/movers" =>
             // day-over-day top movers (round-6): ≤10 rows by construction
             respond(x, 200, toJson(
@@ -235,7 +269,7 @@ object Api {
             // request touches only the files whose bounds intersect —
             // the serving-tier face of source_manifest_timetravel /
             // source_manifest_pruned
-            val orders = Tables.table(spark, dir, "orders")
+            val ordersSchema = Tables.schemaOf(spark, s"$dir/orders.parquet")
             val root = graft.operators.ManifestOps.cowRoot(spark, dir)
             val latest = graft.operators.ManifestTable.latestVersion(root)
             // ?asof=<epoch millis> resolves through the ts= headers
@@ -258,27 +292,15 @@ object Api {
               val df = keys match {
                 case (Some(lo), Some(hi)) =>
                   graft.operators.ManifestTable.readPruned(spark, root,
-                    v.toInt, orders.schema, "o_orderkey", lo, hi)
+                    v.toInt, ordersSchema, "o_orderkey", lo, hi)
                 case _ =>
                   graft.operators.ManifestTable.read(spark, root, v.toInt,
-                    orders.schema)
+                    ordersSchema)
               }
               respond(x, 200,
                 s"""{"version":$v,"latest":$latest,"data":""" +
                   toJson(df.orderBy("o_orderkey"), limit = 1000) + "}")
             }
-          case VehiclePath(id, "resample") =>
-            // the daily lerp-resampled series for one vehicle; the
-            // user filter prunes below the window exchange
-            respond(x, 200, toJson(
-              SparkEntry.queries("events_resample_lerp")(spark, dir)
-                .filter(col("user_id") === id.toLong)))
-          case VehiclePath(id, "changepoint") =>
-            // per-vehicle CUSUM change point; the user filter prunes
-            // the window input below the exchanges like summary's
-            respond(x, 200, toJson(
-              SparkEntry.queries("events_changepoint")(spark, dir)
-                .filter(col("user_id") === id.toLong)))
           case _ =>
             respond(x, 404, s"""{"error":"not found","path":${Json.str(path)}}""")
         }

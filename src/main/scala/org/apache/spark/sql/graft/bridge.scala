@@ -215,6 +215,9 @@ object bridge {
       .ParquetUtils.prepareWrite(cs.sessionState.conf, job, schema,
         new org.apache.spark.sql.execution.datasources.parquet
           .ParquetOptions(Map.empty[String, String], cs.sessionState.conf))
+    // a local file is created without a `chmod` process
+    _root_.graft.operators.LocalCheckpointFiles.useNioPermissions(
+      job.getConfiguration)
     new ParquetWriteKit(factory, schema,
       new org.apache.spark.util.SerializableConfiguration(
         job.getConfiguration))

@@ -72,6 +72,32 @@ class CheckpointFilesSpec extends SparkSpec {
         .mapValues(_.size).toMap)
   }
 
+  test("manifest data and checkpoint-segment writes start no Hadoop shell process") {
+    import org.apache.spark.sql.functions.col
+    val root = Files.createTempDirectory("graft_ckptfiles_mf").resolve("t")
+    val df = spark.range(0, 400).selectExpr("id AS k", "id * 3 AS v")
+    val starts = processStarts {
+      new ProcessBuilder("true").start().waitFor() // the recording works
+      df.repartition(4).write.format("graft-manifest")
+        .option("path", root.toString).option("statsColumns", "k")
+        .mode("append").save()
+      operators.ManifestTable.deleteWhereCoW(spark, root, df.schema,
+        col("k") < 100, longBands = Seq(("k", 0L, 99L)))
+    }
+    assert(operators.ManifestTable.read(spark, root,
+      operators.ManifestTable.latestVersion(root), df.schema).count() == 300)
+    val segs = Files.list(root.resolve("_manifests"))
+    try assert(segs.iterator.asScala.exists(_.getFileName.toString
+      .endsWith(".parquet")), "no checkpoint segment was written")
+    finally segs.close()
+    assert(starts.exists(_._1.startsWith("true")),
+      s"the recording missed a process start: $starts")
+    val shell = starts.filter(_._2.exists(
+      _.startsWith("org.apache.hadoop.util.Shell")))
+    assert(shell.isEmpty, s"${shell.size} Hadoop shell processes: " +
+      shell.map(_._2.find(_.startsWith("graft.")).getOrElse("?")))
+  }
+
   test("a refused no-overwrite write throws and leaves no temp file or .crc") {
     val d = dir()
     val fm = new LocalCheckpointFiles(new Path(d.toUri), conf)

@@ -20,9 +20,11 @@ class ServingSpec extends SparkSpec {
   }
   private val client = HttpClient.newHttpClient()
 
-  private def get(path: String): (Int, String) = {
+  private def get(path: String): (Int, String) = getAt(base, path)
+
+  private def getAt(at: String, path: String): (Int, String) = {
     val r = client.send(
-      HttpRequest.newBuilder(URI.create(base + path)).GET().build(),
+      HttpRequest.newBuilder(URI.create(at + path)).GET().build(),
       HttpResponse.BodyHandlers.ofString())
     (r.statusCode(), r.body())
   }
@@ -226,6 +228,60 @@ class ServingSpec extends SparkSpec {
       "non-numeric vehicle id is not a route")
   }
 
+  test("small replies on a kept-alive connection do not wait for a delayed ACK") {
+    // a route that runs no Spark job: the time is the server's alone
+    val url = URI.create(base + "/vehicles/abc/trace").toURL
+    val ms = (1 to 20).map { _ =>
+      val t0 = System.nanoTime()
+      val c = url.openConnection().asInstanceOf[java.net.HttpURLConnection]
+      assert(c.getResponseCode == 404)
+      val in = c.getErrorStream
+      try in.readAllBytes() finally in.close() // read to the end: reuse
+      (System.nanoTime() - t0) / 1e6
+    }.sorted
+    assert(ms(ms.size / 2) < 20, s"median ${ms(ms.size / 2)} ms: $ms")
+  }
+
+  test("per-vehicle replies follow a rewritten events table") {
+    import java.nio.file.{Files, Paths, StandardCopyOption}
+    import java.nio.file.attribute.FileTime
+    val dir = Files.createTempDirectory("graft_serving")
+    val events = dir.resolve("events.parquet")
+    Files.copy(Paths.get(sfDir, "events.parquet"), events)
+    val paths = Seq("/vehicles/1/summary", "/vehicles/1/trips",
+      "/vehicles/1/trace")
+    def direct(): Seq[(Int, String)] = {
+      val d = dir.toString
+      Seq(q("events_user_summary", d).filter(col("user_id") === 1L),
+        q("events_trip_stats", d).filter(col("user_id") === 1L),
+        serving.Api.trace(spark, d, 1L, None, None))
+        .map(df => 200 -> serving.Api.toJson(df))
+    }
+    val api = serving.Api.start(spark, dir.toString, port = 0)
+    try {
+      val at = s"http://127.0.0.1:${api.getAddress.getPort}"
+      val before = paths.map(getAt(at, _))
+      assert(before == direct())
+      // vehicle 1 loses every other event and the rest change value
+      val out = dir.resolve("rewrite")
+      Tables.table(spark, dir.toString, "events")
+        .filter(col("user_id") =!= 1L || col("event_id") % 2 === 0)
+        .withColumn("value", when(col("user_id") === 1L, col("value") + 1)
+          .otherwise(col("value")))
+        .coalesce(1).write.parquet(out.toString)
+      val part = Files.list(out)
+      try Files.move(part.iterator.asScala
+          .find(_.toString.endsWith(".parquet")).get, events,
+        StandardCopyOption.REPLACE_EXISTING)
+      finally part.close()
+      Files.setLastModifiedTime(events,
+        FileTime.fromMillis(System.currentTimeMillis() + 60000))
+      val after = paths.map(getAt(at, _))
+      assert(after == direct())
+      after.zip(before).foreach { case (a, b) => assert(a != b, a) }
+    } finally api.stop(0)
+  }
+
   test("concurrent requests get the serial replies from a bounded pool of daemon handlers") {
     val pool = server.getExecutor
     assert(pool != null, "handlers must run off the dispatcher thread")
@@ -233,7 +289,8 @@ class ServingSpec extends SparkSpec {
       spark.sparkContext.defaultParallelism)
     val paths = Seq("/vehicles", "/vehicles/1/trace", "/vehicles/2/summary",
       "/vehicles/3/trips", "/vehicles/4/trace", "/vehicles/5/summary",
-      "/vehicles/6/trips", "/table/orders?from_key=1&to_key=3000",
+      "/vehicles/6/trips", "/vehicles/7/resample", "/vehicles/8/changepoint",
+      "/table/orders?from_key=1&to_key=3000",
       "/table/orders?from_key=2000&to_key=9000")
     val serial = paths.map(p => p -> get(p)).toMap
     serial.foreach { case (p, (c, b)) => assert(c == 200, s"$p: $b") }

@@ -496,4 +496,31 @@ class StreamingSpec extends SparkSpec {
       =!= 0).count()
     assert(misaligned == 0)
   }
+
+  test("the event replay is staged once per state of the source") {
+    import java.nio.file.{Files, Paths}
+    import java.nio.file.attribute.{BasicFileAttributes, FileTime}
+    val dir = Files.createTempDirectory("graft_replay_src")
+    val src = dir.resolve("events.parquet")
+    Files.copy(Paths.get(sfDir, "events.parquet"), src)
+    val first = operators.Streaming.replayDir(dir.toString)
+    val copy = Paths.get(first, "events.parquet")
+    val stamp = Files.getLastModifiedTime(copy)
+    def inode = Files.readAttributes(copy, classOf[BasicFileAttributes])
+      .fileKey()
+    val key = inode
+    Thread.sleep(20) // a rewrite in place would get a later mtime
+    assert(operators.Streaming.replayDir(dir.toString) == first)
+    assert(Files.getLastModifiedTime(copy) == stamp)
+    assert(inode == key, "an unchanged source must not rewrite the replay")
+    // a changed source (same bytes, new mtime) replays from a new copy
+    Files.setLastModifiedTime(src, FileTime.fromMillis(
+      Files.getLastModifiedTime(src).toMillis + 60000))
+    val second = operators.Streaming.replayDir(dir.toString)
+    assert(second != first)
+    assert(Files.getLastModifiedTime(copy) == stamp,
+      "the old replay stays as it was for streams still reading it")
+    assert(Files.readAllBytes(Paths.get(second, "events.parquet")).sameElements(
+      Files.readAllBytes(src)))
+  }
 }
